@@ -271,9 +271,10 @@ def _failing_pdf_extractor(blobs) -> "pd.Series":  # noqa: F821
 )
 def ingest_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same cold-build → mutate → delta-refresh as ingest_roundtrip, then
-    compact the fragmented store (the refresh appends per-delta files)
-    with a small target size so the rewrite genuinely restructures
-    (multiple range-disjoint output files), and return the table READ
+    compact the store with a target size well under its ~85 KB (the
+    refresh writes no more files than it replaces, so the store is not
+    fragmented) so the rewrite genuinely restructures it (multiple
+    range-disjoint output files), and return the table READ
     BACK THROUGH load_store — the row the driver hashes has the
     compacted layout in its lineage, so a compaction that drops,
     duplicates, or reorders rows fails the oracle, not just a pytest.
@@ -307,7 +308,7 @@ def ingest_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
     _mutate_corpus_v2(root, docs)
     build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
-    n_files = compact_store(spark, store, target_file_bytes=96 * 1024)
+    n_files = compact_store(spark, store, target_file_bytes=32 * 1024)
     if n_files < 2:
         raise RuntimeError(
             f"compaction wrote {n_files} file(s); target_file_bytes too"

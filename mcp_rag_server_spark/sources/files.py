@@ -15,21 +15,23 @@ Reference parity:
     container ships no PDF library — the Spark-side plumbing (binary
     column in, text column out, Arrow-batched) is real either way.
 
-Scale shape: discovery is Spark's distributed file listing (the
-``binaryFile`` source with ``pathGlobFilter``, one listing job per
-extension, unioned). Metadata-only scans prune the ``content`` column at
+Scale shape: discovery is Spark's distributed file listing — ONE
+``binaryFile`` read whose ``pathGlobFilter`` is the Hadoop alternation
+``*.{ext1,ext2,...}``, so the tree is listed once whatever the size of
+the allow-list. Metadata-only scans prune the ``content`` column at
 ReadSchema level, so "list 100 TB" reads no file bodies; the content
 pass happens once, after every path-level predicate is applied to the
 listing. Excluded-folder and dotfile predicates are path regexes —
-evaluated per file entry, never requiring IO.
+evaluated per file entry, never requiring IO. A refresh reads the
+bodies of just its changed files with :func:`read_files`, which hands
+their paths to the reader itself.
 """
 
 from __future__ import annotations
 
 import posixpath
 import re
-from collections.abc import Callable, Iterator
-from functools import reduce
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +50,16 @@ DEFAULT_EXCLUDED_FOLDERS: tuple[str, ...] = (
     "node_modules", "dist", "build", ".git", "target", "bin", "obj",
     ".cache", "coverage", ".nyc_output",
 )
+
+
+#: Hadoop glob metacharacters. An allowed extension is spliced into the
+#: listing's ``*.{a,b}`` filter, so it may contain none of them (the
+#: comma separates alternatives).
+_EXT_GLOB_META = re.compile(r"[\\*?\[\]{},]")
+
+#: Characters that make the reader glob-expand an explicit path
+#: (``SparkHadoopUtil.isGlobPath``); :func:`read_files` escapes them.
+_PATH_GLOB_META = re.compile(r"([\\*?\[\]{}])")
 
 
 def _glob_to_regex(pattern: str) -> str:
@@ -92,40 +104,82 @@ def discover_files(
     """Reference ``discoverFiles`` (src/indexer.ts:350-387) as a Spark
     listing job → DataFrame(rel_path, file_size[, content]).
 
-    One ``binaryFile`` read per allowed extension (``pathGlobFilter`` is
-    applied during listing, the Spark analog of fast-glob's pattern
-    expansion), unioned, then:
+    One ``binaryFile`` read whose ``pathGlobFilter`` alternates the
+    allowed extensions (applied during listing, the Spark analog of
+    fast-glob's pattern expansion; a case-sensitive suffix match on the
+    file name), then:
       - dotfile/dot-dir exclusion (fast-glob ``dot: false``),
       - excluded-folder regexes (src/indexer.ts:354-360),
       - size-0 skip (src/indexer.ts:374).
     With ``with_content=False`` the ``content`` column is pruned from
-    ReadSchema, so discovery never reads file bodies.
+    ReadSchema, so discovery never reads file bodies. An empty allow-list
+    matches nothing; an extension holding a glob metacharacter raises
+    ``ValueError``.
     """
+    for ext in allowed_ext:
+        if _EXT_GLOB_META.search(ext):
+            raise ValueError(
+                f"allowed extension {ext!r} contains a glob metacharacter"
+            )
+    if not allowed_ext:
+        return _empty_listing(spark, with_content)
     # A (re)scan must observe the current filesystem: Spark's
     # FileStatusCache would otherwise serve a stale listing for a root we
     # listed earlier in the session (the refresh path relies on seeing
     # adds/deletes — the reference re-walks the tree per build,
     # src/indexer.ts:415).
     spark.catalog.refreshByPath(root)
-    reads = [
+    df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"*.{ext}")
+        .option("pathGlobFilter", "*.{" + ",".join(allowed_ext) + "}")
         .option("recursiveFileLookup", "true")
         .load(root)
-        for ext in allowed_ext
-    ]
-    df = reduce(DataFrame.unionByName, reads)
-    rel = rel_path_col(root)
-    df = df.select(
-        rel.alias("rel_path"),
-        F.col("length").alias("file_size"),
-        *(["content"] if with_content else []),
     )
+    df = _listing_columns(df, root, with_content)
     # fast-glob dot:false — no path segment may start with ".".
     df = df.filter(~F.col("rel_path").rlike(r"(^|/)\.[^/]"))
     for folder in excluded_folders:
         df = df.filter(~F.col("rel_path").rlike(_glob_to_regex(folder)))
     return df.filter(F.col("file_size") > 0)
+
+
+def read_files(
+    spark: SparkSession, root: str, rel_paths: Iterable[str]
+) -> DataFrame:
+    """(rel_path, file_size, content) of exactly ``rel_paths`` under
+    ``root`` — the body read of a refresh, which already knows from a
+    metadata-only listing which files changed.
+
+    ``binaryFile`` pushes no path predicate into its content read, so a
+    filter over :func:`discover_files` would still read every body; the
+    paths go to the reader itself instead. The reader glob-expands an
+    explicit path, so glob metacharacters in a name are escaped."""
+    paths = [
+        _PATH_GLOB_META.sub(r"\\\1", posixpath.join(root, p)) for p in rel_paths
+    ]
+    if not paths:
+        return _empty_listing(spark, with_content=True)
+    df = spark.read.format("binaryFile").load(paths)
+    return _listing_columns(df, root, with_content=True).filter(
+        F.col("file_size") > 0
+    )
+
+
+def _listing_columns(df: DataFrame, root: str, with_content: bool) -> DataFrame:
+    """``binaryFile`` rows → (rel_path, file_size[, content])."""
+    return df.select(
+        rel_path_col(root).alias("rel_path"),
+        F.col("length").alias("file_size"),
+        *(["content"] if with_content else []),
+    )
+
+
+def _empty_listing(spark: SparkSession, with_content: bool) -> DataFrame:
+    return spark.createDataFrame(
+        [],
+        "rel_path string, file_size long"
+        + (", content binary" if with_content else ""),
+    )
 
 
 def is_pdf_col(path_col: str = "rel_path") -> F.Column:

@@ -28,21 +28,29 @@ Scale shape: chunking is ``posexplode`` over a pure SQL chunk expression
 global ``row_number`` into per-file offsets (functions/ids.py): the only
 ordered computation is a running sum over one row per FILE, so no task
 ever sorts the full chunk set; the ids stay bit-identical to
-``row_number() over (order by rel_path, chunk)`` for golden parity. The
-refresh path touches only the changed-file delta: two path-key joins
-(J1 anti, J2 outer) against a listing that read no file bodies.
+``row_number() over (order by rel_path, chunk)`` for golden parity.
+
+The refresh costs what the delta costs: one metadata-only listing is
+joined with the store's per-path ``file_size`` and only the delta keys
+(path + deleted flag) come to the driver. An empty delta writes
+nothing. Otherwise only the changed and new files' bodies are read, and
+survivors + new chunks are rewritten into no more parquet files than
+the store they replace (``content_hash=True`` is the exception on
+reads: its key is a hash of every body, so that mode reads each body
+once to list).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mcp_rag_server_spark.functions.ids import dense_chunk_ids
@@ -52,6 +60,7 @@ from mcp_rag_server_spark.sources.files import (
     DEFAULT_EXCLUDED_FOLDERS,
     decode_text,
     discover_files,
+    read_files,
 )
 
 STORE_VERSION = 1
@@ -197,23 +206,26 @@ def load_store(
     return spark.read.parquet(data_dir)
 
 
-def _discover_texts(
-    spark: SparkSession,
-    root: str,
+def _texts(
+    files: DataFrame,
     params: IngestParams,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
-    files = discover_files(
-        spark,
-        root,
-        allowed_ext=params.allowed_ext,
-        excluded_folders=params.excluded_folders,
-        with_content=True,
-    )
+    """(rel_path, file_size, content) → decoded texts, plus the
+    ``content_sha`` change key when ``params.content_hash``."""
     texts = decode_text(files, pdf_extractor=pdf_extractor)
     if params.content_hash:
         texts = texts.withColumn("content_sha", F.sha2(F.col("text"), 256))
     return texts
+
+
+def _chunks(texts: DataFrame, params: IngestParams) -> DataFrame:
+    chunks = chunk_files(texts, params)
+    if params.content_hash:
+        # content_sha rides along in the store: it IS the change-detection
+        # key on the next refresh.
+        chunks = chunks.join(texts.select("rel_path", "content_sha"), "rel_path")
+    return chunks
 
 
 def cold_build(
@@ -224,13 +236,10 @@ def cold_build(
 ) -> DataFrame:
     """Full rebuild (reference cold path, indexer.ts:257-316):
     discover → read/extract → chunk → assign ids."""
-    texts = _discover_texts(spark, root, params, pdf_extractor)
-    chunks = chunk_files(texts, params)
-    if params.content_hash:
-        # content_sha rides along in the store: it IS the change-detection
-        # key on the next refresh.
-        chunks = chunks.join(texts.select("rel_path", "content_sha"), "rel_path")
-    return _assign_ids(chunks)
+    files = discover_files(
+        spark, root, params.allowed_ext, params.excluded_folders, with_content=True
+    )
+    return _assign_ids(_chunks(_texts(files, params, pdf_extractor), params))
 
 
 def incremental_update(
@@ -240,74 +249,103 @@ def incremental_update(
     params: IngestParams = IngestParams(),
     pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
 ) -> DataFrame:
-    """Reference ``incrementalUpdate`` (indexer.ts:413-511) as delta joins:
+    """Reference ``incrementalUpdate`` (indexer.ts:413-511) as one delta
+    step plus a read of only the delta's bodies:
 
-    J1 (deleted):  old chunk paths LEFT ANTI current listing → dropped
-                   (indexer.ts:431-443).
+    J1 (deleted):  old chunk paths absent from the current listing →
+                   dropped (indexer.ts:431-443).
     J2 (changed):  current listing vs old per-path file_size; new path or
                    size mismatch → re-ingest that file (indexer.ts:446-462);
                    with ``content_hash`` the key is sha2(text) instead,
                    catching same-size edits the reference misses
                    (indexer.ts:410-411).
 
-    New chunk ids continue from max(old id)+1 (getMaxId()+1,
+    New chunk ids continue from max(surviving id)+1 (getMaxId()+1,
     indexer.ts:393-400), ordered by (rel_path, chunk) for determinism.
     Only changed files are re-read/re-chunked; survivors pass through
     untouched — at scale this is a MERGE keyed on rel_path.
-    """
-    texts = _discover_texts(spark, root, params, pdf_extractor)
-    deleted_paths, delta_paths = _delta_paths(old_chunks, texts, params)
 
-    survivors = old_chunks.join(
-        deleted_paths.unionByName(delta_paths), "rel_path", "left_anti"
+    Accepted costs:
+      - a PDF whose extraction fails has no store rows, so every refresh
+        sees it as new and re-tries the extraction (the store contents
+        stay unchanged);
+      - ``content_hash=True`` still reads every body once, because its
+        change key is a hash of the body.
+    """
+    delta = _delta_keys(spark, old_chunks, root, params, pdf_extractor)
+    survivors, new_chunks = _apply_delta(
+        spark, old_chunks, root, delta, params, pdf_extractor
     )
-    new_chunks = _build_delta_chunks(survivors, texts, delta_paths, params)
     return survivors.select(*new_chunks.columns).unionByName(new_chunks)
 
 
-def _delta_paths(
-    old_chunks: DataFrame, texts: DataFrame, params: IngestParams
-) -> tuple[DataFrame, DataFrame]:
-    """(deleted_paths, changed_or_new_paths) — the J1/J2 delta keys."""
-    change_key = "content_sha" if params.content_hash else "file_size"
-    old_by_path = old_chunks.groupBy("rel_path").agg(
-        F.first(change_key).alias(f"old_{change_key}")
-    )
-    listing = texts.select("rel_path", change_key).distinct()
-
-    # J1: chunks of files that no longer exist are dropped.
-    deleted = old_by_path.select("rel_path").join(
-        listing.select("rel_path"), "rel_path", "left_anti"
-    )
-    # J2: new files + changed files (key mismatch) are re-ingested.
-    delta = (
-        listing.join(old_by_path, "rel_path", "left_outer")
-        .filter(
-            F.col(f"old_{change_key}").isNull()
-            | (F.col(change_key) != F.col(f"old_{change_key}"))
-        )
-        .select("rel_path")
-    )
-    return deleted, delta
-
-
-def _build_delta_chunks(
-    survivors: DataFrame,
-    texts: DataFrame,
-    delta_paths: DataFrame,
+def _delta_keys(
+    spark: SparkSession,
+    old_chunks: DataFrame,
+    root: str,
     params: IngestParams,
-) -> DataFrame:
-    """Chunk + id-assign the changed/new files; ids continue from
-    max(surviving id)+1 (getMaxId()+1, indexer.ts:393-400)."""
-    delta_texts = texts.join(delta_paths, "rel_path", "left_semi")
-    delta_chunks = chunk_files(delta_texts, params)
+    pdf_extractor: Callable[[pd.Series], pd.Series] | None,
+) -> list[Row]:
+    """The J1/J2 delta as driver-side rows (rel_path, deleted[, bucket]):
+    the current listing full-outer-joined with the store's per-path
+    change key, in one job that reads no file bodies (except under
+    ``content_hash``, whose key is a hash of every body)."""
+    listing = discover_files(
+        spark,
+        root,
+        params.allowed_ext,
+        params.excluded_folders,
+        with_content=params.content_hash,
+    )
+    key = "file_size"
     if params.content_hash:
-        delta_chunks = delta_chunks.join(
-            delta_texts.select("rel_path", "content_sha"), "rel_path"
-        )
+        key = "content_sha"
+        listing = _texts(listing, params, pdf_extractor)
+    old_by_path = old_chunks.groupBy("rel_path").agg(
+        F.first(key).alias("old_key")
+    )
+    bucket = (
+        [_bucket_col(params.n_buckets).alias("bucket")]
+        if params.n_buckets > 0
+        else []
+    )
+    return (
+        listing.select("rel_path", F.col(key).alias("new_key"))
+        .join(old_by_path, "rel_path", "full_outer")
+        .filter(~F.col("new_key").eqNullSafe(F.col("old_key")))
+        .select("rel_path", F.col("new_key").isNull().alias("deleted"), *bucket)
+        .collect()
+    )
+
+
+def _apply_delta(
+    spark: SparkSession,
+    old_chunks: DataFrame,
+    root: str,
+    delta: list[Row],
+    params: IngestParams,
+    pdf_extractor: Callable[[pd.Series], pd.Series] | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(survivors, new_chunks): the old chunks of paths outside the
+    delta, and the chunks of the changed/new files — whose bodies alone
+    are read — with ids from max(surviving id)+1 (getMaxId()+1,
+    indexer.ts:393-400)."""
+    survivors = old_chunks.filter(
+        ~F.col("rel_path").isin([r["rel_path"] for r in delta])
+    )
+    changed = [r["rel_path"] for r in delta if not r["deleted"]]
+    texts = _texts(read_files(spark, root, changed), params, pdf_extractor)
     max_id = survivors.agg(F.max("id")).first()[0]
     next_id = (max_id + 1) if max_id is not None else 0
-    return _assign_ids(delta_chunks, start_id=next_id)
+    return survivors, _assign_ids(_chunks(texts, params), start_id=next_id)
+
+
+def _parquet_file_count(data_dir: str) -> int:
+    return sum(
+        f.endswith(".parquet")
+        for _, _, files in os.walk(data_dir)
+        for f in files
+    )
 
 
 def build(
@@ -320,78 +358,75 @@ def build(
     """Reference ``Indexer.build`` (indexer.ts:226-317): warm-start from a
     compatible store and refresh incrementally, else cold rebuild; then
     persist. Returns the current chunks DataFrame (re-read from the
-    store, so callers never depend on pre-write lineage)."""
-    import shutil
-
+    store, so callers never depend on pre-write lineage). A warm start
+    whose delta is empty returns the store reader and writes nothing."""
     cur_dir = os.path.join(store_path, "chunks")
     old = load_store(spark, store_path, params)
     if old is None:
         chunks = cold_build(spark, root, params, pdf_extractor=pdf_extractor)
         save_store(chunks, store_path, params)
-    elif params.n_buckets > 0:
-        _refresh_buckets(spark, old, root, store_path, params, pdf_extractor)
     else:
-        chunks = incremental_update(
-            spark, old, root, params, pdf_extractor=pdf_extractor
+        delta = _delta_keys(spark, old, root, params, pdf_extractor)
+        if not delta:
+            return old.drop("bucket")
+        survivors, new_chunks = _apply_delta(
+            spark, old, root, delta, params, pdf_extractor
         )
-        # The refresh reads the parquet dir it is about to replace, so
-        # write to a sibling dir first and swap — never collect() the
-        # table through the driver (it may be 100 TB).
-        next_dir = cur_dir + ".next"
-        chunks.write.mode("overwrite").parquet(next_dir)
-        shutil.rmtree(cur_dir, ignore_errors=True)
-        os.rename(next_dir, cur_dir)
-        with open(_meta_path(store_path), "w", encoding="utf-8") as f:
-            json.dump(_meta_dict(params), f)
+        if params.n_buckets > 0:
+            _refresh_buckets(store_path, survivors, new_chunks, delta, params)
+        else:
+            _refresh_flat(store_path, survivors, new_chunks, params)
     # The swap replaced files under a path Spark may have listed; drop the
     # stale listing before handing back a reader.
     spark.catalog.refreshByPath(cur_dir)
-    out = spark.read.parquet(cur_dir)
-    return out.drop("bucket") if params.n_buckets > 0 else out
+    return spark.read.parquet(cur_dir).drop("bucket")
+
+
+def _refresh_flat(
+    store_path: str,
+    survivors: DataFrame,
+    new_chunks: DataFrame,
+    params: IngestParams,
+) -> None:
+    """Rewrite the flat store as survivors ∪ new chunks, in no more
+    parquet files than the store being replaced (each file carries a
+    fixed footer/schema overhead, so a refresh must not fragment it)."""
+    cur_dir = os.path.join(store_path, "chunks")
+    chunks = survivors.select(*new_chunks.columns).unionByName(new_chunks)
+    # The refresh reads the parquet dir it is about to replace, so
+    # write to a sibling dir first and swap — never collect() the
+    # table through the driver (it may be 100 TB).
+    next_dir = cur_dir + ".next"
+    chunks.coalesce(max(1, _parquet_file_count(cur_dir))).write.mode(
+        "overwrite"
+    ).parquet(next_dir)
+    shutil.rmtree(cur_dir, ignore_errors=True)
+    os.rename(next_dir, cur_dir)
+    with open(_meta_path(store_path), "w", encoding="utf-8") as f:
+        json.dump(_meta_dict(params), f)
 
 
 def _refresh_buckets(
-    spark: SparkSession,
-    old: DataFrame,
-    root: str,
     store_path: str,
+    survivors: DataFrame,
+    new_chunks: DataFrame,
+    delta: list[Row],
     params: IngestParams,
-    pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> None:
     """Delta-bucket refresh: rewrite ONLY the partition dirs whose paths
-    changed. A small delta against a 100 TB store touches a handful of
-    ``bucket=k`` directories; everything else is untouched bytes on
-    disk — no read, no shuffle, no rewrite (verified by mtime in
-    tests/test_ingest.py)."""
-    import shutil
-
-    texts = _discover_texts(spark, root, params, pdf_extractor)
-    deleted_paths, delta_paths = _delta_paths(old, texts, params)
-    affected_paths = deleted_paths.unionByName(delta_paths)
-    affected = [
-        r["b"]
-        for r in affected_paths.select(
-            _bucket_col(params.n_buckets).alias("b")
-        )
-        .distinct()
-        .collect()
-    ]
-    if not affected:
-        return
-    # Survivors *within affected buckets only* + re-ingested delta chunks;
-    # ids continue past the GLOBAL max so they never collide with ids in
-    # untouched buckets.
-    surv_aff = old.filter(F.col("bucket").isin(affected)).join(
-        affected_paths, "rel_path", "left_anti"
-    )
-    # Ids continue from the max over GLOBAL survivors — the same rule as
-    # the flat incremental path, so both layouts produce identical ids.
-    global_survivors = old.join(affected_paths, "rel_path", "left_anti")
-    new_chunks = _build_delta_chunks(global_survivors, texts, delta_paths, params)
+    changed, one parquet file per bucket. A small delta against a 100 TB
+    store touches a handful of ``bucket=k`` directories; everything else
+    is untouched bytes on disk — no read, no shuffle, no rewrite
+    (verified by mtime in tests/test_ingest.py). Ids come from the same
+    global-survivor rule as the flat layout, so both produce identical
+    ids and never collide with ids in untouched buckets."""
+    affected = sorted({r["bucket"] for r in delta})
     out = (
-        surv_aff.select(*new_chunks.columns)
+        survivors.filter(F.col("bucket").isin(affected))
+        .select(*new_chunks.columns)
         .unionByName(new_chunks)
         .withColumn("bucket", _bucket_col(params.n_buckets))
+        .repartition("bucket")
     )
     delta_dir = os.path.join(store_path, "chunks.delta")
     out.write.mode("overwrite").partitionBy("bucket").parquet(delta_dir)
@@ -436,7 +471,6 @@ def compact_store(
     directory layout (the refresh path depends on it).
     """
     import math
-    import shutil
 
     data_dir = os.path.join(store_path, "chunks")
     _recover_interrupted_swap(data_dir)
@@ -474,10 +508,4 @@ def compact_store(
     # Same stale-FileStatusCache hazard as build(): a same-session reader
     # that already listed the store would otherwise see deleted files.
     spark.catalog.refreshByPath(data_dir)
-    written = [
-        f
-        for root, _, files in os.walk(data_dir)
-        for f in files
-        if f.endswith(".parquet")
-    ]
-    return len(written)
+    return _parquet_file_count(data_dir)

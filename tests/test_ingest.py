@@ -64,8 +64,8 @@ CORPUS = {
     "image.bin": "not allowed ext",
 }
 
-# Small ext list: discovery runs one listing job per extension, and the
-# full 29-ext default makes the test suite needlessly slow.
+# An explicit allow-list keeps the expected file set obvious; the
+# 30-extension default is covered by test_discovery_is_one_listing.
 TEST_EXTS = ("md", "py", "txt", "yaml", "js", "pdf")
 PARAMS = IngestParams(chunk_size=120, chunk_overlap=30, allowed_ext=TEST_EXTS)
 
@@ -187,14 +187,22 @@ def test_incremental_update_delta_semantics(spark, corpus_dir, tmp_path):
     assert sorted(r["text"] for r in got_helper) == sorted(
         r["text"] for r in old_helper
     )
-    # Unchanged files keep their ids; new ids continue past max(old id).
+    # Unchanged files keep their ids; new ids are exactly max(surviving
+    # id)+1 onward in (rel_path, chunk) order (getMaxId()+1).
+    kept = ("readme.md", "src/main.py", "src/util/helpers.py")
     old_ids = {(r["rel_path"], r["chunk"]): r["id"] for r in old_rows}
-    max_old = max(r["id"] for r in old_rows)
     for r in new:
-        if r["rel_path"] in ("readme.md", "src/main.py", "src/util/helpers.py"):
+        if r["rel_path"] in kept:
             assert r["id"] == old_ids[(r["rel_path"], r["chunk"])]
-        if r["rel_path"] in ("added.md", "notes.txt"):
-            assert r["id"] > max_old
+    max_surviving = max(r["id"] for r in old_rows if r["rel_path"] in kept)
+    fresh = sorted(
+        (r for r in new if r["rel_path"] not in kept),
+        key=lambda r: (r["rel_path"], r["chunk"]),
+    )
+    assert {r["rel_path"] for r in fresh} == {"added.md", "notes.txt"}
+    assert [r["id"] for r in fresh] == list(
+        range(max_surviving + 1, max_surviving + 1 + len(fresh))
+    )
 
 
 def test_content_hash_catches_same_size_edit(spark, corpus_dir, tmp_path):
@@ -230,6 +238,109 @@ def test_build_warm_path_end_to_end(spark, corpus_dir, tmp_path):
     second = build(spark, root, store, PARAMS)
     paths = {r["rel_path"] for r in second.select("rel_path").distinct().collect()}
     assert "data/config.yaml" not in paths and "added.md" in paths
+
+
+def _store_state(store: str):
+    """Every parquet file of the store with its mtime, plus _meta.json's
+    bytes and mtime: what a build that writes nothing leaves as it was."""
+    files = {}
+    for d, _, names in os.walk(os.path.join(store, "chunks")):
+        for n in names:
+            if n.endswith(".parquet"):
+                path = os.path.join(d, n)
+                files[os.path.relpath(path, store)] = os.stat(path).st_mtime_ns
+    meta = os.path.join(store, "_meta.json")
+    with open(meta, encoding="utf-8") as f:
+        return files, f.read(), os.stat(meta).st_mtime_ns
+
+
+@pytest.mark.parametrize("n_buckets", [0, 4])
+def test_noop_build_writes_nothing(spark, corpus_dir, tmp_path, n_buckets):
+    """A warm build over an unchanged tree returns the same rows and
+    leaves every parquet file and _meta.json untouched."""
+    import dataclasses
+
+    store = str(tmp_path / "store")
+    params = dataclasses.replace(PARAMS, n_buckets=n_buckets)
+    first = sorted(map(tuple, build(spark, corpus_dir, store, params).collect()))
+    before = _store_state(store)
+    second = build(spark, corpus_dir, store, params)
+    assert _store_state(store) == before
+    assert sorted(map(tuple, second.collect())) == first
+
+
+def test_refresh_decodes_only_changed_files(spark, tmp_path):
+    """A refresh reads the bodies of changed and new files only: the
+    injected extractor (it runs in Python workers, so it logs to a file)
+    sees a resized PDF again but never the unchanged one. A changed
+    file whose name holds glob metacharacters is re-read correctly."""
+    root = tmp_path / "delta_root"
+    root.mkdir()
+    (root / "same.pdf").write_bytes(b"%PDF same")
+    (root / "grow.pdf").write_bytes(b"%PDF grow")
+    (root / "a[1].md").write_text("bracket name")
+    (root / "b{2}*.md").write_text("brace name")
+    (root / "plain.txt").write_text("plain text")
+    log = tmp_path / "extracted.log"
+
+    def logging_extractor(blobs: pd.Series) -> pd.Series:
+        with open(log, "a", encoding="utf-8") as f:
+            for b in blobs:
+                f.write(bytes(b).decode() + "\n")
+        return blobs.map(lambda b: "PDFTEXT " + bytes(b).decode())
+
+    def extracted() -> set[str]:
+        seen = set(log.read_text().splitlines()) if log.exists() else set()
+        log.unlink(missing_ok=True)
+        return seen
+
+    store = str(tmp_path / "delta_store")
+
+    def refresh() -> dict[str, str]:
+        rows = build(
+            spark, str(root), store, PARAMS, pdf_extractor=logging_extractor
+        ).collect()
+        return {r["rel_path"]: r["text"] for r in rows}
+
+    refresh()
+    assert extracted() == {"%PDF same", "%PDF grow"}
+    refresh()
+    assert extracted() == set()
+    (root / "grow.pdf").write_bytes(b"%PDF grown longer")
+    (root / "a[1].md").write_text("bracket name, edited to a new size")
+    (root / "b{2}*.md").unlink()
+    assert refresh() == {
+        "same.pdf": "PDFTEXT %PDF same",
+        "grow.pdf": "PDFTEXT %PDF grown longer",
+        "a[1].md": "bracket name, edited to a new size",
+        "plain.txt": "plain text",
+    }
+    assert extracted() == {"%PDF grown longer"}
+
+
+def test_discovery_is_one_listing(spark, tmp_path):
+    """Discovery lists the tree once whatever the allow-list size, and
+    keeps per-extension semantics: a case-sensitive suffix match on the
+    file name."""
+    from mcp_rag_server_spark.plans.inspect import plan_string
+
+    root = tmp_path / "exts"
+    (root / "sub").mkdir(parents=True)
+    for name in ("a.md", "b.MD", "x.md.bak", "c.py", "sub/d.json", "e.unknown", "md"):
+        (root / name).write_text("x")
+    files = discover_files(spark, str(root))
+    assert sorted(r["rel_path"] for r in files.collect()) == [
+        "a.md", "c.py", "sub/d.json",
+    ]
+    assert plan_string(files, "simple").count("FileScan binaryFile") == 1
+
+    for bad in ("m{d", "m,d", "*", "m[d]", "m?", "m\\d"):
+        with pytest.raises(ValueError, match="glob metacharacter"):
+            discover_files(spark, str(root), allowed_ext=("md", bad))
+
+    empty = discover_files(spark, str(root), allowed_ext=(), with_content=True)
+    assert empty.columns == ["rel_path", "file_size", "content"]
+    assert empty.collect() == []
 
 
 def test_pdf_plumbing_with_injected_extractor(spark, tmp_path):

@@ -1,0 +1,70 @@
+"""Job budget of the warm ``build()`` path: the refresh must cost what
+its delta costs, not what the corpus costs.
+
+Jobs are counted with ``setJobGroup`` + ``statusTracker()`` (both work
+with ``spark.ui.enabled=false``). The ceilings are the counts of the
+delta-proportional refresh on this corpus at ``local[8]``; a regression
+toward reading every body or rewriting the whole store on each build
+(a no-op reopen ran 20 jobs flat and 9 bucketed, a one-file refresh 23
+and 31, before it) fails here.
+"""
+
+from __future__ import annotations
+
+import dataclasses
+import itertools
+import os
+
+import pytest
+
+from mcp_rag_server_spark.sources.ingest import IngestParams, build
+
+PARAMS = IngestParams(chunk_size=200, chunk_overlap=40, allowed_ext=("md", "py"))
+
+#: (no-op reopen, one-file refresh) job ceilings per store layout.
+CEILINGS = {0: (4, 11), 4: (4, 12)}
+
+_groups = itertools.count()
+
+
+def count_jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # Job events reach the status store through the async listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def parquet_files(store: str) -> list[str]:
+    return [
+        os.path.join(d, n)
+        for d, _, names in os.walk(os.path.join(store, "chunks"))
+        for n in names
+        if n.endswith(".parquet")
+    ]
+
+
+@pytest.mark.parametrize("n_buckets", sorted(CEILINGS))
+def test_warm_build_job_budget(spark, tmp_path, n_buckets):
+    root = tmp_path / "corpus"
+    for i in range(8):
+        path = root / f"d{i % 3}" / f"f{i}.{'md' if i % 2 else 'py'}"
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(f"file {i} body text " * (40 + 10 * i))
+    store = str(tmp_path / "store")
+    params = dataclasses.replace(PARAMS, n_buckets=n_buckets)
+    build(spark, str(root), store, params)
+    noop_ceiling, refresh_ceiling = CEILINGS[n_buckets]
+
+    assert count_jobs(spark, lambda: build(spark, str(root), store, params)) <= noop_ceiling
+
+    files_before = len(parquet_files(store))
+    with open(root / "d1" / "f1.md", "a", encoding="utf-8") as f:
+        f.write("appended so the size changes")
+    assert count_jobs(spark, lambda: build(spark, str(root), store, params)) <= refresh_ceiling
+    assert len(parquet_files(store)) <= files_before
