@@ -10,6 +10,8 @@ rely on Catalyst for column pruning + predicate pushdown.
 from __future__ import annotations
 
 import os
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,41 +45,47 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Column pruning / filter pushdown happen
     automatically because this is a plain parquet scan.
 
-    The resolved relation is memoized PER SESSION, keyed on the file's
-    (path, size, mtime): ``spark.read.parquet`` pays ~100-160 ms of
-    driver-side work per call (directory listing + parquet footer
-    schema read + relation resolution — r15 measurement), and the
-    operator suite re-reads the same handful of fixtures many times
-    per query construction. This is METADATA caching only — the exact
-    thing a catalog table gives you in production (guide §6: session
-    file-listing caches exist precisely to avoid repeated listings of
-    an unchanged table) — every action still scans the parquet bytes;
-    no row, aggregate, or query result is ever stored. A fixture
-    rewritten in place (size or mtime moved) misses the memo and is
-    re-resolved, and the memo dies with the session object itself.
+    The resolved relation is memoized PER SESSION, one entry per path,
+    stamped with the file's (size, mtime_ns): ``spark.read.parquet``
+    pays ~100-160 ms of driver-side work per call (directory listing +
+    parquet footer schema read + relation resolution — r15
+    measurement), and the operator suite re-reads the same handful of
+    fixtures many times per query construction. This is METADATA
+    caching only — the exact thing a catalog table gives you in
+    production (guide §6: session file-listing caches exist precisely
+    to avoid repeated listings of an unchanged table) — every action
+    still scans the parquet bytes; no row, aggregate, or query result
+    is ever stored. A fixture rewritten in place (size or mtime moved)
+    replaces its path's entry, so the memo never holds more than one
+    relation per path, and the memo dies with the session object.
+
+    The returned handle is SHARED by every caller in the session:
+    callers never ``persist()``/``cache()``/``unpersist()`` it (that
+    would turn the metadata memo into a data cache for everyone);
+    persist a derived frame instead.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = table_path(sf_dir, name)
     try:
         st = os.stat(path)
-        key = (path, st.st_size, st.st_mtime_ns)
+        stamp = (st.st_size, st.st_mtime_ns)
     except OSError:
-        key = None  # non-local / vanished path: fall through uncached
+        stamp = None  # non-local / vanished path: fall through uncached
     cache: dict | None = None
-    if key is not None:
+    if stamp is not None:
         cache = getattr(spark, "_graft_relation_cache", None)
         if cache is None:
             cache = {}
             spark._graft_relation_cache = cache
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
+        hit = cache.get(path)
+        if hit is not None and hit[0] == stamp:
+            return hit[1]
     df = spark.read.parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     if cache is not None:
-        cache[key] = df
+        cache[path] = (stamp, df)
     return df
 
 
@@ -104,8 +112,42 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view so operators can be
-    expressed in pure Spark SQL when that is clearer than DataFrame ops."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+#: A statement's leading ``WITH`` / ``WITH RECURSIVE`` keyword.
+_LEADING_WITH = re.compile(r"\A\s*WITH(?:\s+RECURSIVE)?\s+", re.IGNORECASE)
+
+
+def sql(spark: SparkSession, text: str, **relations: DataFrame) -> DataFrame:
+    """Run ``text`` with each keyword frame bound as the relation of
+    that name, for this statement only.
+
+    Each frame gets a fresh uuid view, bound to its name by a leading
+    CTE ``<name> AS (TABLE <view>)`` (spliced into the text's own WITH
+    list when it has one); Spark inlines it, so the optimized plan is
+    the one a global view of that name gives. No session-global name is
+    rebound, so concurrent statements cannot read each other's
+    relations, and an unbound name fails with TABLE_OR_VIEW_NOT_FOUND.
+    The text — the same text the DuckDB oracle runs — is neither
+    formatted nor quoted.
+
+    Views are dropped through the session catalog:
+    ``spark.catalog.dropTempView`` would also uncache a ``.cache()``d
+    frame passed in. Cached-data substitution runs before CTE inlining,
+    so a cached plan is matched inside a bound frame, not across it.
+    """
+    views = {name: f"rel_{uuid.uuid4().hex}" for name in relations}
+    bindings = ", ".join(
+        f"{name} AS (TABLE {view})" for name, view in views.items()
+    )
+    head = _LEADING_WITH.match(text)
+    if head:
+        text = f"{text[: head.end()]}{bindings}, {text[head.end():]}"
+    else:
+        text = f"WITH {bindings}\n{text}"
+    session_catalog = spark._jsparkSession.sessionState().catalog()
+    try:
+        for name, view in views.items():
+            relations[name].createTempView(view)
+        return spark.sql(text)
+    finally:
+        for view in views.values():
+            session_catalog.dropTempView(view)

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.registry import register
 
 #: Frequency-cap expectation: max orders a single customer may carry.
@@ -110,6 +110,7 @@ def dq_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure path (see DQ_MAX_ORDERS_PER_CUSTOMER); Deequ-style
     anomaly EVOLUTION over batches is ta_length_drift /
     ev_cusum_drift territory and already registered."""
-    for t in ("orders", "lineitem", "customer", "events", "documents"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_DQ_SQL)
+    tables = ("orders", "lineitem", "customer", "events", "documents")
+    return sql(
+        spark, _DQ_SQL, **{t: load_table(spark, sf_dir, t) for t in tables}
+    )

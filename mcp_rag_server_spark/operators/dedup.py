@@ -28,7 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.vector import cosine_score, duckdb_cosine
 from mcp_rag_server_spark.registry import register
 from mcp_rag_server_spark.session import fanout_width, spread_scan
@@ -649,10 +649,8 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (r14: spread_scan'd on doc_id so the token explode + 16
     md5-digit votes parallelize on single-row-group fixture layouts;
     the doc_id exchange it adds replaces the groupBy's)."""
-    spread_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    ).createOrReplaceTempView("documents")
-    return spark.sql(_simhash_sql("spark"))
+    docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    return sql(spark, _simhash_sql("spark"), documents=docs)
 
 
 def _embedding_neardup_oracle() -> str:
@@ -2227,10 +2225,8 @@ def dd_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant classes the normalizer must merge. At 100 TB this is the
     shape that removes ~⅓ of a crawl before any md5: scan →
     normalize → hash-aggregate distinct on (source, canonical)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_url_sql("spark"))
+    text = _url_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 def _bbit_exprs(dialect: str) -> tuple[str, str]:
@@ -2731,11 +2727,10 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 3-row ladder reads it three times. Together: 9.7 s → ~2 s
     steady at sf0.1; the DuckDB oracle keeps the generic tagged-census
     derivation as the independent check of the counting identities.
-    r14: the registered view is spread_scan'd on doc_id so the serial
+    r14: the bound corpus is spread_scan'd on doc_id so the serial
     fixture-scan stages (simhash token votes, md5(text) groups) and
     the minhash signature behind lsh_pairs_v all parallelize."""
     docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    docs.createOrReplaceTempView("documents")
     # The two checkpointed inputs are INDEPENDENT (LSH pairs need the
     # minhash signature chain, simhash needs the token-vote aggregate;
     # neither reads the other), so materialize them as overlapping
@@ -2747,15 +2742,20 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: _jaccard_pair_edges(docs).localCheckpoint(eager=True)
         )
         sim_f = pool.submit(
-            lambda: spark.sql(_simhash_sql("spark")).localCheckpoint(
-                eager=True
-            )
+            lambda: sql(
+                spark, _simhash_sql("spark"), documents=docs
+            ).localCheckpoint(eager=True)
         )
-        lsh_f.result().createOrReplaceTempView("lsh_pairs_v")
-        sim_f.result().createOrReplaceTempView("simhash_v")
-    spark.sql(_agreement_counts_sql()).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("agreement_stats_v")
-    return spark.sql(
-        _agreement_final_sql("SELECT * FROM agreement_stats_v")
+        lsh_pairs, simhash = lsh_f.result(), sim_f.result()
+    stats = sql(
+        spark,
+        _agreement_counts_sql(),
+        documents=docs,
+        lsh_pairs_v=lsh_pairs,
+        simhash_v=simhash,
+    ).localCheckpoint(eager=True)
+    return sql(
+        spark,
+        _agreement_final_sql("SELECT * FROM agreement_stats_v"),
+        agreement_stats_v=stats,
     )

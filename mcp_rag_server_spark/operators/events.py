@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.numeric import (
     davg,
     dsum,
@@ -829,14 +829,16 @@ def sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     at {REACH_MAX_HOPS}. For unbounded graphs at 100 TB use the
     star-contraction operator instead (O(log n) rounds, each a bounded
     shuffle)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "events_reach_v"
+    edges = sql(
+        spark,
+        _REACH_EDGES_SQL.format(src="events"),
+        events=load_table(spark, sf_dir, "events"),
     )
-    edges = spark.sql(_REACH_EDGES_SQL.format(src="events_reach_v"))
-    edges.coalesce(1).localCheckpoint(eager=True).createOrReplaceTempView(
-        "edges_reach_v"
+    return sql(
+        spark,
+        _REACH_RECURSE_SQL.format(edges="edges"),
+        edges=edges.coalesce(1).localCheckpoint(eager=True),
     )
-    return spark.sql(_REACH_RECURSE_SQL.format(edges="edges_reach_v"))
 
 
 #: Conditional-aggregate pack threshold.
@@ -1155,8 +1157,7 @@ def ev_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     no state beyond the frame). Spark executes the literal oracle text
     — parity by construction — and at 100 TB the window partitions by
     series key exactly like ev_gap_fill/ev_scd2_intervals."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ewma_sql())
+    return sql(spark, _ewma_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 #: Two-sided 95% critical value for the two-proportion z-test.
@@ -1243,13 +1244,13 @@ def ev_abtest_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full significance verdict sits inside the driver hash. At
     100 TB the only corpus-wide shuffle is the user-keyed aggregation,
     which partial-aggregates map-side."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     arm = (
         "CASE WHEN CAST(conv(substr(md5(concat('arm:', CAST(user_id AS"
         " STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B'"
         " END"
     )
-    return spark.sql(_abtest_sql().format(arm=arm))
+    text = _abtest_sql().format(arm=arm)
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: CUSUM alarm threshold in per-type stddev units.
@@ -1346,8 +1347,7 @@ def ev_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits inside the driver hash with zero order-dependent float math.
     One shuffle on event_type serves every window; at 100 TB the
     series key partitions exactly like ev_ewma_value/ev_gap_fill."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_cusum_sql())
+    return sql(spark, _cusum_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 def _trend_sql() -> str:
@@ -1422,11 +1422,11 @@ def ev_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment discipline as agg_pearson_corr, pointed at the time axis.
     One bounded-key shuffle per aggregation level; the only window is
     the per-series MIN for the offset origin."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    sql = _trend_sql()
+    text = _trend_sql()
     # Spark's epoch microseconds function is unix_micros; DuckDB's is
     # epoch_us — the ONLY token that differs between the two texts.
-    return spark.sql(sql.replace("epoch_us(", "unix_micros("))
+    text = text.replace("epoch_us(", "unix_micros(")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Attribution lookback window (microseconds) — 24 h.
@@ -1485,10 +1485,8 @@ def ev_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 24h deadline is an exact integer micros difference. Same
     carry-forward machinery as ev_gap_fill/tj_asof_last_order, pointed
     at the marketing-attribution shape."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
-        _attrib_sql("spark").replace("epoch_us(", "unix_micros(")
-    )
+    text = _attrib_sql("spark").replace("epoch_us(", "unix_micros(")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: PIT feature window (microseconds) — 24 h, strictly before the label.
@@ -1545,8 +1543,8 @@ def ev_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     this replaces the per-feature correlated subqueries a naive
     training-set builder runs, and the same frame maintains online in
     the streaming pack's stateful shapes."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_pit_sql().replace("epoch_us(", "unix_micros("))
+    text = _pit_sql().replace("epoch_us(", "unix_micros(")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _km_sql() -> str:
@@ -1646,10 +1644,9 @@ def ev_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort keeps every window keyed (no global window) and is what a
     real retention analysis does anyway. Durations bucket to hours so
     the curve table is subjects-bounded per cohort."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    sql = _km_sql().replace("epoch_us(", "unix_micros(")
-    sql = sql.replace("// 3600000000", "DIV 3600000000")
-    return spark.sql(sql)
+    text = _km_sql().replace("epoch_us(", "unix_micros(")
+    text = text.replace("// 3600000000", "DIV 3600000000")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _ks_sql() -> str:
@@ -1738,13 +1735,13 @@ def ev_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on event_type serves the step aggregation and the
     prefix window; the asymptotic 1.36·sqrt((n+m)/nm) critical value
     gives the hashed 95% verdict."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     arm = (
         "CASE WHEN CAST(conv(substr(md5(concat('arm:', CAST(user_id AS"
         " STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B'"
         " END"
     )
-    return spark.sql(_ks_sql().format(arm=arm))
+    text = _ks_sql().format(arm=arm)
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 _STREAK_SQL = """
@@ -1802,8 +1799,7 @@ def ev_purchase_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two user-keyed windows (row_number, best-streak rank) on one
     shuffle; the census aggregation is bounded by max streak length.
     Date arithmetic (DATE minus integer) is engine-identical."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_STREAK_SQL)
+    return sql(spark, _STREAK_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 #: Robust anomaly threshold: |x - median| > K * MAD * 1.4826.
@@ -1870,11 +1866,11 @@ def ev_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     census engine-identical. Two bounded-key aggregations over the
     hourly table (itself one keyed partial agg), one small join back —
     the medians are per-type scalars, broadcast-sized at any scale."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
+    text = (
         _mad_sql().replace("quantile_cont(v, 0.5)", "percentile(v, 0.5)")
         .replace("quantile_cont(adev, 0.5)", "percentile(adev, 0.5)")
     )
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Autocorrelation lags: adjacent hour and daily seasonality.
@@ -1965,8 +1961,7 @@ def ev_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lag-24 is the capacity-planning signal: strong daily seasonality
     justifies ev_seasonal per-hour provisioning rather than a flat
     ev_trend_forecast extrapolation."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_acf_sql())
+    return sql(spark, _acf_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 _SEASONAL_SQL = """
@@ -2023,8 +2018,9 @@ def ev_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. extract(hour) is clock-time bucketing — the right axis for
     provisioning, vs date_trunc's absolute-time buckets everywhere
     else in the pack."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_SEASONAL_SQL)
+    return sql(
+        spark, _SEASONAL_SQL, events=load_table(spark, sf_dir, "events")
+    )
 
 
 _RFM_SQL = """
@@ -2085,11 +2081,10 @@ def ev_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     that estimator's contract). The (user_id) tie-breaks make every
     quintile boundary engine-identical. Output is the 5×5 (R,F) grid
     census, bounded regardless of user count."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    sql = _RFM_SQL.replace("epoch_us(", "unix_micros(").replace(
+    text = _RFM_SQL.replace("epoch_us(", "unix_micros(").replace(
         "// 86400000000", "DIV 86400000000"
     )
-    return spark.sql(sql)
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _welch_sql() -> str:
@@ -2186,13 +2181,13 @@ def ev_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB arm sizes, t's distribution is indistinguishable from
     normal, which keeps the critical value a constant instead of a
     df-indexed table lookup."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     arm = (
         "CASE WHEN CAST(conv(substr(md5(concat('arm:', CAST(user_id AS"
         " STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B'"
         " END"
     )
-    return spark.sql(_welch_sql().format(arm=arm))
+    text = _welch_sql().format(arm=arm)
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _mi_sql() -> str:
@@ -2262,8 +2257,7 @@ def ev_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     path), chi² terms are rounded-6 per cell and decimal-summed; dof
     is exact. MI=0 ⇔ independent; paired with chi² the row answers
     'dependent, and is it significant' in one hash."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_mi_sql())
+    return sql(spark, _mi_sql(), events=load_table(spark, sf_dir, "events"))
 
 
 _ENTROPY_SQL = """
@@ -2324,8 +2318,7 @@ def ev_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same shuffle the transition matrix uses) aggregated to a
     |types|² table — constant-size after the first aggregation
     regardless of corpus."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ENTROPY_SQL)
+    return sql(spark, _ENTROPY_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 #: DiD design: hours of "post" period before the corpus max timestamp.
@@ -2426,15 +2419,13 @@ def ev_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded once (SE via Var(x̄) sums — the four cells are disjoint
     samples). The md5 arms make the fixture's verdict deterministic;
     in production the arm expression is the rollout flag."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     arm = (
         "CASE WHEN CAST(conv(substr(md5(concat('arm:', CAST(e.user_id AS"
         " STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0 THEN 'A' ELSE 'B'"
         " END"
     )
-    return spark.sql(
-        _did_sql().format(arm=arm).replace("epoch_us(", "unix_micros(")
-    )
+    text = _did_sql().format(arm=arm).replace("epoch_us(", "unix_micros(")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Bot heuristics: flag thresholds (events per active minute; coefficient
@@ -2519,8 +2510,8 @@ def ev_bot_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
     noise, same floor production heuristics use). Output is the 2×2
     flag census — bounded regardless of user count — with rounded-6
     decimal-summed feature means so the grid hashes exactly."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_BOT_SQL.replace("epoch_us(", "unix_micros("))
+    text = _BOT_SQL.replace("epoch_us(", "unix_micros(")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 _POWER_SQL = """
@@ -2584,8 +2575,7 @@ def ev_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer both engines agree on. A type whose n_per_arm exceeds
     plausible traffic is a metric you cannot ship an experiment on —
     that is the decision this row feeds."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_POWER_SQL)
+    return sql(spark, _POWER_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 #: Rolling-median window width (hours) and the robust-anomaly factor.
@@ -2657,8 +2647,8 @@ def ev_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition, and the hashed census rounds the medians before the
     decimal mean, so engines agree bit-for-bit. One (type)-keyed
     shuffle serves the hourly aggregate and the window."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_rolling_median_sql("spark"))
+    text = _rolling_median_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Shared hourly-series CTE: per-type hourly totals as exact decimals,
@@ -2755,8 +2745,9 @@ def ev_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is one shuffle of 720 rows per series key, the same
     shape as ev_rolling_median — series length is calendar-bounded,
     not data-bounded."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_CHANGEPOINT_SQL)
+    return sql(
+        spark, _CHANGEPOINT_SQL, events=load_table(spark, sf_dir, "events")
+    )
 
 
 def _theil_sen_sql(dialect: str, width: int = 32) -> str:
@@ -2832,8 +2823,8 @@ def ev_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles. The OLS slope from the same exact moments rides along so
     the output IS the robustness diagnostic: slope_gap far from 0
     means outlier hours are steering the least-squares fit."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_theil_sen_sql("spark", width=fanout_width(spark)))
+    text = _theil_sen_sql("spark", width=fanout_width(spark))
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Train share of the hourly series for the forecast backtest.
@@ -2925,8 +2916,9 @@ def ev_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     One (type)-keyed shuffle for moments + one broadcast-sized join of
     coefficients back to test rows — series length stays
     calendar-bounded at any data volume."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_BACKTEST_SQL)
+    return sql(
+        spark, _BACKTEST_SQL, events=load_table(spark, sf_dir, "events")
+    )
 
 
 _RATIO_CI_SQL = """
@@ -3018,8 +3010,9 @@ def ev_ratio_metric_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type iid moment pass joined back (broadcast-sized). At 100 TB
     every aggregation shuffles on bounded keys (type×user, then
     type)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_RATIO_CI_SQL)
+    return sql(
+        spark, _RATIO_CI_SQL, events=load_table(spark, sf_dir, "events")
+    )
 
 
 def _funnel_time_sql(dialect: str) -> str:
@@ -3083,8 +3076,8 @@ def ev_funnel_time_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean rounded-then-decimal-summed. One (user)-keyed shuffle +
     one small quantile aggregation per step pair — user count scales,
     the three-row output never does."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_funnel_time_sql("spark"))
+    text = _funnel_time_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Centered trend window half-width (hours) for the decomposition.
@@ -3180,8 +3173,7 @@ def ev_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     series key: at 100 TB this is two keyed shuffles, frame width and
     24 hod groups constant. Spark executes the literal oracle text
     (named WINDOW clause included — both engines support it)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_DECOMP_SQL)
+    return sql(spark, _DECOMP_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 #: LTV curve age cutoffs (days since a user's first event).
@@ -3278,8 +3270,8 @@ def ev_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer epoch arithmetic — date_trunc('week') anchors differ
     across engines, FLOOR(day/7) cannot. One user-keyed window finds
     the anchor, one grouped pass does the rest."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ltv_sql("spark"))
+    text = _ltv_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Anomaly threshold (standard deviations from the baseline mean).
@@ -3359,8 +3351,9 @@ def ev_anomaly_seasonal_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows partition by bounded keys; series length is
     calendar-bounded at any volume (the ev_rolling_median
     argument)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_SEAS_ANOM_SQL)
+    return sql(
+        spark, _SEAS_ANOM_SQL, events=load_table(spark, sf_dir, "events")
+    )
 
 
 _OVERLAP_SQL = """
@@ -3414,8 +3407,7 @@ def ev_user_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by types². At 100 TB this is the exact baseline the KMV
     sketch path estimates when even the incidence list is too big to
     self-join."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_OVERLAP_SQL)
+    return sql(spark, _OVERLAP_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 #: Bootstrap resample count and the Poisson(1) inverse-CDF ladder
@@ -3517,8 +3509,8 @@ def ev_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     bootstrap's simpler sibling honestly — se_boot here tracks the
     delta-method SE where both apply, distribution-free where it
     does not."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_bootstrap_sql("spark"))
+    text = _bootstrap_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _cuped_sql() -> str:
@@ -3616,8 +3608,7 @@ def ev_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real platform uses the experiment start date it already knows
     (same two-aggregation plan). Same md5 'arm:' fold as
     ev_welch_ttest, so arms agree across the A/B family."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
+    text = (
         _cuped_sql().format(
             arm="CASE WHEN CAST(conv(substr(md5(concat('arm:',"
             " CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0"
@@ -3626,6 +3617,7 @@ def ev_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             div="DIV",
         )
     )
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: mSPRT mixture scale: the N(0, tau^2) prior over the alternative's
@@ -3735,8 +3727,7 @@ def ev_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     the machinery it pins (exact moment rollup, martingale form,
     rounded-transcendental determinism) is what the audit is for.
     Same 'arm:' fold as ev_welch_ttest / ev_cuped_adjustment."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
+    text = (
         _msprt_sql().format(
             arm="CASE WHEN CAST(conv(substr(md5(concat('arm:',"
             " CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2 = 0"
@@ -3744,6 +3735,7 @@ def ev_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
             strt="STRING",
         )
     )
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Stationary-distribution power iteration: unrolled steps.
@@ -4009,10 +4001,8 @@ def ev_concurrency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (delta-ascending tie rule) and so never counts as concurrent —
     stated, deterministic, and the conservative choice. Peak per day
     and the overall peak are both inside the driver hash."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
-        _concurrency_sql().format(epoch="unix_micros", strt="STRING")
-    )
+    text = _concurrency_sql().format(epoch="unix_micros", strt="STRING")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: SLO monitoring: error budget (allowed error-event fraction) and the
@@ -4093,8 +4083,8 @@ def ev_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     census (max burns + alert hours) is engine-exact. Thresholds are
     fixture-probed (see SLO_* comment) so both the firing and the
     all-clear paths are exercised across SFs."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_burn_rate_sql().format(epoch="unix_micros", div="DIV"))
+    text = _burn_rate_sql().format(epoch="unix_micros", div="DIV")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _delta_decomp_sql() -> str:
@@ -4168,10 +4158,8 @@ def ev_delta_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula (or a lossy refactor) flips the hash even if the rounded
     effects happen to collide. At 100 TB this is one partial-agg
     shuffle on the segment key — the census is segment-sized."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
-        _delta_decomp_sql().format(epoch="unix_micros", div="DIV")
-    )
+    text = _delta_decomp_sql().format(epoch="unix_micros", div="DIV")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Growth accounting period length (one day, in microseconds):
@@ -4243,8 +4231,8 @@ def ev_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     GA_DAY_US). Nothing global, nothing approximate;
     ev_cohort_retention slices the same activity by SIGNUP cohort,
     this ledger slices it by TRANSITION — the standard pair."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_growth_sql().format(epoch="unix_micros", div="DIV"))
+    text = _growth_sql().format(epoch="unix_micros", div="DIV")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: IPW: treatment = ≥7 pre-period purchases (probed ~50/50 split,
@@ -4346,8 +4334,8 @@ def ev_propensity_ipw(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce, the CUPED plan shape with weights instead of covariance.
     ess_treated = (Σw)²/Σw² is the overlap diagnostic reviewers ask
     for: how many effective users survive the weighting."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ipw_sql().format(epoch="unix_micros", div="DIV"))
+    text = _ipw_sql().format(epoch="unix_micros", div="DIV")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 _SEQ_SUPPORT_SQL = """
@@ -4397,8 +4385,9 @@ def ev_seq_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pattern length; length-2 is the census every run starts
     from (length-3 support needs the same first-ts table joined
     three ways — identical cost model)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_SEQ_SUPPORT_SQL)
+    return sql(
+        spark, _SEQ_SUPPORT_SQL, events=load_table(spark, sf_dir, "events")
+    )
 
 
 #: Stickiness: the engaged-action event type and the trailing window
@@ -4471,14 +4460,14 @@ def ev_stickiness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturates at 150/150 and would hash a constant. Edge days
     without a full trailing window are excluded via the bounds
     join."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
+    text = (
         _stickiness_sql().format(
             epoch="unix_micros", div="DIV",
             offsets="SELECT explode(sequence(0, "
             f"{STICKY_WINDOW_DAYS - 1})) AS ofs",
         )
     )
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 def _ohlc_sql() -> str:
@@ -4542,8 +4531,8 @@ def ev_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     row values. At 100 TB the hour key partitions cleanly and each
     bar's state is O(1) — the same shape TimescaleDB/kdb serve
     continuously, here as the batch rollup with a driver hash."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_ohlc_sql().format(epoch="unix_micros", div="DIV"))
+    text = _ohlc_sql().format(epoch="unix_micros", div="DIV")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Attribution-window grid for the conversion-sensitivity sweep
@@ -4615,8 +4604,8 @@ def ev_conversion_window_sensitivity(
     the latency distribution; this hashes the METRIC'S derivative
     with respect to the window — the sensitivity reviewers should
     ask for."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_conv_window_sql().format(epoch="unix_micros"))
+    text = _conv_window_sql().format(epoch="unix_micros")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 _BURSTINESS_SQL = """
@@ -4688,8 +4677,8 @@ def ev_interpurchase_burstiness(
     DuckDB interpolate exact percentiles differently, the
     agg_percentile_audit lesson). One user-keyed window + one
     single-row reduce."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_BURSTINESS_SQL.format(epoch="unix_micros"))
+    text = _BURSTINESS_SQL.format(epoch="unix_micros")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 _VALUE_VALIDATE_SQL = """
@@ -4735,5 +4724,6 @@ def ev_value_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     test pins that each injected non-finite row lands in exactly its
     class; ONE shared SQL text is both the Spark query and the DuckDB
     oracle (parity by construction)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_VALUE_VALIDATE_SQL)
+    return sql(
+        spark, _VALUE_VALIDATE_SQL, events=load_table(spark, sf_dir, "events")
+    )

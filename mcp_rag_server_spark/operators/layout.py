@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.registry import register
 
 #: Grid resolution: 8 bits per dimension -> 16-bit Morton key.
@@ -243,7 +243,5 @@ def ingest_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     any manifest size; compact_store (sources/ingest.py) is the
     executor this planner fronts. Hashed per source: file and
     small-file counts, bin count, max bin, fill ratio."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_compaction_sql("spark"))
+    text = _compaction_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))

@@ -28,7 +28,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.text import chunk_stride, duckdb_chunk_sql
 from mcp_rag_server_spark.operators.chunking import (
     DOC_CHUNK_OVERLAP,
@@ -69,11 +69,11 @@ def chunk_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield ordinal, text[start : start + size]
 
     spark.udtf.register("chunk_udtf", ChunkUDTF)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(
+    text = (
         "SELECT d.doc_id, c.chunk, c.chunk_text "
         "FROM documents d, LATERAL chunk_udtf(d.text) c"
     )
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 @register(

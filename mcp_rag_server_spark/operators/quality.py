@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.operators.textanalysis import STOPWORDS, _SW_SQL
 from mcp_rag_server_spark.registry import register
 
@@ -841,14 +841,12 @@ def ta_kl_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size) with totals broadcast; the final per-source sum is 20
     rows. A hot source (huge n_s) is still one partial-agg key — no
     skewed pair stage anywhere."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(
+    text = (
         _KL_SQL.replace(
             "unnest(string_split(text, ' '))", "explode(split(text, ' '))"
         )
     )
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: DSIR smoothing: additive (add-1) over the corpus vocabulary.
@@ -922,14 +920,12 @@ def ta_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-source means + the positive-weight count summarize where
     selection pressure lands; the per-doc weights feed the
     ta_stratified_sample/ta_mix_temperature stages downstream."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(
+    text = (
         _DSIR_SQL.format(lang=DSIR_TARGET_LANG).replace(
             "unnest(string_split(text, ' '))", "explode(split(text, ' '))"
         )
     )
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Fixed logistic-regression weights for the quality scorer
@@ -994,16 +990,13 @@ def ta_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     real-model twin (sentence-transformers/fastText artifacts) is
     container-policy-gated like F4's embedder, and this registers the
     full serving plumbing that scorer would drop into."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    sql = _LR_SQL.replace(
+    text = _LR_SQL.replace(
         "len(string_split(text, ' '))", "size(split(text, ' '))"
     ).replace(
         "len(list_distinct(string_split(text, ' ')))",
         "size(array_distinct(split(text, ' ')))",
     )
-    return spark.sql(sql)
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Shared rule-label + logistic-score CTE prefix: gopher_pass (the
@@ -1082,16 +1075,13 @@ def ta_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (transcendental-rounding discipline), FLOOR precedes the integer
     cast (Spark truncates, DuckDB rounds half-even), and both label
     and score come from ONE feature scan."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    sql = (
+    text = (
         _CALIB_SQL.replace("len(", "size(")
         .replace("string_split(", "split(")
         .replace("list_distinct(", "array_distinct(")
         .replace("list_filter(", "filter(")
     )
-    return spark.sql(sql)
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1248,10 +1238,9 @@ def ta_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the bucket engine-portable where integer-division syntax is
     not. At 100 TB this is a count-shaped pass over however many
     distinct QID combinations exist — never over docs."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
+    return sql(
+        spark, _KANON_SQL, documents=load_table(spark, sf_dir, "documents")
     )
-    return spark.sql(_KANON_SQL)
 
 
 #: Deterministic corruption markers for the encoding-hygiene census
@@ -1342,10 +1331,8 @@ def ta_mojibake_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-summed so the per-source mean hashes exactly. At 100 TB:
     scan -> flag -> count, embarrassingly parallel, no doc-level
     output."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_mojibake_sql("spark"))
+    text = _mojibake_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: AUC score quantization: buckets = round(p_keep, 3) → ≤ 1001
@@ -1413,16 +1400,13 @@ def ta_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization is the operator's contract, not an approximation
     caveat (a 6-decimal scorer re-ranked at 3 decimals moves AUC by
     <1e-3 on any calibrated scorer). gini = 2·AUC − 1 rides along."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    sql = (
+    text = (
         _AUC_SQL.replace("len(", "size(")
         .replace("string_split(", "split(")
         .replace("list_distinct(", "array_distinct(")
         .replace("list_filter(", "filter(")
     )
-    return spark.sql(sql)
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: CCNet perplexity tiers on the rounded-6 mean unigram surprisal
@@ -1503,13 +1487,10 @@ def ta_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     computing cutoffs ONCE on a sample and freezing them into config.
     The tier boundaries are fixture-probed so every (lang, tier)
     bucket is populated at sf0.001/0.01/0.1 (COVERAGE note)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    sql = _CCNET_SQL.replace(
+    text = _CCNET_SQL.replace(
         "unnest(string_split(text, ' '))", "explode(split(text, ' '))"
     )
-    return spark.sql(sql)
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 def _card_sql(dialect: str, pairs_cte: str) -> str:
@@ -1518,7 +1499,7 @@ def _card_sql(dialect: str, pairs_cte: str) -> str:
     surprisal, ta_ccnet_buckets' tier cutoffs, ta_gopher_rules'
     label, and the dd_* near-dup pair list (``pairs_cte`` supplies
     pairs(doc_a, doc_b) — inlined LSH CTEs for DuckDB, the
-    _jaccard_pair_edges temp view for Spark)."""
+    _jaccard_pair_edges frame bound as ``neardup_pairs`` for Spark)."""
     if dialect == "spark":
         tok = "SELECT doc_id, explode(split(text, ' ')) AS t FROM documents"
     else:
@@ -1636,7 +1617,7 @@ def ta_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ta_unigram_logprob), the probed CCNet tier cutoffs
     (ta_ccnet_buckets), the Gopher label (ta_gopher_rules), and the
     LSH-verified ≥0.9 near-dup pair list (_jaccard_pair_edges — the
-    Spark side feeds it through a temp view, the oracle inlines the
+    Spark side binds it as a relation, the oracle inlines the
     same banded CTEs) — into a single statement whose scalar
     sub-aggregates meet in broadcast-sized cross joins. Every ratio
     is a rounded exact-count quotient; nothing in the card is
@@ -1644,12 +1625,13 @@ def ta_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mcp_rag_server_spark.operators.dedup import _jaccard_pair_edges
 
     docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents")
-    _jaccard_pair_edges(docs).createOrReplaceTempView("neardup_pairs")
-    return spark.sql(
+    return sql(
+        spark,
         _card_sql(
             "spark", "pairs AS (SELECT doc_a, doc_b FROM neardup_pairs)"
-        )
+        ),
+        documents=docs,
+        neardup_pairs=_jaccard_pair_edges(docs),
     )
 
 
@@ -1727,13 +1709,10 @@ def ta_gains_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     would configure. The cumulative window is the allowlisted
     bounded-global shape (two specdefinitions on one ORDER BY s DESC
     spec)."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    sql = (
+    text = (
         _GAINS_SQL.replace("len(", "size(")
         .replace("string_split(", "split(")
         .replace("list_distinct(", "array_distinct(")
         .replace("list_filter(", "filter(")
     )
-    return spark.sql(sql)
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))

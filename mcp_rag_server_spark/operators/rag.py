@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.text import duckdb_chunk_sql
 from mcp_rag_server_spark.functions.vector import (
     array_float_literal,
@@ -853,15 +853,15 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer contract of ta_token_stats (vec_id = doc_id in the
     fixtures; in production the chunk store carries its own token
     counts at write time)."""
-    sql, cos = _pack_sql("spark")
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
+    text, cos = _pack_sql("spark")
     spark_cos = "round(" + cosine_sql("e.embedding", "q.qv") + ", 4)"
-    return spark.sql(sql.replace("rag_cos_ph", spark_cos))
+    text = text.replace("rag_cos_ph", spark_cos)
+    return sql(
+        spark,
+        text,
+        embeddings=load_table(spark, sf_dir, "embeddings"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 #: Multi-query fusion: the expansion-variant query vectors, per-list

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.vector import (
     duckdb_cosine as _duckdb_cosine,
 )
@@ -1100,8 +1100,7 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     the packed bitmask (0 = fully grouped row, 1 = status rolled up,
     3 = grand total) is hash-comparable as a plain BIGINT — it doubles
     as the total-order sort key distinguishing the three set levels."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
+    text = (
         """
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n,
@@ -1114,6 +1113,7 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY g_id, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
         """
     )
+    return sql(spark, text, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 @register(
@@ -1172,27 +1172,27 @@ ORDER BY score DESC, e.vec_id ASC
 LIMIT 5
 """,
     description="the flagship query through the pure-SQL surface"
-    " (spark.sql over registered views — same plan as the DataFrame form)",
+    " (Spark SQL over the bound fixture — same plan as the DataFrame form)",
     tags=("rag", "sql", "topk"),
 )
 def sql_rag_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every operator here is reachable from SQL too; this registers the
-    fixture as a view and runs rag_query's core as one SQL string —
+    """Every operator here is reachable from SQL too; this binds the
+    fixture as a relation and runs rag_query's core as one SQL string —
     oracle-gated with rag_topk's exact result contract, registered
     separately so the SQL entry path itself is verified."""
     from mcp_rag_server_spark.functions.vector import cosine_sql
 
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings_v")
-    return spark.sql(
+    text = (
         f"""
-        WITH q AS (SELECT embedding AS qv FROM embeddings_v WHERE vec_id = 0)
+        WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         SELECT e.vec_id, e.label,
                round({cosine_sql("e.embedding", "q.qv")}, 4) AS score
-        FROM embeddings_v e CROSS JOIN q
+        FROM embeddings e CROSS JOIN q
         ORDER BY score DESC, e.vec_id ASC
         LIMIT 5
         """
     )
+    return sql(spark, text, embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -1415,8 +1415,9 @@ def window_distribution_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     every distribution value) so the hashed values cover the full
     partitions while the result stays bounded. Spark runs the literal
     oracle text (WINDOW clause syntax is shared)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_DIST_PACK_SQL)
+    return sql(
+        spark, _DIST_PACK_SQL, orders=load_table(spark, sf_dir, "orders")
+    )
 
 
 _SIMPSON_SQL = """
@@ -1554,8 +1555,9 @@ def agg_pearson_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ulp there — DuckDB converts the int128 mantissa then divides,
     Java rounds the decimal value once; round-9 absorbs it). Same discipline as ta_zipf_fit's
     closed-form least squares, applied to the Pearson/OLS pair."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_CORR_SQL)
+    return sql(
+        spark, _CORR_SQL, lineitem=load_table(spark, sf_dir, "lineitem")
+    )
 
 
 _SET_ALL_SQL = """
@@ -1671,8 +1673,9 @@ def window_value_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts two Window nodes, zero extra exchanges). Total (price,
     key) ordering makes every frame content deterministic; the %100
     filter samples AFTER the windows."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_VALUE_FRAMES_SQL)
+    return sql(
+        spark, _VALUE_FRAMES_SQL, orders=load_table(spark, sf_dir, "orders")
+    )
 
 
 _WMEDIAN_SQL = """
@@ -1734,8 +1737,9 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (returnflag) + the in-partition sort the window needs anyway. The
     tie-break (price, wt) totalizes row order so cum weights — and
     hence the selected row — are engine-identical."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_WMEDIAN_SQL)
+    return sql(
+        spark, _WMEDIAN_SQL, lineitem=load_table(spark, sf_dir, "lineitem")
+    )
 
 
 _GINI_SQL = """
@@ -1794,8 +1798,7 @@ def agg_gini_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed value answers the planning question directly: a type whose
     gini approaches 1 is a hot-key workload (ev_salted_hot_key_join
     is the mitigation on the books)."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_GINI_SQL)
+    return sql(spark, _GINI_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 _LATERAL_SQL = """
@@ -1836,9 +1839,12 @@ def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates into an un-keyed window — the plan lint caught
     exactly that). The %10 outer filter bounds the result; it pushes
     into the decorrelated join's probe side."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_LATERAL_SQL)
+    return sql(
+        spark,
+        _LATERAL_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 #: Columns profiled (name, cast-to-double expr usable in both engines).
@@ -1884,8 +1890,9 @@ def agg_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans per branch; at 100 TB you fold all columns into ONE
     aggregate row and unpivot it — registered as the
     unpivot_lineitem_metrics shape)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_PROFILE_SQL)
+    return sql(
+        spark, _PROFILE_SQL, lineitem=load_table(spark, sf_dir, "lineitem")
+    )
 
 
 #: Market-basket: minimum pair support and result size.
@@ -2132,10 +2139,7 @@ def agg_ols_sufficient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-free constant work per group — the 100 TB shape for
     fitting per-segment pricing/propensity baselines without leaving
     SQL."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem"
-    )
-    return spark.sql(_OLS_SQL)
+    return sql(spark, _OLS_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 _MODE_SQL = """
@@ -2185,10 +2189,9 @@ def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     contested one. Cost is one (flag, qty)-keyed partial-agg shuffle
     — distinct-value-bounded, not row-bounded — plus a window over the
     tiny counts table."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem"
+    return sql(
+        spark, _MODE_SQL, lineitem=load_table(spark, sf_dir, "lineitem")
     )
-    return spark.sql(_MODE_SQL)
 
 
 _SKEWKURT_SQL = """
@@ -2255,10 +2258,9 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-operand-order double math — m2=0 degenerates to NULL via
     NULLIF in both engines. One partial-agg shuffle on the group key;
     skew/kurt of a 100 TB fact column costs exactly a grouped SUM."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem"
+    return sql(
+        spark, _SKEWKURT_SQL, lineitem=load_table(spark, sf_dir, "lineitem")
     )
-    return spark.sql(_SKEWKURT_SQL)
 
 
 def _winsor_sql(dialect: str) -> str:
@@ -2333,10 +2335,8 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two passes over the fact column total — at 100 TB the quantile
     pass would swap to percentile_approx under the
     agg_percentile_audit contract, same plan shape."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem"
-    )
-    return spark.sql(_winsor_sql("spark"))
+    text = _winsor_sql("spark")
+    return sql(spark, text, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 #: Breadth milestones for the running-distinct census.
@@ -2428,8 +2428,8 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-to-k-types — is the engagement-breadth readout product
     analytics wants from this frame. Output is bounded by the
     milestone list, never by users."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_running_distinct_sql("spark"))
+    text = _running_distinct_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 _SKYLINE_SQL = """
@@ -2495,5 +2495,4 @@ def agg_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from one join back at the winning (price, size) points. Skyline
     sizes probed: 5/4/2 rows across the three SFs — small by nature,
     which is the point of a shortlist."""
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_SKYLINE_SQL)
+    return sql(spark, _SKYLINE_SQL, part=load_table(spark, sf_dir, "part"))

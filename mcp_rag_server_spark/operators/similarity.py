@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.numeric import duckdb_dsum
 from mcp_rag_server_spark.functions.vector import (
     EMBEDDING_DIM,
@@ -1362,7 +1362,5 @@ def sim_embedding_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     to n_total. tests/test_dirty_input_parity.py pins the census on a
     deliberately corrupted corpus AND that the gated survivors restore
     oracle parity for a representative ANN consumer."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
-    return spark.sql(_validate_census_sql("spark"))
+    text = _validate_census_sql("spark")
+    return sql(spark, text, embeddings=load_table(spark, sf_dir, "embeddings"))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.registry import register
 
 #: HLL++ relative standard deviation; bound checked at 3x rsd.
@@ -466,10 +466,8 @@ def agg_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     summing chi2_term against the chi-square critical value — the
     per-digit terms are kept so the hash pins WHERE any deviation
     lives, not just its total."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        _BENFORD_SQL.replace("AS VARCHAR", "AS STRING")
-    )
+    text = _BENFORD_SQL.replace("AS VARCHAR", "AS STRING")
+    return sql(spark, text, orders=load_table(spark, sf_dir, "orders"))
 
 
 _FPRINT_SQL = """
@@ -674,8 +672,8 @@ def agg_kmv_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     k·types rows (broadcast-sized regardless of corpus). With k=64
     the sketch is exact below 64 distinct users (the CASE branch),
     measured ~13% RSD above."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_kmv_sql("spark"))
+    text = _kmv_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Count-min geometry: d seeded hash rows of w buckets, and the number
@@ -762,8 +760,8 @@ def agg_cm_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket rows. Deterministic md5-seeded folds make both engines
     build the identical counter table, so the estimates — not just
     the bounds — hash across engines."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_cm_sql("spark"))
+    text = _cm_sql("spark")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))
 
 
 #: Join-cardinality audit: the two fixture joins estimated.
@@ -834,6 +832,7 @@ def agg_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from HLL (agg_hll_audit pins its error contract); here it is
     exact so the audit isolates the FORMULA's error, not the
     sketch's."""
-    for t in ("orders", "customer", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_JCARD_SQL)
+    tables = ("orders", "customer", "lineitem")
+    return sql(
+        spark, _JCARD_SQL, **{t: load_table(spark, sf_dir, t) for t in tables}
+    )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.numeric import dsum, duckdb_dsum
 from mcp_rag_server_spark.registry import register
 
@@ -325,12 +325,15 @@ def tj_nearest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     event's own timestamp is 'prior' — <= semantics, gap 0). One
     shuffle on user_id; the tie and the gap are exact integer micros
     arithmetic. The %100 sample sits above the windows."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    sql = _nearest_sql("spark").replace("epoch_us(", "unix_micros(")
+    text = _nearest_sql("spark").replace("epoch_us(", "unix_micros(")
     # Spark has no // integer-division operator
-    sql = sql.replace("// 1000000", "DIV 1000000")
-    return spark.sql(sql)
+    text = text.replace("// 1000000", "DIV 1000000")
+    return sql(
+        spark,
+        text,
+        events=load_table(spark, sf_dir, "events"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 #: Interval half-width for the union op: each event claims
@@ -416,7 +419,5 @@ def tj_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries — and the hashed coverage sums — are engine-identical.
     The sentinel -1 is safe: epoch micros of every fixture ts is
     positive."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(
-        _interval_union_sql().replace("epoch_us(", "unix_micros(")
-    )
+    text = _interval_union_sql().replace("epoch_us(", "unix_micros(")
+    return sql(spark, text, events=load_table(spark, sf_dir, "events"))

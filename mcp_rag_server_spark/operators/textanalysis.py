@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.numeric import dsum, duckdb_dsum
 from mcp_rag_server_spark.functions.text import (
     duckdb_word_shingles,
@@ -970,10 +970,8 @@ def ta_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     usual decimal partial sum. One narrow scan + one bounded-key
     aggregation; the regex work is the same whole-stage-codegen shape
     as ta_gopher_rules' rule features."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_fk_sql("spark"))
+    text = _fk_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Code-detection lexicon and thresholds.
@@ -1039,10 +1037,8 @@ def ta_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     census — is the real filter stage, and both engines replay it
     token for token. Note the symbol-class regex doubles its braces
     for Python's f-string, not for the regex engines."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_code_sql("spark"))
+    text = _code_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 def _confusion_sql(dialect: str) -> str:
@@ -1104,10 +1100,8 @@ def ta_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-size join on the label; at 100 TB the matrix is still
     |labels|×|classes| rows. Cell counts are exact integers; row
     fractions one rounded division each."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_confusion_sql("spark"))
+    text = _confusion_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: BPE training: unrolled merge iterations.
@@ -1118,7 +1112,7 @@ def _bpe_sql(
     dialect: str,
     keep_word: bool = False,
     final_select: str | None = None,
-    s0_view: str | None = None,
+    s0_bound: bool = False,
 ) -> str:
     """Unrolled distributed BPE merge learning (Sennrich et al.
     ACL'16): word-frequency table → space-separated symbol strings →
@@ -1129,10 +1123,11 @@ def _bpe_sql(
     threads the word column through the symbol chain so ``s{N}`` is a
     word→encoding dictionary (used by ``ta_bpe_apply``; the pair
     aggregation ignores the extra column, so the learned merges are
-    identical either way). ``s0_view`` (spark side, r14) replaces the
-    words/s0 CTEs with a reference to a pre-checkpointed view so the
-    CTE re-inlining above it stays vocabulary-cost — the SQL from s0
-    up is byte-identical either way."""
+    identical either way). ``s0_bound`` (spark side, r14) drops the
+    words/s0 CTEs: the caller binds ``s0`` to a pre-checkpointed frame
+    (``catalog.sql`` splices it into this WITH list) so the CTE
+    re-inlining above it stays vocabulary-cost — the SQL from s0 up is
+    byte-identical either way."""
     if dialect == "spark":
         chars = "array_join(split(word, ''), ' ')"
 
@@ -1198,10 +1193,12 @@ c{i} AS (
     )
     s0_cols = "word, freq" if keep_word else "freq"
     final = final_select or f"{selects}\nORDER BY merge_rank"
-    if s0_view is not None:
-        head = f"WITH s0 AS (SELECT * FROM {s0_view})"
-    else:
-        head = f"""WITH words AS (
+    if s0_bound:
+        return f"""
+WITH{",".join(iters)}
+{final}
+"""
+    head = f"""WITH words AS (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
   FROM (SELECT {ex}({_bpe_split(dialect, "text")}) AS word FROM documents)
   WHERE word <> ''
@@ -1229,7 +1226,7 @@ def _bpe_split(dialect: str, col: str) -> str:
 # fans out multiplicatively and the formatted plan of ta_bpe_apply
 # held EIGHTEEN corpus scans at BPE_ITERS=3 (plans/r14/ta_bpe_apply_
 # before.txt). Only the word-frequency stage is corpus-cost, so ONLY
-# it is checkpointed (one eager localCheckpoint, view ``bpe_s0_v``);
+# it is checkpointed (one eager localCheckpoint, bound as ``s0``);
 # the merge chain above it stays one statement — its re-inlined
 # copies are vocabulary-sized, and Spark runs the independent
 # subtrees as CONCURRENT stages, which a fully-staged sequential
@@ -1253,11 +1250,13 @@ WITH words AS (
 SELECT {s0_cols}, {chars} || ' </w>' AS sym FROM words"""
 
 
-def _bpe_checkpoint_s0(spark: SparkSession, keep_word: bool) -> None:
-    """Materialize words+s0 once under view ``bpe_s0_v``."""
-    spark.sql(_bpe_words_s0_sql(keep_word)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("bpe_s0_v")
+def _bpe_checkpoint_s0(
+    spark: SparkSession, docs: DataFrame, keep_word: bool
+) -> DataFrame:
+    """Materialize words+s0 of ``docs`` once."""
+    return sql(
+        spark, _bpe_words_s0_sql(keep_word), documents=docs
+    ).localCheckpoint(eager=True)
 
 
 @register(
@@ -1286,17 +1285,15 @@ def ta_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary cost, not corpus cost — the reason every production
     BPE trainer works from word counts. r14: the corpus-cost
     words/s0 stage is checkpointed once (``_bpe_checkpoint_s0``) and
-    the merge chain reads it via ``s0_view`` — the re-inlined CTE
+    the merge chain reads it as the bound ``s0`` — the re-inlined CTE
     copies above s0 are vocabulary-sized and stay one concurrent
     statement."""
-    spread_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    ).createOrReplaceTempView("documents")
-    _bpe_checkpoint_s0(spark, keep_word=False)
-    return spark.sql(_bpe_sql("spark", s0_view="bpe_s0_v"))
+    docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    s0 = _bpe_checkpoint_s0(spark, docs, keep_word=False)
+    return sql(spark, _bpe_sql("spark", s0_bound=True), s0=s0)
 
 
-def _bpe_apply_sql(dialect: str, s0_view: str | None = None) -> str:
+def _bpe_apply_sql(dialect: str, s0_bound: bool = False) -> str:
     """Encode the corpus with the merges ``ta_bpe_train`` learns: the
     word-keyed symbol chain (keep_word=True) IS the word→encoding
     dictionary, so application is a word join, never a per-token
@@ -1332,7 +1329,7 @@ FROM docw d JOIN enc e ON e.word = d.word
 GROUP BY d.source
 ORDER BY d.source"""
     return _bpe_sql(
-        dialect, keep_word=True, final_select=final, s0_view=s0_view
+        dialect, keep_word=True, final_select=final, s0_bound=s0_bound
     )
 
 
@@ -1364,14 +1361,14 @@ def ta_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + a source-keyed aggregate. r14: the corpus-cost words/s0
     stage is checkpointed once (the single-statement form re-inlined
     it into EIGHTEEN corpus scans — plans/r14/ta_bpe_apply_before
-    .txt) and the registered view is spread_scan'd on doc_id so the
+    .txt) and the bound corpus is spread_scan'd on doc_id so the
     two remaining corpus explodes (word counts, docw) run parallel
     on single-row-group fixture layouts."""
-    spread_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    ).createOrReplaceTempView("documents")
-    _bpe_checkpoint_s0(spark, keep_word=True)
-    return spark.sql(_bpe_apply_sql("spark", s0_view="bpe_s0_v"))
+    docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    s0 = _bpe_checkpoint_s0(spark, docs, keep_word=True)
+    return sql(
+        spark, _bpe_apply_sql("spark", s0_bound=True), s0=s0, documents=docs
+    )
 
 
 #: Winnowing parameters: k-gram size (tokens) and window width (number
@@ -1490,15 +1487,13 @@ def ta_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     any drift in fold, packing, or window framing fails the driver
     hash. Shape: one doc-keyed window pass for k-grams, one for the
     running min, one distinct + aggregate — all on the same doc_id
-    shuffle; nothing global, nothing quadratic. r14: the registered
-    view is spread_scan'd on doc_id so the tokenize/explode/md5 stage
+    shuffle; nothing global, nothing quadratic. r14: the bound corpus
+    is spread_scan'd on doc_id so the tokenize/explode/md5 stage
     parallelizes on single-row-group fixture layouts — the added
     exchange is the doc_id one the k-gram window needed anyway
     (measured x0.68 interleaved A/B at sf0.1)."""
-    spread_scan(
-        load_table(spark, sf_dir, "documents"), "doc_id"
-    ).createOrReplaceTempView("documents")
-    return spark.sql(_winnow_sql("spark"))
+    docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    return sql(spark, _winnow_sql("spark"), documents=docs)
 
 
 @register(
@@ -1641,10 +1636,8 @@ def ta_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows). One narrow scan computes keys; the per-source top-k is
     a keyed rank window; ln of an exact integer ratio is
     engine-identical IEEE, so even the rounded key column hashes."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_es_sample_sql("spark"))
+    text = _es_sample_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 _LEN_DRIFT_SQL = """
@@ -1726,10 +1719,9 @@ def ta_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDF is (cum_all − cum_src)/(n_all − n_src) — exact integers until
     the final rounded division. Same 1.36·sqrt critical value (with
     the double-cast product guard) as ev_ks_test."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
+    return sql(
+        spark, _LEN_DRIFT_SQL, documents=load_table(spark, sf_dir, "documents")
     )
-    return spark.sql(_LEN_DRIFT_SQL)
 
 
 #: Needles for the trigram-index substring-search audit: two present in
@@ -1841,10 +1833,8 @@ def ta_trigram_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     for substring match — no false negatives, ever), while
     n_false_pos stays honest about precision. The absent needle
     exercises the empty-result path through the same plan."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_trgm_sql("spark"))
+    text = _trgm_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Collocation mining: minimum pair count and the result cap.
@@ -1915,10 +1905,8 @@ def ta_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     6, and the rounded value is the sort key with (w1, w2) breaking
     ties; TakeOrdered carries k rows to the driver, never the
     vocabulary."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_pmi_sql("spark"))
+    text = _pmi_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: TextRank: damping, unrolled iterations, and the keyword cap.
@@ -2009,10 +1997,8 @@ def ta_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, final rank rounded 6 as the sort key with the word breaking
     ties. Symmetrized adjacency (each bigram contributes both
     directions) makes wtot the weighted degree, as in the paper."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_textrank_sql("spark"))
+    text = _textrank_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: DoReMi-lite: multiplicative-weights step size on the excess-loss
@@ -2101,10 +2087,8 @@ def ta_doremi_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_mutual_information. Against ta_mix_temperature (which flattens
     by SIZE alone), this is the loss-aware counterpart; both are one
     source-keyed aggregate over corpus-sized input."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_doremi_sql("spark"))
+    text = _doremi_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Feature-hashing audit dimensions (the hashing-trick width sweep).
@@ -2170,10 +2154,8 @@ def ta_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, token) explode (shared) + a doc-keyed aggregate; the
     widths are unrolled columns of the same scan, not three passes
     over the corpus."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_feature_hash_sql("spark"))
+    text = _feature_hash_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 #: Kneser-Ney absolute discount.
@@ -2257,7 +2239,5 @@ def ta_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs no max()), surprisal rounded 8 and decimal-summed per doc.
     Same output shape as the add-1 baseline so the two models'
     per-doc perplexities compare row for row."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    return spark.sql(_kn_sql("spark"))
+    text = _kn_sql("spark")
+    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))

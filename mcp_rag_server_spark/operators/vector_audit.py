@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.vector import (
     cosine_score,
     duckdb_cosine,
@@ -1104,7 +1104,7 @@ def _frontier_hits_sql(dialect: str, staged: bool = False, width: int = 32) -> s
     (truth), SQ8 dequantized cosine, JL-16 projected cosine, and 1-bit
     sign/Hamming, all ranked against the exact top-{CF_K} — reduced to
     ONE row of hit counts. ``staged=True`` (Spark execution) reads the
-    JL projection from the checkpointed ``cf_proj_v`` view instead of
+    JL projection from the checkpointed ``cf_proj_v`` relation instead of
     inlining it."""
     from mcp_rag_server_spark.functions.vector import cosine_sql
     from mcp_rag_server_spark.operators.late_interaction import (
@@ -1161,7 +1161,7 @@ proj AS (
         # Spark execution path: `proj` is consumed four times (pq, pv,
         # and twice via pnorm); as an inline CTE each consumer re-ran
         # the whole 2M-row sign-projection join. The operator
-        # localCheckpoints it as cf_proj_v first.
+        # localCheckpoints it and binds it as cf_proj_v.
         proj_block = "proj AS (SELECT * FROM cf_proj_v)"
     # The sf fixtures are single-row-group parquet (BASELINE.md caveat)
     # — without a re-spread the corpus-side HOF cosine/pack stages run
@@ -1328,21 +1328,23 @@ def sim_compression_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv, twice via pnorm) and the 1-row hit-count core (consumed 4×
     by the ladder's union branches). 7.7 s → ~2.5 s steady at
     sf0.1."""
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    width = fanout_width(spark)
     # r15: sizing these hints like spread_scan (width 16 for this
     # table) was tried and MEASURED x1.12 SLOWER interleaved — unlike
     # the table's other consumers, each corpus row here fans into
     # CF_QUERIES pair-folds (6 HOF folds × 10 queries), so per-task
     # work is an order heavier and full cluster width is the optimum.
     # Full width stays (OPTIMIZATION_r15.md frontier section).
-    spark.sql(_frontier_proj_sql(width=fanout_width(spark))).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("cf_proj_v")
-    spark.sql(
-        _frontier_hits_sql("spark", staged=True, width=fanout_width(spark))
-    ).localCheckpoint(eager=True).createOrReplaceTempView("cf_hits_v")
-    return spark.sql(
-        _frontier_ladder_sql("SELECT * FROM cf_hits_v")
+    proj = sql(
+        spark, _frontier_proj_sql(width=width), embeddings=emb
+    ).localCheckpoint(eager=True)
+    hits = sql(
+        spark,
+        _frontier_hits_sql("spark", staged=True, width=width),
+        embeddings=emb,
+        cf_proj_v=proj,
+    ).localCheckpoint(eager=True)
+    return sql(
+        spark, _frontier_ladder_sql("SELECT * FROM cf_hits_v"), cf_hits_v=hits
     )

@@ -25,7 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, sql
 from mcp_rag_server_spark.functions.vector import (
     cosine_score,
     duckdb_cosine,
@@ -244,10 +244,9 @@ def sim_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_score("embedding", "q_emb").alias("score"),
         )
     )
-    scored.createOrReplaceTempView("mp_scored_src")
-    sql = _mp_sql(
+    text = _mp_sql(
         "spark",
         "q AS (SELECT MAX(qb) AS qb FROM mp_scored_src), "
         "scored AS (SELECT vec_id, bucket, score FROM mp_scored_src)",
     )
-    return spark.sql(sql)
+    return sql(spark, text, mp_scored_src=scored)

@@ -122,21 +122,6 @@ def _scan_input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def spread_width(df: DataFrame) -> int:
-    """The width :func:`spread_scan` would pick for ``df`` — for SQL
-    REPARTITION-hint call sites (mid-statement spreads that cannot go
-    through spread_scan). Same sizing: one task per
-    :data:`_SPREAD_TASK_BYTES` of on-disk scan input, floored at 8,
-    capped at the cluster width; full cluster width when the input is
-    not a statable file scan."""
-    spark = df.sparkSession
-    cap = fanout_width(spark)
-    nbytes = _scan_input_bytes(df)
-    if nbytes is None:
-        return cap
-    return min(cap, max(8, -(-nbytes // _SPREAD_TASK_BYTES)))
-
-
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     """Scale-adaptive de-collapse of a scan whose FILE LAYOUT yields
     fewer tasks than the cluster has cores (optimization guide §2.5

@@ -129,3 +129,26 @@ def test_cache_entries_bounded_across_reinvocation(spark):
     assert _cached_bytes(spark) < 64 * 1024 * 1024, _cached_bytes(spark)
     spark.catalog.clearCache()
     assert _cache_entries(spark) == 0
+
+
+def test_bound_cached_frame_stays_cached(spark):
+    """A ``.cache()``d frame bound into a statement by catalog.sql is
+    still a CacheManager entry afterwards, and the statement reads it
+    from memory. (``spark.sql(text, x=df)`` fails this: its
+    ``spark.catalog.dropTempView`` cleanup uncaches the frame.)"""
+    from mcp_rag_server_spark.catalog import load_table, sql
+
+    spark.catalog.clearCache()
+    docs = load_table(spark, SF, "documents").select("doc_id", "source")
+    docs.cache()
+    before = _cache_entries(spark)
+    assert before == 1
+    df = sql(
+        spark, "SELECT source, COUNT(*) AS n FROM d GROUP BY source", d=docs
+    )
+    assert _cache_entries(spark) == before
+    assert "InMemoryRelation" in (
+        df._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert df.count() > 0
+    spark.catalog.clearCache()

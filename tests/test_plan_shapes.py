@@ -2132,20 +2132,24 @@ def test_agreement_simhash_count_is_histogram_hash_join(spark):
     stays Python/cartesian-free."""
     import re
 
-    from mcp_rag_server_spark.catalog import load_table
+    from mcp_rag_server_spark.catalog import load_table, sql
     from mcp_rag_server_spark.operators.dedup import (
         _agreement_counts_sql,
         _simhash_sql,
     )
 
-    load_table(spark, SF, "documents").createOrReplaceTempView("documents")
-    spark.sql(_simhash_sql("spark")).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("simhash_v")
-    spark.range(0).selectExpr(
-        "id AS doc_a", "id AS doc_b", "'' AS source", "0.0 AS jaccard"
-    ).createOrReplaceTempView("lsh_pairs_v")
-    core = spark.sql(_agreement_counts_sql())
+    docs = load_table(spark, SF, "documents")
+    core = sql(
+        spark,
+        _agreement_counts_sql(),
+        documents=docs,
+        simhash_v=sql(
+            spark, _simhash_sql("spark"), documents=docs
+        ).localCheckpoint(eager=True),
+        lsh_pairs_v=spark.range(0).selectExpr(
+            "id AS doc_a", "id AS doc_b", "'' AS source", "0.0 AS jaccard"
+        ),
+    )
     plan = plan_string(core)
     stripped = re.sub(r"#\d+L?", "", plan)
     assert "EvalPython" not in plan
@@ -2163,19 +2167,21 @@ def test_frontier_windows_are_query_keyed(spark):
     localCheckpoints it, so the final plan only shows the ladder)."""
     import re
 
-    from mcp_rag_server_spark.catalog import load_table
+    from mcp_rag_server_spark.catalog import load_table, sql
     from mcp_rag_server_spark.operators.vector_audit import (
         _frontier_hits_sql,
         _frontier_proj_sql,
     )
 
-    load_table(spark, SF, "embeddings").createOrReplaceTempView(
-        "embeddings"
+    emb = load_table(spark, SF, "embeddings")
+    core = sql(
+        spark,
+        _frontier_hits_sql("spark", staged=True),
+        embeddings=emb,
+        cf_proj_v=sql(
+            spark, _frontier_proj_sql(), embeddings=emb
+        ).localCheckpoint(eager=True),
     )
-    spark.sql(_frontier_proj_sql()).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("cf_proj_v")
-    core = spark.sql(_frontier_hits_sql("spark", staged=True))
     plan = plan_string(core)
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from mcp_rag_server_spark.registry import DRIVER_PRIORITY, load_all
 
 from conftest import SF001
@@ -87,21 +89,45 @@ def test_bench_set_is_stable():
     )
 
 
-def test_no_session_conf_mutation_outside_session_module():
-    """Session conf mutation lives ONLY in session.py (VERDICT r2 item:
-    per-call conf.set is racy under concurrency and hides session
-    requirements from the driver-session wrapper)."""
+@pytest.mark.parametrize(
+    "patterns, allowed",
+    [
+        # stateful.py holds a SCOPED override (set → try →
+        # finally-restore) of the state-store provider around one
+        # streaming query — a temporary override with cleanup, not a
+        # leaked session mutation.
+        pytest.param(
+            (".conf.set(",), {"session.py", "stateful.py"}, id="conf"
+        ),
+        # catalog.sql binds a statement's relations under uuid names and
+        # drops them before returning; anything else registering a
+        # view rebinds a session-global name another statement reads.
+        pytest.param(
+            (
+                ".createOrReplaceTempView(",
+                ".createTempView(",
+                ".createGlobalTempView(",
+            ),
+            {"catalog.py"},
+            id="temp_view",
+        ),
+    ],
+)
+def test_no_session_conf_mutation_outside_session_module(patterns, allowed):
+    """Session-global state is mutated ONLY in its owning module:
+    conf in session.py (VERDICT r2 item: per-call conf.set is racy
+    under concurrency and hides session requirements from the
+    driver-session wrapper), temp views in catalog.py (a rebound view
+    name makes a concurrent statement read another query's
+    relation)."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "mcp_rag_server_spark"
-    # stateful.py holds a SCOPED override (set → try → finally-restore)
-    # of the state-store provider around one streaming query — a
-    # temporary override with cleanup, not a leaked session mutation.
-    allowed = {"session.py", "stateful.py"}
     offenders = [
         str(p.relative_to(pkg.parent))
         for p in pkg.rglob("*.py")
-        if p.name not in allowed and ".conf.set(" in p.read_text()
+        if p.name not in allowed
+        and any(pat in p.read_text() for pat in patterns)
     ]
     assert offenders == [], offenders
 

@@ -1,14 +1,16 @@
 """Round-15 pin: the per-session relation memo in catalog.load_table.
 
 load_table memoizes the RESOLVED RELATION (a lazy DataFrame handle)
-per session, keyed on (path, size, mtime_ns) — metadata caching only,
+per session, one entry per path stamped with (size, mtime_ns) —
+metadata caching only,
 the session-level listing/footer reuse guide §6 endorses. These tests
 pin the contract that makes it safe:
 
 1. HIT: the same (session, path) returns the same DataFrame object —
    no repeated footer/listing resolution.
 2. INVALIDATION: a file rewritten in place (mtime or size moved) is
-   re-resolved, so no stale relation can survive a fixture rewrite.
+   re-resolved, so no stale relation can survive a fixture rewrite,
+   and the new relation REPLACES the old entry (bounded memo).
 3. ISOLATION: different sf_dirs resolve to different relations.
 4. NO DATA CACHING: the memoized frame is not persisted — its storage
    level is NONE, so every action still scans the parquet bytes.
@@ -41,6 +43,18 @@ def test_memo_invalidates_on_rewrite(spark, tmp_path):
     b = load_table(spark, d, "orders")
     assert b is not a
     assert b.count() != n_before
+
+
+def test_memo_keeps_one_entry_per_rewritten_path(spark, tmp_path):
+    path = f"{tmp_path}/orders.parquet"
+    for src in (SF0001, SF001, SF0001):  # the copy, then two rewrites
+        shutil.copy(f"{src}/orders.parquet", path)
+        # step the mtime so the same-size third copy is a visible change
+        os.utime(path, ns=(os.stat(path).st_mtime_ns + 10**9,) * 2)
+        rows = load_table(spark, str(tmp_path), "orders").count()
+        assert rows == spark.read.parquet(f"{src}/orders.parquet").count()
+    memo = spark._graft_relation_cache
+    assert [k for k in memo if str(tmp_path) in str(k)] == [path]
 
 
 def test_memo_is_per_directory(spark):
