@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import re
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,12 +42,69 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _local_path(uri: str) -> str | None:
+    """The local filesystem path of a plain path or ``file:`` URI;
+    None for any other scheme."""
+    parsed = urlparse(uri)
+    if parsed.scheme == "file":
+        return unquote(parsed.path)
+    return None if parsed.scheme else uri
+
+
+def _data_files(root: str) -> list[str]:
+    """``root`` itself, or the unhidden files under the directory."""
+    if not os.path.isdir(root):
+        return [root]
+    found = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if d[0] not in "_."]
+        found += [
+            os.path.join(dirpath, f) for f in filenames if f[0] not in "_."
+        ]
+    return found
+
+
+def input_files(
+    source: str | DataFrame,
+) -> tuple[tuple[str, int, int], ...] | None:
+    """``(path, size, mtime_ns)`` of every data file Spark reads for
+    ``source`` — a path, or a DataFrame whose lineage scans files — in
+    path order; None when a file is not local or cannot be stat'd.
+
+    A directory is walked under Spark's hidden-file rule: names that
+    start with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` checksums,
+    ``_temporary`` staging) are skipped. A DataFrame reports the files
+    its scan listed (``inputFiles()``); a lineage with no file scan
+    (checkpointed, in-memory) gives ``()``. This is the one place the
+    package lists or stats files, so "which files back this table and
+    did they change" has one answer.
+
+    As a change stamp it has the filesystem's limits: a rewrite that
+    keeps every file's size and lands inside the mtime granularity
+    (1 s on some network and older filesystems) is not seen.
+    """
+    if isinstance(source, DataFrame):
+        paths = [_local_path(uri) for uri in source.inputFiles()]
+    else:
+        root = _local_path(source)
+        paths = [root] if root is None else _data_files(root)
+    if None in paths:
+        return None
+    try:
+        stats = [os.stat(path) for path in paths]
+    except OSError:
+        return None
+    return tuple(
+        sorted((p, st.st_size, st.st_mtime_ns) for p, st in zip(paths, stats))
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Column pruning / filter pushdown happen
     automatically because this is a plain parquet scan.
 
     The resolved relation is memoized PER SESSION, one entry per path,
-    stamped with the file's (size, mtime_ns): ``spark.read.parquet``
+    stamped with :func:`input_files` of the path: ``spark.read.parquet``
     pays ~100-160 ms of driver-side work per call (directory listing +
     parquet footer schema read + relation resolution — r15
     measurement), and the operator suite re-reads the same handful of
@@ -55,9 +113,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     production (guide §6: session file-listing caches exist precisely
     to avoid repeated listings of an unchanged table) — every action
     still scans the parquet bytes; no row, aggregate, or query result
-    is ever stored. A fixture rewritten in place (size or mtime moved)
-    replaces its path's entry, so the memo never holds more than one
-    relation per path, and the memo dies with the session object.
+    is ever stored. A fixture rewritten in place (any data file added,
+    removed or re-stamped) replaces its path's entry, so the memo never
+    holds more than one relation per path, and the memo dies with the
+    session object.
 
     The returned handle is SHARED by every caller in the session:
     callers never ``persist()``/``cache()``/``unpersist()`` it (that
@@ -67,11 +126,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = table_path(sf_dir, name)
-    try:
-        st = os.stat(path)
-        stamp = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        stamp = None  # non-local / vanished path: fall through uncached
+    stamp = input_files(path)  # None: non-local / vanished, uncached
     cache: dict | None = None
     if stamp is not None:
         cache = getattr(spark, "_graft_relation_cache", None)

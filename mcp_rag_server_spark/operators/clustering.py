@@ -24,12 +24,10 @@ rounded distances.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import input_files, load_table
 from mcp_rag_server_spark.functions.vector import (
     valid_embedding,
     valid_embedding_sql,
@@ -451,10 +449,11 @@ def n_cells(n_vectors: int) -> int:
 #: Plan-only tooling (plan_lint / gen_plans) and multi-query sessions
 #: construct the probe plan many times over the SAME read-only parquet
 #: source — memoizing makes the count a once-per-source cost. Key =
-#: input file list PLUS each local file's (size, mtime), so both a
-#: rewritten directory (fresh part filenames) AND an in-place
+#: :func:`~mcp_rag_server_spark.catalog.input_files` of the frame, so
+#: both a rewritten directory (fresh part filenames) AND an in-place
 #: single-file regeneration (same path, new stat — the round-4
-#: fixture-refresh precedent) get fresh entries. The memo is only
+#: fixture-refresh precedent) get fresh entries, and a non-local source
+#: (no stat to see an overwrite by) is never memoized. The memo is only
 #: consulted for bare scans (no Filter/Join/Aggregate/Limit/Sample in
 #: the analyzed plan): a contract-violating filtered ``emb`` stays
 #: locally wrong instead of poisoning later full-table calls.
@@ -490,28 +489,11 @@ def _plan_nodes(plan: str) -> list[str]:
 
 
 def _corpus_count(df: DataFrame) -> int:
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(n not in _COUNT_SAFE_NODES for n in _plan_nodes(plan)):
-            return df.count()
-        files = sorted(df.inputFiles())
-        key_parts = []
-        for uri in files:
-            if not uri.startswith("file://"):
-                # Non-local scheme: no stat available, so an in-place
-                # overwrite would be invisible to the key (and read
-                # format/options aren't in the key either) — skip the
-                # memo rather than cache a stale count (advice r10).
-                return df.count()
-            try:
-                st = os.stat(uri[7:])
-            except OSError:
-                return df.count()
-            key_parts.append((uri, st.st_size, st.st_mtime_ns))
-        key = tuple(key_parts)
-    except Exception:  # non-file-backed plans (local relations etc.)
-        key = ()
-    if not key:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    if any(n not in _COUNT_SAFE_NODES for n in _plan_nodes(plan)):
+        return df.count()
+    key = input_files(df)
+    if not key:  # no local file scan to stamp the count with
         return df.count()
     if key not in _COUNT_MEMO:
         _COUNT_MEMO[key] = df.count()

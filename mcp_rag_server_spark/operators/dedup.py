@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2736,15 +2737,21 @@ def dd_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # neither reads the other), so materialize them as overlapping
     # jobs (guide §2.6): the second job's tasks back-fill the executor
     # slots the first job's straggler stages leave idle. FIFO
-    # scheduling keeps job 1 first-priority; values are unchanged.
+    # scheduling keeps job 1 first-priority; values are unchanged. The
+    # pool threads inherit the caller's local properties (job group).
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
         lsh_f = pool.submit(
-            lambda: _jaccard_pair_edges(docs).localCheckpoint(eager=True)
+            inherit(
+                lambda: _jaccard_pair_edges(docs).localCheckpoint(eager=True)
+            )
         )
         sim_f = pool.submit(
-            lambda: sql(
-                spark, _simhash_sql("spark"), documents=docs
-            ).localCheckpoint(eager=True)
+            inherit(
+                lambda: sql(
+                    spark, _simhash_sql("spark"), documents=docs
+                ).localCheckpoint(eager=True)
+            )
         )
         lsh_pairs, simhash = lsh_f.result(), sim_f.result()
     stats = sql(

@@ -497,13 +497,19 @@ def tpch_q21_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `multi_sup` shares no lineage with `late`, so the two
     # checkpoints materialize as overlapping FIFO jobs (guide §2.6).
     # r14 interleaved A/B: x0.90; both frames are aggregate-sized
-    # (order-key rows), never lineitem-sized.
+    # (order-key rows), never lineitem-sized. The pool threads inherit
+    # the caller's local properties, so both jobs carry its job group.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _late_f = _pool.submit(lambda: late.localCheckpoint(eager=True))
+        _late_f = _pool.submit(
+            inherit(lambda: late.localCheckpoint(eager=True))
+        )
         _msup_f = _pool.submit(
-            lambda: multi_sup.localCheckpoint(eager=True)
+            inherit(lambda: multi_sup.localCheckpoint(eager=True))
         )
         late = _late_f.result()
         multi_sup = _msup_f.result()

@@ -18,9 +18,10 @@ tests/test_cache_lifecycle.py, where the contract is spelled out.
 from __future__ import annotations
 
 import os
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mcp_rag_server_spark.catalog import input_files
 
 #: Shuffle partitions default. On the test rig we size to the CPU count;
 #: on a real cluster this is overridden (rule of thumb: 2-3x total cores,
@@ -78,48 +79,8 @@ def fanout_width(spark: SparkSession, floor: int = 8) -> int:
 #: (w32 +26%/+33% slower on sim_kmeans_refine / sim_pq_adc_topk),
 #: lineitem 10.8 MB → 32 best. Spread tasks are compute-bound
 #: (explodes, md5/HOF folds over compressed columnar input), so the
-#: per-task byte target is far below the 128 MB scan-split target;
-#: parameterized for production re-tuning.
-_SPREAD_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", str(50 * 1024))
-)
-
-
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """A byte-valued session conf, tolerating k/m/g-suffixed forms."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    if raw.endswith("b"):
-        raw = raw[:-1]
-    if raw and raw[-1] in "kmgt":
-        mult = 1024 ** ("kmgt".index(raw[-1]) + 1)
-        raw = raw[:-1]
-    try:
-        return int(float(raw) * mult)
-    except ValueError:
-        return default
-
-
-def _scan_input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of the files feeding ``df``'s scan, or None
-    when the lineage has no statable file source. Pure file-listing —
-    no Spark job runs."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        path = uri
-        if path.startswith("file:"):
-            path = unquote(urlparse(path).path)
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
+#: per-task byte target is far below the 128 MB scan-split target.
+_SPREAD_TASK_BYTES = 50 * 1024
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
@@ -136,10 +97,11 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     helper only restores it where the layout denies it:
 
       - the spread fires only in the DEFICIT regime — when the scan's
-        estimated split count (on-disk bytes over
-        ``spark.sql.files.maxPartitionBytes``, the same quantity the
-        scan's file-split math uses) is below the cluster width — so
-        a production multi-split layout makes it a no-op;
+        estimated split count (on-disk bytes of
+        :func:`~mcp_rag_server_spark.catalog.input_files` over the
+        session's ``spark.sql.files.maxPartitionBytes``, the value the
+        scan's own file-split math reads) is below the cluster width —
+        so a production multi-split layout makes it a no-op;
       - the width is SIZE-AWARE (r15): one task per
         :data:`_SPREAD_TASK_BYTES` of input, floored at 8 and capped
         at the cluster width, so a small input is not fanned into
@@ -153,8 +115,10 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
         degradation);
       - a frame whose lineage ALREADY carries a RepartitionByExpression
         (a caller upstream spread it) is returned untouched: no double
-        exchange, and no ``.rdd`` inspection that would finalize an
-        AQE plan and run the upstream shuffle at construction time;
+        exchange;
+      - a lineage with no local file scan (checkpointed, in-memory,
+        or a non-``file:`` URI) has no byte size to go by and is
+        returned untouched; no Spark job runs to size anything;
       - keyed on the downstream window/groupBy key where one exists,
         the added exchange REPLACES the one EnsureRequirements would
         insert later (same total shuffle count, but it now carries the
@@ -175,21 +139,14 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     plan = df._jdf.queryExecution().analyzed().toString()
     if "RepartitionByExpression" in plan:
         return df
-    nbytes = _scan_input_bytes(df)
-    if nbytes is None:
-        # No statable file scan (checkpointed / in-memory lineage):
-        # the layout is whatever the materialization produced; measure
-        # it directly (safe here — no file-backed AQE exchange below).
-        if df.rdd.getNumPartitions() >= cap:
-            return df
-        width = cap
-    else:
-        max_split = _conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
-        )
-        if -(-nbytes // max_split) >= cap:
-            return df
-        width = min(cap, max(8, -(-nbytes // _SPREAD_TASK_BYTES)))
+    files = input_files(df)
+    if not files:
+        return df
+    nbytes = sum(size for _, size, _ in files)
+    conf = spark._jsparkSession.sessionState().conf()
+    if -(-nbytes // conf.filesMaxPartitionBytes()) >= cap:
+        return df
+    width = min(cap, max(8, -(-nbytes // _SPREAD_TASK_BYTES)))
     return df.repartition(width, *keys)
 
 

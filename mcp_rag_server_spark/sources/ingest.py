@@ -53,6 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from mcp_rag_server_spark.catalog import input_files
 from mcp_rag_server_spark.functions.ids import dense_chunk_ids
 from mcp_rag_server_spark.functions.text import chunk_array
 from mcp_rag_server_spark.sources.files import (
@@ -340,14 +341,6 @@ def _apply_delta(
     return survivors, _assign_ids(_chunks(texts, params), start_id=next_id)
 
 
-def _parquet_file_count(data_dir: str) -> int:
-    return sum(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(data_dir)
-        for f in files
-    )
-
-
 def build(
     spark: SparkSession,
     root: str,
@@ -397,7 +390,7 @@ def _refresh_flat(
     # write to a sibling dir first and swap — never collect() the
     # table through the driver (it may be 100 TB).
     next_dir = cur_dir + ".next"
-    chunks.coalesce(max(1, _parquet_file_count(cur_dir))).write.mode(
+    chunks.coalesce(max(1, len(input_files(cur_dir)))).write.mode(
         "overwrite"
     ).parquet(next_dir)
     shutil.rmtree(cur_dir, ignore_errors=True)
@@ -475,12 +468,7 @@ def compact_store(
     data_dir = os.path.join(store_path, "chunks")
     _recover_interrupted_swap(data_dir)
     df = spark.read.parquet(data_dir)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(data_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    total_bytes = sum(size for _, size, _ in input_files(data_dir))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     staged = data_dir + ".compact.tmp"
     writer = (
@@ -508,4 +496,4 @@ def compact_store(
     # Same stale-FileStatusCache hazard as build(): a same-session reader
     # that already listed the store would otherwise see deleted files.
     spark.catalog.refreshByPath(data_dir)
-    return _parquet_file_count(data_dir)
+    return len(input_files(data_dir))

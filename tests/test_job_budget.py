@@ -1,9 +1,11 @@
 """Job budget of the warm ``build()`` path: the refresh must cost what
-its delta costs, not what the corpus costs.
+its delta costs, not what the corpus costs; and job attribution of
+construction-time jobs run on pool threads.
 
-Jobs are counted with ``setJobGroup`` + ``statusTracker()`` (both work
-with ``spark.ui.enabled=false``). The ceilings are the counts of the
-delta-proportional refresh on this corpus at ``local[8]``; a regression
+Jobs are counted by ``conftest.count_jobs`` (``setJobGroup`` +
+``statusTracker()``, both work with ``spark.ui.enabled=false``). The
+ceilings are the counts of the delta-proportional refresh on this
+corpus at ``local[8]``; a regression
 toward reading every body or rewriting the whole store on each build
 (a no-op reopen ran 20 jobs flat and 9 bucketed, a one-file refresh 23
 and 31, before it) fails here.
@@ -12,32 +14,18 @@ and 31, before it) fails here.
 from __future__ import annotations
 
 import dataclasses
-import itertools
 import os
 
 import pytest
+from conftest import SF0001, count_jobs
 
+from mcp_rag_server_spark.registry import load_all
 from mcp_rag_server_spark.sources.ingest import IngestParams, build
 
 PARAMS = IngestParams(chunk_size=200, chunk_overlap=40, allowed_ext=("md", "py"))
 
 #: (no-op reopen, one-file refresh) job ceilings per store layout.
 CEILINGS = {0: (4, 11), 4: (4, 12)}
-
-_groups = itertools.count()
-
-
-def count_jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"job-budget-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # Job events reach the status store through the async listener bus.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def parquet_files(store: str) -> list[str]:
@@ -68,3 +56,14 @@ def test_warm_build_job_budget(spark, tmp_path, n_buckets):
         f.write("appended so the size changes")
     assert count_jobs(spark, lambda: build(spark, str(root), store, params)) <= refresh_ceiling
     assert len(parquet_files(store)) <= files_before
+
+
+def test_pooled_construction_jobs_carry_caller_job_group(spark):
+    """tpch_q21_waiting_orders runs its construction-time checkpoints
+    on a thread pool; those jobs must be attributed to the job group of
+    the thread that built the query, or a per-query job count reads 0.
+    A first build warms the relation memo, so the counted build runs
+    no schema-inference job on the calling thread: only pooled jobs."""
+    q21 = load_all()["tpch_q21_waiting_orders"].spark_fn
+    q21(spark, SF0001)
+    assert count_jobs(spark, lambda: q21(spark, SF0001)) > 0

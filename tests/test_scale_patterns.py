@@ -4,6 +4,8 @@ Catalyst/AQE do automatically."""
 
 from __future__ import annotations
 
+import shutil
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -6063,11 +6065,14 @@ def test_cell_probe_fold_matches_reference_list(spark):
         assert "cp_top" not in plan and "b1d" in plan, sf
 
 
-def test_cell_probe_corpus_count_memo(spark):
+def test_cell_probe_corpus_count_memo(spark, tmp_path):
     """cell_probes' construction-time corpus count is memoized per
     input-file set: two plan builds over the same parquet source pay
     one count job (plan-only tooling builds hundreds of plans per
-    session), and distinct sources get distinct entries."""
+    session), and distinct sources get distinct entries — also for a
+    source whose file URI is percent-encoded (a space in the path)."""
+    from conftest import SF0001
+
     from mcp_rag_server_spark import catalog
     from mcp_rag_server_spark.operators import clustering
 
@@ -6110,6 +6115,15 @@ def test_cell_probe_corpus_count_memo(spark):
     gen = emb1.selectExpr("explode(embedding) AS x")
     assert clustering._corpus_count(gen) == gen.count()
     assert clustering._COUNT_MEMO == before
+    # inputFiles() reports file:///…/a%20b/…; the key is still stamped
+    spaced = tmp_path / "a b"
+    spaced.mkdir()
+    shutil.copy(f"{SF0001}/embeddings.parquet", spaced)
+    emb3 = catalog.load_table(spark, str(spaced), "embeddings")
+    assert "%20" in emb3.inputFiles()[0]
+    assert clustering._corpus_count(emb3) == n1
+    assert clustering._corpus_count(emb3) == n1
+    assert len(clustering._COUNT_MEMO) == len(before) + 1
 
 
 def test_cell_probes_raises_on_null_embedding_element(spark):

@@ -1,20 +1,24 @@
-"""Round-15 optimization pins: the size-aware spread class.
+"""``session.spread_scan``: the size-aware de-collapse of a scan.
 
-r15 made ``session.spread_scan`` width SIZE-AWARE (one task per
-``_SPREAD_TASK_BYTES`` of on-disk scan input, floored at 8, capped at
-the cluster width) and idempotent (a frame whose lineage already
+``spread_scan`` re-spreads a scan whose file layout yields fewer tasks
+than the cluster has cores: one task per ``_SPREAD_TASK_BYTES`` of
+on-disk scan input (``catalog.input_files``), floored at 8, capped at
+the cluster width. It is idempotent (a frame whose lineage already
 carries a RepartitionByExpression is returned untouched — no double
-exchange, no AQE-finalizing ``.rdd`` probe). These tests pin:
+exchange), and a lineage with no local file scan is returned untouched
+without running a job. These tests pin:
 
 1. SIZING MATH: the width formula against the live fixture byte sizes
-   (deficit regime → sized width; enough estimated splits → no-op).
+   (deficit regime → sized width; enough estimated splits under the
+   session's ``spark.sql.files.maxPartitionBytes`` → no-op).
 2. KEYED EXCHANGE IN THE PLAN: spread targets carry a hashpartitioning
    exchange on the declared key below the heavy stage — the structural
    claim OPTIMIZATION_r15.md makes per query.
 3. WIDTH-INDEPENDENT VALUES: collected rows are identical across
    spread widths (the registry's per-row-math / order-free-aggregate
    determinism rule, now exercised explicitly for the spread class).
-4. GUARDS: zero keys raise; an already-spread frame is not re-spread.
+4. GUARDS: zero keys raise; an already-spread frame is not re-spread;
+   a non-local scan is not sized.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from __future__ import annotations
 import os
 
 import pytest
-from conftest import SF0001, SF001
+from conftest import SF0001, SF001, count_jobs
 
 from mcp_rag_server_spark import session
 from mcp_rag_server_spark.catalog import load_table
@@ -71,12 +75,29 @@ def test_spread_width_is_size_aware(spark, monkeypatch):
         assert got == expect, (tbl, nbytes, got, expect)
 
 
-def test_spread_noop_when_layout_fans_out(spark, monkeypatch):
+def test_spread_noop_when_layout_fans_out(spark):
     """Estimated splits >= cluster width → the scan is returned as-is
-    (the production multi-split gate)."""
-    monkeypatch.setattr(session, "_conf_bytes", lambda *a: 1024)
-    df = load_table(spark, SF001, "lineitem")  # ~1 MB at sf0.01
-    assert spread_scan(df, "l_orderkey") is df
+    (the production multi-split gate). The split size is the session's
+    own conf, suffixed form included."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        df = load_table(spark, SF001, "lineitem")  # ~1 MB at sf0.01
+        assert spread_scan(df, "l_orderkey") is df
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_spread_noop_on_non_local_scan(spark, monkeypatch):
+    """A scan whose files are not local has no byte size to go by: the
+    frame comes back as-is and no job runs to size it."""
+    df = load_table(spark, SF0001, "documents").select("doc_id", "text")
+    monkeypatch.setattr(
+        df, "inputFiles", lambda: ["s3a://bucket/documents.parquet"]
+    )
+    assert count_jobs(spark, lambda: spread_scan(df, "doc_id")) == 0
+    assert spread_scan(df, "doc_id") is df
 
 
 def test_spread_requires_keys(spark):
