@@ -117,7 +117,15 @@ def with_embedding(
     df, text_col: str = "text", out_col: str = "embedding", embedder: Embedder | None = None
 ):
     """Add an embedding column — the batch analog of the reference's
-    embed loop (src/indexer.ts:293-303), distributed."""
+    embed loop (src/indexer.ts:293-303), distributed.
+
+    A frame that already has ``out_col`` is returned unchanged when no
+    ``embedder`` is passed: a chunk store carries the vector embedded
+    once at ingest (the reference's ``Doc.emb``, src/types.ts:19), so a
+    query over it plans no Python stage. An explicit ``embedder``
+    always recomputes the column."""
+    if embedder is None and out_col in df.columns:
+        return df
     return df.withColumn(out_col, embed_udf(embedder)(F.col(text_col)))
 
 

@@ -84,10 +84,15 @@ def emb_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rag_query_corpus(
     chunks_with_embedding: DataFrame, query: str, k: int = 5
 ) -> DataFrame:
-    """End-to-end rag_query over an ingested+embedded chunk store: embed
-    the query driver-side (one string — reference src/index.ts:266),
-    broadcast the literal vector, brute-force cosine top-k with the
-    deterministic tie-break (rounded score desc, id asc)."""
+    """End-to-end rag_query over an ingested chunk store: embed the query
+    driver-side (one string — reference src/index.ts:266), broadcast the
+    literal vector, brute-force cosine top-k with the deterministic
+    tie-break (rounded score desc, id asc).
+
+    The store's chunks carry the vectors embedded at ingest, and
+    ``with_embedding`` leaves them as they are, so over
+    ``with_embedding(build(...))`` the plan is JVM-only: parquet scan →
+    codegen cosine → TakeOrderedAndProject, no Python stage per query."""
     qv = hash_embed_query_vec(query)
     return topk_by_vector(
         chunks_with_embedding, qv, k=k, id_col="id", vec_col="embedding"

@@ -187,6 +187,14 @@ def is_pdf_col(path_col: str = "rel_path") -> F.Column:
     return F.lower(F.col(path_col)).endswith(".pdf")
 
 
+def admits_pdf(allowed_ext: Iterable[str]) -> bool:
+    """Whether a listing under ``allowed_ext`` can hold a file that
+    :func:`is_pdf_col` accepts. Discovery's glob admits only names ending
+    in ``.<ext>``, so a PDF can arrive only through an extension that is
+    ``pdf`` or ends in ``.pdf``, in any case."""
+    return any(("." + ext).lower().endswith(".pdf") for ext in allowed_ext)
+
+
 def _default_pdf_extractor(blobs: pd.Series) -> pd.Series:
     """Extract text from PDF bytes with pypdf. The library is not in this
     container, so absent pypdf this raises NotImplementedError — callers
@@ -205,22 +213,37 @@ def _default_pdf_extractor(blobs: pd.Series) -> pd.Series:
     )
 
 
+def _has_text(df: DataFrame) -> DataFrame:
+    """Rows with null or empty text are dropped (src/indexer.ts:267-269)."""
+    return df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+
+
+def decode_utf8(files: DataFrame) -> DataFrame:
+    """(rel_path, file_size, content) → (rel_path, file_size, text), every
+    row UTF-8 decoded JVM-side (replacement-char convention matches
+    Node, see module docstring); rows with null or empty text are
+    dropped. This is the whole decode when no PDF can be in ``files``:
+    one scan of the bodies and no Python worker."""
+    return _has_text(
+        files.withColumn("text", F.decode("content", "UTF-8")).drop("content")
+    )
+
+
 def decode_text(
     files: DataFrame,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
 ) -> DataFrame:
     """(rel_path, file_size, content) → (rel_path, file_size, text).
 
-    Text files: UTF-8 decode JVM-side (replacement-char convention
-    matches Node, see module docstring). PDFs: routed through an
+    Text files: :func:`decode_utf8`. PDFs: routed through an
     Arrow-batched ``mapInPandas`` extractor; extraction failures and
     empty extractions null the row out, matching ``readFileContent``'s
     swallow-and-skip contract (src/indexer.ts:165-188). Rows with null
-    text are dropped (src/indexer.ts:267-269)."""
+    text are dropped (src/indexer.ts:267-269). The PDF branch is always
+    planned — a second scan of ``files`` and a Python stage even when no
+    row is a PDF — so a caller that knows its listing holds no PDF
+    (:func:`admits_pdf`) calls :func:`decode_utf8` instead."""
     extractor = pdf_extractor or _default_pdf_extractor
-    text_part = files.filter(~is_pdf_col()).withColumn(
-        "text", F.decode("content", "UTF-8")
-    )
     out_schema = "rel_path string, file_size long, text string"
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -238,11 +261,7 @@ def decode_text(
             )
 
     pdf_part = files.filter(is_pdf_col()).mapInPandas(extract, schema=out_schema)
-    return (
-        text_part.drop("content")
-        .unionByName(pdf_part)
-        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    )
+    return decode_utf8(files.filter(~is_pdf_col())).unionByName(_has_text(pdf_part))
 
 
 def ensure_within_root(root: str, rel_path: str) -> str:

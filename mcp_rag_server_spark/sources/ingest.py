@@ -4,16 +4,22 @@ This is the reference's startup build (src/indexer.ts:226-317) and
 incremental maintenance (src/indexer.ts:413-511) as two Spark batch
 jobs over a Parquet chunk store.
 
-Chunk table schema (reference ``Doc``, src/types.ts:5-20, minus the
-embedding, which the embed stage adds —
-mcp_rag_server_spark/functions/embedding.py):
+Chunk table schema (reference ``Doc``, src/types.ts:5-20):
 
-    id: long           -- dense ordinal, deterministic (see below)
-    rel_path: string   -- path relative to corpus root (types.ts:9)
-    chunk: int         -- 0-based chunk index in file (types.ts:11)
-    text: string       -- chunk content (types.ts:13)
-    file_size: long    -- whole-file size, denormalized (types.ts:15)
-    line_count: int    -- whole-file line count, denormalized (types.ts:17)
+    id: long                  -- dense ordinal, deterministic (see below)
+    rel_path: string          -- path relative to corpus root (types.ts:9)
+    chunk: int                -- 0-based chunk index in file (types.ts:11)
+    text: string              -- chunk content (types.ts:13)
+    file_size: long           -- whole-file size, denormalized (types.ts:15)
+    line_count: int           -- whole-file line count, denormalized (types.ts:17)
+    embedding: array<float>   -- the chunk's vector, ``Doc.emb`` (types.ts:19)
+
+Each chunk is embedded once, when its row is made (the reference embeds
+at ingest too, src/indexer.ts:293-303): ``_assign_ids`` is where a cold
+build and a refresh both produce new rows, and a refresh's survivors
+keep their stored vectors, so only the delta's chunks reach the
+embedder (mcp_rag_server_spark/functions/embedding.py). A query over
+the store reads the vectors and runs no Python.
 
 Id discipline: the reference assigns ids from a session counter in
 traversal order (indexer.ts:263, 473) — nondeterministic across file
@@ -54,18 +60,26 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mcp_rag_server_spark.catalog import input_files
+from mcp_rag_server_spark.functions.embedding import with_embedding
 from mcp_rag_server_spark.functions.ids import dense_chunk_ids
 from mcp_rag_server_spark.functions.text import chunk_array
 from mcp_rag_server_spark.sources.files import (
     DEFAULT_ALLOWED_EXT,
     DEFAULT_EXCLUDED_FOLDERS,
+    admits_pdf,
     decode_text,
+    decode_utf8,
     discover_files,
     read_files,
 )
 
-STORE_VERSION = 1
+#: 2 = chunks carry ``embedding``; a version-1 store fails the meta
+#: check and is rebuilt cold (persistence.ts:91-100).
+STORE_VERSION = 2
 META_FILE = "_meta.json"
+#: Parquet codec of every store write: with it the store, vectors
+#: included, is smaller than the snappy store without them.
+STORE_CODEC = "zstd"
 
 
 @dataclass(frozen=True)
@@ -123,12 +137,13 @@ def chunk_files(texts: DataFrame, params: IngestParams) -> DataFrame:
 def _assign_ids(chunks: DataFrame, start_id: int = 0) -> DataFrame:
     """id = row_number over (rel_path, chunk) - 1 + start_id, computed
     per-file (functions/ids.py) so no task ever sorts the full chunk
-    set — the ordered step is one row per file."""
-    base = ["id", "rel_path", "chunk", "text", "file_size", "line_count"]
+    set — the ordered step is one row per file. The new rows are
+    embedded here, once, after the id join."""
+    base = ["id", "rel_path", "chunk", "text", "file_size", "line_count", "embedding"]
     extra = [c for c in chunks.columns if c not in base]
-    return dense_chunk_ids(chunks, "rel_path", start_id=start_id).select(
-        *base, *extra
-    )
+    return with_embedding(
+        dense_chunk_ids(chunks, "rel_path", start_id=start_id)
+    ).select(*base, *extra)
 
 
 def _meta_path(store_path: str) -> str:
@@ -150,21 +165,25 @@ def _bucket_col(n_buckets: int):
     return F.pmod(F.hash("rel_path"), F.lit(n_buckets))
 
 
+def _store_writer(df: DataFrame):
+    """The writer of every store write: overwrite, :data:`STORE_CODEC`."""
+    return df.write.mode("overwrite").option("compression", STORE_CODEC)
+
+
 def save_store(chunks: DataFrame, store_path: str, params: IngestParams) -> None:
     """Reference ``Persistence.save`` (persistence.ts:151-185): the docs
-    array + meta envelope become a Parquet table + JSON sidecar. The
-    base64-f32 embedding encoding (persistence.ts:175-177) has no
-    analog — Parquet stores array<float> natively."""
+    array + meta envelope become a Parquet table + JSON sidecar, written
+    with :data:`STORE_CODEC`. ``chunks`` carries each chunk's vector
+    (``embedding``, see the module docstring); the reference's base64-f32
+    encoding of it (persistence.ts:175-177) has no analog — Parquet
+    stores array<float> natively."""
     target = os.path.join(store_path, "chunks")
     if params.n_buckets > 0:
-        (
+        _store_writer(
             chunks.withColumn("bucket", _bucket_col(params.n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(target)
-        )
+        ).partitionBy("bucket").parquet(target)
     else:
-        chunks.write.mode("overwrite").parquet(target)
+        _store_writer(chunks).parquet(target)
     with open(_meta_path(store_path), "w", encoding="utf-8") as f:
         json.dump(_meta_dict(params), f)
 
@@ -213,8 +232,12 @@ def _texts(
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
     """(rel_path, file_size, content) → decoded texts, plus the
-    ``content_sha`` change key when ``params.content_hash``."""
-    texts = decode_text(files, pdf_extractor=pdf_extractor)
+    ``content_sha`` change key when ``params.content_hash``. The PDF
+    branch is planned only when the allow-list can list a PDF."""
+    if admits_pdf(params.allowed_ext):
+        texts = decode_text(files, pdf_extractor=pdf_extractor)
+    else:
+        texts = decode_utf8(files)
     if params.content_hash:
         texts = texts.withColumn("content_sha", F.sha2(F.col("text"), 256))
     return texts
@@ -236,7 +259,7 @@ def cold_build(
     pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
 ) -> DataFrame:
     """Full rebuild (reference cold path, indexer.ts:257-316):
-    discover → read/extract → chunk → assign ids."""
+    discover → read/extract → chunk → assign ids → embed."""
     files = discover_files(
         spark, root, params.allowed_ext, params.excluded_folders, with_content=True
     )
@@ -263,8 +286,9 @@ def incremental_update(
 
     New chunk ids continue from max(surviving id)+1 (getMaxId()+1,
     indexer.ts:393-400), ordered by (rel_path, chunk) for determinism.
-    Only changed files are re-read/re-chunked; survivors pass through
-    untouched — at scale this is a MERGE keyed on rel_path.
+    Only changed files are re-read/re-chunked/re-embedded; survivors
+    pass through untouched, stored vectors included — at scale this is a
+    MERGE keyed on rel_path.
 
     Accepted costs:
       - a PDF whose extraction fails has no store rows, so every refresh
@@ -390,9 +414,9 @@ def _refresh_flat(
     # write to a sibling dir first and swap — never collect() the
     # table through the driver (it may be 100 TB).
     next_dir = cur_dir + ".next"
-    chunks.coalesce(max(1, len(input_files(cur_dir)))).write.mode(
-        "overwrite"
-    ).parquet(next_dir)
+    _store_writer(chunks.coalesce(max(1, len(input_files(cur_dir))))).parquet(
+        next_dir
+    )
     shutil.rmtree(cur_dir, ignore_errors=True)
     os.rename(next_dir, cur_dir)
     with open(_meta_path(store_path), "w", encoding="utf-8") as f:
@@ -422,7 +446,7 @@ def _refresh_buckets(
         .repartition("bucket")
     )
     delta_dir = os.path.join(store_path, "chunks.delta")
-    out.write.mode("overwrite").partitionBy("bucket").parquet(delta_dir)
+    _store_writer(out).partitionBy("bucket").parquet(delta_dir)
     cur_dir = os.path.join(store_path, "chunks")
     for b in affected:
         src = os.path.join(delta_dir, f"bucket={b}")
@@ -471,10 +495,10 @@ def compact_store(
     total_bytes = sum(size for _, size, _ in input_files(data_dir))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     staged = data_dir + ".compact.tmp"
-    writer = (
-        df.repartitionByRange(n_files, F.col(range_col))
-        .sortWithinPartitions(range_col)
-        .write.mode("overwrite")
+    writer = _store_writer(
+        df.repartitionByRange(n_files, F.col(range_col)).sortWithinPartitions(
+            range_col
+        )
     )
     if "bucket" in df.columns:
         # bucket-partitioned store: keep the bucket=N directory layout

@@ -30,6 +30,7 @@ from mcp_rag_server_spark.sources.files import (
     normalize_rel_path,
 )
 from mcp_rag_server_spark.sources.ingest import (
+    STORE_VERSION,
     IngestParams,
     build,
     cold_build,
@@ -137,7 +138,7 @@ def test_store_roundtrip_and_meta_compat(spark, corpus_dir, tmp_path):
     # Param mismatch → None → cold rebuild (persistence.ts:91-100).
     assert load_store(spark, store, IngestParams(chunk_size=999)) is None
     meta = json.load(open(os.path.join(store, "_meta.json")))
-    assert meta["version"] == 1 and meta["chunk_size"] == 120
+    assert meta["version"] == STORE_VERSION and meta["chunk_size"] == 120
 
 
 def mutate_corpus(root: str) -> None:
@@ -358,6 +359,128 @@ def test_pdf_plumbing_with_injected_extractor(spark, tmp_path):
     by_path = {r["rel_path"]: r for r in chunks}
     assert by_path["doc.pdf"]["text"] == "PDFTEXT(29 bytes)"
     assert by_path["plain.txt"]["text"] == "plain text"
+
+
+def test_pdf_branch_planned_only_when_allow_list_admits_pdf(spark, corpus_dir):
+    """The PDF branch (a Python stage and a second body scan) is planned
+    only when discovery can list a PDF. The id join reads the decoded
+    texts twice (chunk rows and per-file counts), so without the branch
+    a cold build scans the bodies twice, and with it four times."""
+    import dataclasses
+
+    from mcp_rag_server_spark.plans.inspect import plan_string
+    from mcp_rag_server_spark.sources.files import admits_pdf
+
+    assert admits_pdf(("md", "PDF")) and admits_pdf(("x.pdf",))
+    assert not admits_pdf(("md", "xpdf", "pdf.md")) and not admits_pdf(())
+
+    no_pdf = dataclasses.replace(PARAMS, allowed_ext=("md", "py", "txt", "yaml"))
+    plan = plan_string(cold_build(spark, corpus_dir, no_pdf), "simple")
+    assert "MapInPandas" not in plan
+    assert plan.count("FileScan binaryFile") == 2
+    plan = plan_string(cold_build(spark, corpus_dir, PARAMS), "simple")
+    assert "MapInPandas" in plan
+    assert plan.count("FileScan binaryFile") == 4
+
+
+def _store_rows(spark, store: str) -> dict:
+    """(rel_path, chunk) → (id, stored embedding, embedding recomputed
+    from the chunk's text by ``embed_udf``) over the whole store."""
+    from mcp_rag_server_spark.functions.embedding import embed_udf
+
+    rows = (
+        spark.read.parquet(os.path.join(store, "chunks"))
+        .select("rel_path", "chunk", "id", "embedding", embed_udf()("text").alias("want"))
+        .collect()
+    )
+    return {(r["rel_path"], r["chunk"]): (r["id"], r["embedding"], r["want"]) for r in rows}
+
+
+@pytest.mark.parametrize(
+    "n_buckets, content_hash", [(0, False), (4, False), (0, True)],
+    ids=["flat", "bucketed", "content_hash"],
+)
+def test_stored_vectors_equal_recomputed(spark, corpus_dir, tmp_path, n_buckets, content_hash):
+    """Every chunk row carries the embedder's vector of its own text, bit
+    for bit in float32, after a cold build and after a refresh; the
+    refresh leaves the ids and vectors of unchanged files as they were."""
+    import dataclasses
+    import shutil
+
+    root = str(tmp_path / "root")
+    shutil.copytree(corpus_dir, root)
+    store = str(tmp_path / "store")
+    params = dataclasses.replace(PARAMS, n_buckets=n_buckets, content_hash=content_hash)
+    build(spark, root, store, params)
+    before = _store_rows(spark, store)
+    assert before and all(emb == want for _, emb, want in before.values())
+
+    mutate_corpus(root)
+    build(spark, root, store, params)
+    after = _store_rows(spark, store)
+    assert all(emb == want for _, emb, want in after.values())
+    touched = {"notes.txt", "src/util/helpers.py", "data/config.yaml", "added.md"}
+    kept = {key: v[:2] for key, v in before.items() if key[0] not in touched}
+    assert kept and {key: after[key][:2] for key in kept} == kept
+
+
+def test_v1_store_is_rebuilt_cold(spark, corpus_dir, tmp_path):
+    """A store written before chunks carried vectors (meta version 1, no
+    ``embedding`` column) fails the compat check: build() rebuilds it
+    cold instead of refreshing it, which would union rows of two
+    schemas."""
+    store = str(tmp_path / "store")
+    save_store(cold_build(spark, corpus_dir, PARAMS).drop("embedding"), store, PARAMS)
+    meta_path = os.path.join(store, "_meta.json")
+    with open(meta_path, encoding="utf-8") as f:
+        meta = json.load(f)
+    meta["version"] = 1
+    with open(meta_path, "w", encoding="utf-8") as f:
+        json.dump(meta, f)
+    assert load_store(spark, store, PARAMS) is None
+
+    chunks = build(spark, corpus_dir, store, PARAMS)
+    assert "embedding" in chunks.columns
+    assert chunks.filter("embedding IS NULL").count() == 0
+    assert load_store(spark, store, PARAMS) is not None
+
+
+def _codecs(store: str) -> set[str]:
+    import pyarrow.parquet as pq
+
+    out = set()
+    for d, _, names in os.walk(os.path.join(store, "chunks")):
+        for n in names:
+            if n.endswith(".parquet"):
+                md = pq.ParquetFile(os.path.join(d, n)).metadata
+                for rg in range(md.num_row_groups):
+                    for c in range(md.num_columns):
+                        out.add(md.row_group(rg).column(c).compression)
+    return out
+
+
+@pytest.mark.parametrize("n_buckets", [0, 4])
+def test_store_writes_are_zstd(spark, corpus_dir, tmp_path, n_buckets):
+    """Every store write — cold build, flat or bucketed refresh, and
+    compaction — writes zstd parquet."""
+    import dataclasses
+    import shutil
+
+    from mcp_rag_server_spark.sources.ingest import compact_store
+
+    root = str(tmp_path / "root")
+    shutil.copytree(corpus_dir, root)
+    store = str(tmp_path / "store")
+    params = dataclasses.replace(PARAMS, n_buckets=n_buckets)
+    build(spark, root, store, params)
+    assert _codecs(store) == {"ZSTD"}
+    mutate_corpus(root)
+    before = _store_state(store)[0]
+    build(spark, root, store, params)
+    assert _store_state(store)[0] != before
+    assert _codecs(store) == {"ZSTD"}
+    compact_store(spark, store, target_file_bytes=16 * 1024)
+    assert _codecs(store) == {"ZSTD"}
 
 
 def test_read_file_line_ranges(spark, corpus_dir):

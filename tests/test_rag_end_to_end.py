@@ -12,7 +12,11 @@ import math
 import numpy as np
 import pytest
 
-from mcp_rag_server_spark.functions.embedding import HASH_DIM, with_embedding
+from mcp_rag_server_spark.functions.embedding import (
+    HASH_DIM,
+    hash_embedder,
+    with_embedding,
+)
 from mcp_rag_server_spark.operators.embed import rag_query_corpus
 from mcp_rag_server_spark.sources.ingest import IngestParams, build
 
@@ -73,6 +77,28 @@ def test_rag_query_corpus_end_to_end(spark, tmp_path):
     assert got[0]["score"] > 0.5
     # Result contract fields (reference src/index.ts:269-275 analog).
     assert set(got[0].asDict()) == {"id", "rel_path", "chunk", "score", "snippet"}
+
+
+def test_rag_query_over_store_runs_no_python(spark, tmp_path):
+    """The store's chunks carry their vectors, so ``rag_query`` over
+    ``with_embedding(build(...))`` executes with no Python UDF node, and
+    its top-k equals the path that recomputes every vector with the
+    UDF."""
+    root = tmp_path / "corpus"
+    root.mkdir()
+    for rel, text in DOCS.items():
+        (root / rel).write_text(text)
+    chunks = build(spark, str(root), str(tmp_path / "store"), PARAMS)
+
+    query = "brown fox"
+    stored = rag_query_corpus(with_embedding(chunks), query, k=3)
+    got = stored.collect()
+    plan = stored._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+    recomputed = with_embedding(chunks, embedder=hash_embedder())
+    assert "ArrowEvalPython" in recomputed._jdf.queryExecution().executedPlan().toString()
+    assert got == rag_query_corpus(recomputed, query, k=3).collect()
 
 
 def test_embedding_stage_schema_and_nulls(spark):
