@@ -1,6 +1,6 @@
 """Multi-dimensional data layout: Z-order (Morton) clustering audit.
 
-Single-key range layouts (sources/ingest.py's bucketed store) give
+Single-key range layouts (sources/ingest.py's compacted store) give
 min/max data skipping on ONE key; queries that filter on a second
 dimension still scan everything. The standard fix at 100 TB is a
 space-filling-curve sort key: interleave the bits of both dimensions

@@ -41,9 +41,11 @@ joined with the store's per-path ``file_size`` and only the delta keys
 (path + deleted flag) come to the driver. An empty delta writes
 nothing. Otherwise only the changed and new files' bodies are read, and
 survivors + new chunks are rewritten into no more parquet files than
-the store they replace (``content_hash=True`` is the exception on
-reads: its key is a hash of every body, so that mode reads each body
-once to list).
+the store they replace.
+
+A file counts as changed when its size changes (indexer.ts:453-454), so
+a same-size edit is missed, as the reference documents
+(indexer.ts:410-411).
 """
 
 from __future__ import annotations
@@ -73,9 +75,11 @@ from mcp_rag_server_spark.sources.files import (
     read_files,
 )
 
-#: 2 = chunks carry ``embedding``; a version-1 store fails the meta
-#: check and is rebuilt cold (persistence.ts:91-100).
-STORE_VERSION = 2
+#: 2 = chunks carry ``embedding``; 3 = the flat, size-keyed layout is
+#: the only one (a version-2 store may carry the partition dirs or the
+#: per-body hash column of a removed layout). An older store fails the
+#: meta check and is rebuilt cold (persistence.ts:91-100).
+STORE_VERSION = 3
 META_FILE = "_meta.json"
 #: Parquet codec of every store write: with it the store, vectors
 #: included, is smaller than the snappy store without them.
@@ -92,18 +96,6 @@ class IngestParams:
     model_name: str = "fixture"
     allowed_ext: tuple[str, ...] = DEFAULT_ALLOWED_EXT
     excluded_folders: tuple[str, ...] = DEFAULT_EXCLUDED_FOLDERS
-    #: Change detection: the reference compares file size only
-    #: (indexer.ts:453-454) and documents that same-size edits are missed
-    #: (indexer.ts:410-411). content_hash=True strengthens detection with
-    #: sha2(content) — a deliberate, flagged divergence (SURVEY.md §5.2).
-    content_hash: bool = False
-    #: 0 = flat store (refresh rewrites the whole table). > 0 = store is
-    #: partitioned by bucket = pmod(hash(rel_path), n_buckets) and refresh
-    #: rewrites ONLY buckets containing changed/deleted/new paths — at
-    #: 100 TB a small delta touches a handful of partition dirs instead of
-    #: re-shuffling the corpus. Participates in meta compat (a layout
-    #: change forces a cold rebuild).
-    n_buckets: int = 0
 
 
 def chunk_files(texts: DataFrame, params: IngestParams) -> DataFrame:
@@ -139,11 +131,9 @@ def _assign_ids(chunks: DataFrame, start_id: int = 0) -> DataFrame:
     per-file (functions/ids.py) so no task ever sorts the full chunk
     set — the ordered step is one row per file. The new rows are
     embedded here, once, after the id join."""
-    base = ["id", "rel_path", "chunk", "text", "file_size", "line_count", "embedding"]
-    extra = [c for c in chunks.columns if c not in base]
     return with_embedding(
         dense_chunk_ids(chunks, "rel_path", start_id=start_id)
-    ).select(*base, *extra)
+    ).select("id", "rel_path", "chunk", "text", "file_size", "line_count", "embedding")
 
 
 def _meta_path(store_path: str) -> str:
@@ -151,23 +141,51 @@ def _meta_path(store_path: str) -> str:
 
 
 def _recover_interrupted_swap(data_dir: str) -> None:
-    """compact_store's dir swap is two renames, not one atomic op: a
+    """:func:`_rewrite_data`'s swap is two renames, not one atomic op: a
     crash between them leaves the canonical ``chunks`` dir missing and
-    the data stranded at ``chunks.old``. Openers call this first to roll
-    the store back to the pre-compaction copy (compaction is a pure
-    layout rewrite, so the old copy is fully current)."""
+    the previous copy at ``chunks.old``. Openers call this first to roll
+    the store back to that copy. The meta sidecar is written only after
+    a swap completes, so the rolled-back store is consistent: a refresh
+    re-finds its delta, and a compaction is a pure layout rewrite."""
     old = data_dir + ".old"
     if not os.path.exists(data_dir) and os.path.exists(old):
         os.rename(old, data_dir)
 
 
-def _bucket_col(n_buckets: int):
-    return F.pmod(F.hash("rel_path"), F.lit(n_buckets))
-
-
 def _store_writer(df: DataFrame):
     """The writer of every store write: overwrite, :data:`STORE_CODEC`."""
     return df.write.mode("overwrite").option("compression", STORE_CODEC)
+
+
+def _rewrite_data(df: DataFrame, data_dir: str) -> None:
+    """Replace the store's data dir with ``df``, which may read it.
+
+    Spark cannot read and overwrite one parquet dir in one job, so ``df``
+    is staged beside it and swapped in: data → ``.old``, staged → data,
+    then ``.old`` is deleted. Never ``collect()`` the table through the
+    driver (it may be 100 TB). A crash at any point leaves a complete
+    copy: before the first rename the data dir is untouched, between
+    the renames :func:`_recover_interrupted_swap` rolls back to
+    ``.old``, and after the second the new copy is in place. A
+    concurrent reader during the window would need an external lock
+    (out of scope for a single-writer store)."""
+    staged, old = data_dir + ".next", data_dir + ".old"
+    _store_writer(df).parquet(staged)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    os.rename(data_dir, old)
+    os.rename(staged, data_dir)
+    shutil.rmtree(old)
+
+
+def _write_meta(store_path: str, params: IngestParams) -> None:
+    """Write the meta sidecar by replacing it whole: a crash mid-write
+    leaves the previous sidecar, never an empty one that every later
+    ``load_store`` would fail to parse."""
+    path = _meta_path(store_path)
+    with open(path + ".tmp", "w", encoding="utf-8") as f:
+        json.dump(_meta_dict(params), f)
+    os.replace(path + ".tmp", path)
 
 
 def save_store(chunks: DataFrame, store_path: str, params: IngestParams) -> None:
@@ -177,15 +195,8 @@ def save_store(chunks: DataFrame, store_path: str, params: IngestParams) -> None
     (``embedding``, see the module docstring); the reference's base64-f32
     encoding of it (persistence.ts:175-177) has no analog — Parquet
     stores array<float> natively."""
-    target = os.path.join(store_path, "chunks")
-    if params.n_buckets > 0:
-        _store_writer(
-            chunks.withColumn("bucket", _bucket_col(params.n_buckets))
-        ).partitionBy("bucket").parquet(target)
-    else:
-        _store_writer(chunks).parquet(target)
-    with open(_meta_path(store_path), "w", encoding="utf-8") as f:
-        json.dump(_meta_dict(params), f)
+    _store_writer(chunks).parquet(os.path.join(store_path, "chunks"))
+    _write_meta(store_path, params)
 
 
 def _meta_dict(params: IngestParams) -> dict:
@@ -194,8 +205,6 @@ def _meta_dict(params: IngestParams) -> dict:
         "chunk_size": params.chunk_size,
         "chunk_overlap": params.chunk_overlap,
         "model_name": params.model_name,
-        "content_hash": params.content_hash,
-        "n_buckets": params.n_buckets,
         "saved_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
 
@@ -216,8 +225,6 @@ def load_store(
         and meta.get("chunk_size") == params.chunk_size
         and meta.get("chunk_overlap") == params.chunk_overlap
         and meta.get("model_name") == params.model_name
-        and meta.get("content_hash", False) == params.content_hash
-        and meta.get("n_buckets", 0) == params.n_buckets
     )
     if not compatible:
         return None
@@ -231,25 +238,11 @@ def _texts(
     params: IngestParams,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
-    """(rel_path, file_size, content) → decoded texts, plus the
-    ``content_sha`` change key when ``params.content_hash``. The PDF
-    branch is planned only when the allow-list can list a PDF."""
+    """(rel_path, file_size, content) → decoded texts. The PDF branch is
+    planned only when the allow-list can list a PDF."""
     if admits_pdf(params.allowed_ext):
-        texts = decode_text(files, pdf_extractor=pdf_extractor)
-    else:
-        texts = decode_utf8(files)
-    if params.content_hash:
-        texts = texts.withColumn("content_sha", F.sha2(F.col("text"), 256))
-    return texts
-
-
-def _chunks(texts: DataFrame, params: IngestParams) -> DataFrame:
-    chunks = chunk_files(texts, params)
-    if params.content_hash:
-        # content_sha rides along in the store: it IS the change-detection
-        # key on the next refresh.
-        chunks = chunks.join(texts.select("rel_path", "content_sha"), "rel_path")
-    return chunks
+        return decode_text(files, pdf_extractor=pdf_extractor)
+    return decode_utf8(files)
 
 
 def cold_build(
@@ -263,7 +256,7 @@ def cold_build(
     files = discover_files(
         spark, root, params.allowed_ext, params.excluded_folders, with_content=True
     )
-    return _assign_ids(_chunks(_texts(files, params, pdf_extractor), params))
+    return _assign_ids(chunk_files(_texts(files, params, pdf_extractor), params))
 
 
 def incremental_update(
@@ -279,10 +272,7 @@ def incremental_update(
     J1 (deleted):  old chunk paths absent from the current listing →
                    dropped (indexer.ts:431-443).
     J2 (changed):  current listing vs old per-path file_size; new path or
-                   size mismatch → re-ingest that file (indexer.ts:446-462);
-                   with ``content_hash`` the key is sha2(text) instead,
-                   catching same-size edits the reference misses
-                   (indexer.ts:410-411).
+                   size mismatch → re-ingest that file (indexer.ts:446-462).
 
     New chunk ids continue from max(surviving id)+1 (getMaxId()+1,
     indexer.ts:393-400), ordered by (rel_path, chunk) for determinism.
@@ -290,18 +280,12 @@ def incremental_update(
     pass through untouched, stored vectors included — at scale this is a
     MERGE keyed on rel_path.
 
-    Accepted costs:
-      - a PDF whose extraction fails has no store rows, so every refresh
-        sees it as new and re-tries the extraction (the store contents
-        stay unchanged);
-      - ``content_hash=True`` still reads every body once, because its
-        change key is a hash of the body.
+    Accepted cost: a PDF whose extraction fails has no store rows, so
+    every refresh sees it as new and re-tries the extraction (the store
+    contents stay unchanged).
     """
-    delta = _delta_keys(spark, old_chunks, root, params, pdf_extractor)
-    survivors, new_chunks = _apply_delta(
-        spark, old_chunks, root, delta, params, pdf_extractor
-    )
-    return survivors.select(*new_chunks.columns).unionByName(new_chunks)
+    delta = _delta_keys(spark, old_chunks, root, params)
+    return _apply_delta(spark, old_chunks, root, delta, params, pdf_extractor)
 
 
 def _delta_keys(
@@ -309,36 +293,21 @@ def _delta_keys(
     old_chunks: DataFrame,
     root: str,
     params: IngestParams,
-    pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> list[Row]:
-    """The J1/J2 delta as driver-side rows (rel_path, deleted[, bucket]):
-    the current listing full-outer-joined with the store's per-path
-    change key, in one job that reads no file bodies (except under
-    ``content_hash``, whose key is a hash of every body)."""
+    """The J1/J2 delta as driver-side rows (rel_path, deleted): the
+    current listing full-outer-joined with the store's per-path
+    ``file_size``, in one job that reads no file bodies."""
     listing = discover_files(
-        spark,
-        root,
-        params.allowed_ext,
-        params.excluded_folders,
-        with_content=params.content_hash,
+        spark, root, params.allowed_ext, params.excluded_folders
     )
-    key = "file_size"
-    if params.content_hash:
-        key = "content_sha"
-        listing = _texts(listing, params, pdf_extractor)
     old_by_path = old_chunks.groupBy("rel_path").agg(
-        F.first(key).alias("old_key")
-    )
-    bucket = (
-        [_bucket_col(params.n_buckets).alias("bucket")]
-        if params.n_buckets > 0
-        else []
+        F.first("file_size").alias("old_key")
     )
     return (
-        listing.select("rel_path", F.col(key).alias("new_key"))
+        listing.select("rel_path", F.col("file_size").alias("new_key"))
         .join(old_by_path, "rel_path", "full_outer")
         .filter(~F.col("new_key").eqNullSafe(F.col("old_key")))
-        .select("rel_path", F.col("new_key").isNull().alias("deleted"), *bucket)
+        .select("rel_path", F.col("new_key").isNull().alias("deleted"))
         .collect()
     )
 
@@ -350,8 +319,8 @@ def _apply_delta(
     delta: list[Row],
     params: IngestParams,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
-) -> tuple[DataFrame, DataFrame]:
-    """(survivors, new_chunks): the old chunks of paths outside the
+) -> DataFrame:
+    """Survivors ∪ new chunks: the old chunks of paths outside the
     delta, and the chunks of the changed/new files — whose bodies alone
     are read — with ids from max(surviving id)+1 (getMaxId()+1,
     indexer.ts:393-400)."""
@@ -362,7 +331,8 @@ def _apply_delta(
     texts = _texts(read_files(spark, root, changed), params, pdf_extractor)
     max_id = survivors.agg(F.max("id")).first()[0]
     next_id = (max_id + 1) if max_id is not None else 0
-    return survivors, _assign_ids(_chunks(texts, params), start_id=next_id)
+    new_chunks = _assign_ids(chunk_files(texts, params), start_id=next_id)
+    return survivors.select(*new_chunks.columns).unionByName(new_chunks)
 
 
 def build(
@@ -383,80 +353,19 @@ def build(
         chunks = cold_build(spark, root, params, pdf_extractor=pdf_extractor)
         save_store(chunks, store_path, params)
     else:
-        delta = _delta_keys(spark, old, root, params, pdf_extractor)
+        delta = _delta_keys(spark, old, root, params)
         if not delta:
-            return old.drop("bucket")
-        survivors, new_chunks = _apply_delta(
-            spark, old, root, delta, params, pdf_extractor
-        )
-        if params.n_buckets > 0:
-            _refresh_buckets(store_path, survivors, new_chunks, delta, params)
-        else:
-            _refresh_flat(store_path, survivors, new_chunks, params)
+            return old
+        chunks = _apply_delta(spark, old, root, delta, params, pdf_extractor)
+        # No more parquet files than the store being replaced: each file
+        # carries a fixed footer/schema overhead, so a refresh must not
+        # fragment the store.
+        _rewrite_data(chunks.coalesce(max(1, len(input_files(cur_dir)))), cur_dir)
+        _write_meta(store_path, params)
     # The swap replaced files under a path Spark may have listed; drop the
     # stale listing before handing back a reader.
     spark.catalog.refreshByPath(cur_dir)
-    return spark.read.parquet(cur_dir).drop("bucket")
-
-
-def _refresh_flat(
-    store_path: str,
-    survivors: DataFrame,
-    new_chunks: DataFrame,
-    params: IngestParams,
-) -> None:
-    """Rewrite the flat store as survivors ∪ new chunks, in no more
-    parquet files than the store being replaced (each file carries a
-    fixed footer/schema overhead, so a refresh must not fragment it)."""
-    cur_dir = os.path.join(store_path, "chunks")
-    chunks = survivors.select(*new_chunks.columns).unionByName(new_chunks)
-    # The refresh reads the parquet dir it is about to replace, so
-    # write to a sibling dir first and swap — never collect() the
-    # table through the driver (it may be 100 TB).
-    next_dir = cur_dir + ".next"
-    _store_writer(chunks.coalesce(max(1, len(input_files(cur_dir))))).parquet(
-        next_dir
-    )
-    shutil.rmtree(cur_dir, ignore_errors=True)
-    os.rename(next_dir, cur_dir)
-    with open(_meta_path(store_path), "w", encoding="utf-8") as f:
-        json.dump(_meta_dict(params), f)
-
-
-def _refresh_buckets(
-    store_path: str,
-    survivors: DataFrame,
-    new_chunks: DataFrame,
-    delta: list[Row],
-    params: IngestParams,
-) -> None:
-    """Delta-bucket refresh: rewrite ONLY the partition dirs whose paths
-    changed, one parquet file per bucket. A small delta against a 100 TB
-    store touches a handful of ``bucket=k`` directories; everything else
-    is untouched bytes on disk — no read, no shuffle, no rewrite
-    (verified by mtime in tests/test_ingest.py). Ids come from the same
-    global-survivor rule as the flat layout, so both produce identical
-    ids and never collide with ids in untouched buckets."""
-    affected = sorted({r["bucket"] for r in delta})
-    out = (
-        survivors.filter(F.col("bucket").isin(affected))
-        .select(*new_chunks.columns)
-        .unionByName(new_chunks)
-        .withColumn("bucket", _bucket_col(params.n_buckets))
-        .repartition("bucket")
-    )
-    delta_dir = os.path.join(store_path, "chunks.delta")
-    _store_writer(out).partitionBy("bucket").parquet(delta_dir)
-    cur_dir = os.path.join(store_path, "chunks")
-    for b in affected:
-        src = os.path.join(delta_dir, f"bucket={b}")
-        dst = os.path.join(cur_dir, f"bucket={b}")
-        shutil.rmtree(dst, ignore_errors=True)
-        if os.path.exists(src):  # bucket may have lost all its paths
-            os.rename(src, dst)
-    shutil.rmtree(delta_dir, ignore_errors=True)
-    with open(_meta_path(store_path), "w", encoding="utf-8") as f:
-        json.dump(_meta_dict(params), f)
+    return spark.read.parquet(cur_dir)
 
 
 def compact_store(
@@ -467,25 +376,20 @@ def compact_store(
 ) -> int:
     """Compact a chunk store's small files and lay rows out by range.
 
-    The 100 TB small-file problem (SURVEY.md §7.5 risk 5): incremental
-    refresh appends per-delta files, and thousands of KB-sized parquet
-    files destroy scan throughput (one task + one footer read each) and
-    overload the driver's file listing. Compaction rewrites the store as
-    ``ceil(bytes / target_file_bytes)`` files, range-partitioned on
-    ``range_col`` with rows sorted within each file.
+    Compaction rewrites the store as ``ceil(bytes / target_file_bytes)``
+    files, range-partitioned on ``range_col`` with rows sorted within
+    each file. Each output file covers a disjoint ``range_col`` interval,
+    so its parquet row-group min/max statistics let any engine skip
+    whole files for range predicates (the poor man's Z-order for a
+    single key; verified by tests/test_ingest.py::test_compact_store_layout).
+    A build or refresh lays rows out in whatever order its tasks wrote
+    them, so only this rewrite gives a store that layout; it also merges
+    a store written as many small files (SURVEY.md §7.5 risk 5: one task
+    + one footer read each).
 
-    The range layout is what makes the rewrite more than cosmetic: each
-    output file covers a disjoint ``range_col`` interval, so its parquet
-    row-group min/max statistics let any engine skip whole files for
-    range predicates (the poor man's Z-order for a single key; verified
-    by tests/test_ingest.py::test_compact_store_layout).
-
-    Returns the number of files written. Staging discipline: Spark
-    cannot read and overwrite the same parquet directory in one job, so
-    the compacted copy is staged beside the store's data dir then
-    swapped in (rename); the _meta.json sidecar lives at the store root
-    and is untouched. Bucket-partitioned stores keep their bucket=N
-    directory layout (the refresh path depends on it).
+    Returns the number of files written. The compacted copy is swapped
+    in by :func:`_rewrite_data`; the _meta.json sidecar lives at the
+    store root and is untouched.
     """
     import math
 
@@ -494,29 +398,12 @@ def compact_store(
     df = spark.read.parquet(data_dir)
     total_bytes = sum(size for _, size, _ in input_files(data_dir))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    staged = data_dir + ".compact.tmp"
-    writer = _store_writer(
+    _rewrite_data(
         df.repartitionByRange(n_files, F.col(range_col)).sortWithinPartitions(
             range_col
-        )
+        ),
+        data_dir,
     )
-    if "bucket" in df.columns:
-        # bucket-partitioned store: keep the bucket=N directory layout
-        # (refresh relies on it); range layout applies within buckets.
-        writer = writer.partitionBy("bucket")
-    writer.parquet(staged)
-    # Swap with a recovery path, NOT atomic: between the two renames the
-    # canonical dir is briefly missing, and a crash there strands the
-    # data at ``chunks.old`` — openers (load_store / compact_store / the
-    # next build) run _recover_interrupted_swap to roll back. No failure
-    # point loses data; a concurrent reader during the window would need
-    # an external lock (out of scope for a single-writer store).
-    old = data_dir + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(data_dir, old)
-    os.rename(staged, data_dir)
-    shutil.rmtree(old)
     # Same stale-FileStatusCache hazard as build(): a same-session reader
     # that already listed the store would otherwise see deleted files.
     spark.catalog.refreshByPath(data_dir)

@@ -18,9 +18,9 @@ Semantics vs the batch refresh (sources/ingest.py):
     for rewrites).
 
 Ids: a global dense counter is meaningless under continuous arrival, so
-chunk identity is the natural key (rel_path, chunk) — the same composite
-the batch store's bucketed layout joins on. The sink appends parquet via
-foreachBatch, partitioned like the batch store.
+chunk identity is the natural key (rel_path, chunk), the composite the
+batch store's ids are ordered by. The sink appends parquet via
+foreachBatch, partitioned by ``batch_id``.
 
 Scale shape: each micro-batch is a narrow decode→chunk pipeline over
 only the newly-arrived files; the checkpoint file log grows O(files)

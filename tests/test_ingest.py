@@ -206,26 +206,6 @@ def test_incremental_update_delta_semantics(spark, corpus_dir, tmp_path):
     )
 
 
-def test_content_hash_catches_same_size_edit(spark, corpus_dir, tmp_path):
-    root = str(tmp_path / "inc_hash")
-    import shutil
-
-    shutil.copytree(corpus_dir, root)
-    params = IngestParams(
-        chunk_size=120, chunk_overlap=30, content_hash=True
-    )
-    built = cold_build(spark, root, params)
-    old = spark.createDataFrame(built.collect(), built.schema)
-    mutate_corpus(root)
-    new = incremental_update(spark, old, root, params).collect()
-    helper = [r for r in new if r["rel_path"] == "src/util/helpers.py"]
-    text = "".join(
-        r["text"] if r["chunk"] == 0 else r["text"][30:]
-        for r in sorted(helper, key=lambda r: r["chunk"])
-    )
-    assert text == open(os.path.join(root, "src/util/helpers.py")).read()
-
-
 def test_build_warm_path_end_to_end(spark, corpus_dir, tmp_path):
     root = str(tmp_path / "warm")
     store = str(tmp_path / "warm_store")
@@ -255,19 +235,75 @@ def _store_state(store: str):
         return files, f.read(), os.stat(meta).st_mtime_ns
 
 
-@pytest.mark.parametrize("n_buckets", [0, 4])
-def test_noop_build_writes_nothing(spark, corpus_dir, tmp_path, n_buckets):
+def test_noop_build_writes_nothing(spark, corpus_dir, tmp_path):
     """A warm build over an unchanged tree returns the same rows and
     leaves every parquet file and _meta.json untouched."""
-    import dataclasses
-
     store = str(tmp_path / "store")
-    params = dataclasses.replace(PARAMS, n_buckets=n_buckets)
-    first = sorted(map(tuple, build(spark, corpus_dir, store, params).collect()))
+    first = sorted(map(tuple, build(spark, corpus_dir, store, PARAMS).collect()))
     before = _store_state(store)
-    second = build(spark, corpus_dir, store, params)
+    second = build(spark, corpus_dir, store, PARAMS)
     assert _store_state(store) == before
     assert sorted(map(tuple, second.collect())) == first
+
+
+def _resize_corpus(root: str) -> None:
+    """A delta the size key sees in full: a grown file, a new file and a
+    deleted file, so a refresh must end equal to a cold build."""
+    with open(os.path.join(root, "notes.txt"), "a", encoding="utf-8") as f:
+        f.write("\nline5, appended")
+    with open(os.path.join(root, "added.md"), "w", encoding="utf-8") as f:
+        f.write("brand new file " * 20)
+    os.remove(os.path.join(root, "data/config.yaml"))
+
+
+def _text_rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.select("rel_path", "chunk", "text").collect()))
+
+
+@pytest.mark.parametrize(
+    "module, call, nth",
+    [("os", "rename", 1), ("os", "rename", 2), ("shutil", "rmtree", 1), ("json", "dump", 1)],
+    ids=["rename-1", "rename-2", "rmtree", "meta-dump"],
+)
+def test_crashed_refresh_recovers(spark, corpus_dir, tmp_path, monkeypatch, module, call, nth):
+    """A refresh that dies at any step of its commit (either rename of
+    the dir swap, partway through deleting the old copy, or writing
+    _meta.json) leaves the previous sidecar and a whole store, from
+    before or after the refresh; the next build() refreshes it to the
+    tree on disk."""
+    import shutil
+
+    from mcp_rag_server_spark.sources import ingest
+
+    root = str(tmp_path / "root")
+    shutil.copytree(corpus_dir, root)
+    store = str(tmp_path / "store")
+    before = _text_rows(build(spark, root, store, PARAMS))
+    meta = _store_state(store)[1]
+    _resize_corpus(root)
+    want = _text_rows(cold_build(spark, root, PARAMS))
+
+    target = getattr(ingest, module)
+    real = getattr(target, call)
+    calls = []
+
+    def crash_on_nth(*args, **kwargs):
+        calls.append(args)
+        if len(calls) != nth:
+            return real(*args, **kwargs)
+        if call == "rmtree":  # delete one data file, then die
+            parquet = sorted(f for f in os.listdir(args[0]) if f.endswith(".parquet"))
+            os.remove(os.path.join(args[0], parquet[0]))
+        raise OSError("crash injected by the test")
+
+    monkeypatch.setattr(target, call, crash_on_nth)
+    with pytest.raises(OSError, match="crash injected"):
+        build(spark, root, store, PARAMS)
+    monkeypatch.undo()
+
+    assert _store_state(store)[1] == meta
+    assert _text_rows(load_store(spark, store, PARAMS)) in (before, want)
+    assert _text_rows(build(spark, root, store, PARAMS)) == want
 
 
 def test_refresh_decodes_only_changed_files(spark, tmp_path):
@@ -396,27 +432,21 @@ def _store_rows(spark, store: str) -> dict:
     return {(r["rel_path"], r["chunk"]): (r["id"], r["embedding"], r["want"]) for r in rows}
 
 
-@pytest.mark.parametrize(
-    "n_buckets, content_hash", [(0, False), (4, False), (0, True)],
-    ids=["flat", "bucketed", "content_hash"],
-)
-def test_stored_vectors_equal_recomputed(spark, corpus_dir, tmp_path, n_buckets, content_hash):
+def test_stored_vectors_equal_recomputed(spark, corpus_dir, tmp_path):
     """Every chunk row carries the embedder's vector of its own text, bit
     for bit in float32, after a cold build and after a refresh; the
     refresh leaves the ids and vectors of unchanged files as they were."""
-    import dataclasses
     import shutil
 
     root = str(tmp_path / "root")
     shutil.copytree(corpus_dir, root)
     store = str(tmp_path / "store")
-    params = dataclasses.replace(PARAMS, n_buckets=n_buckets, content_hash=content_hash)
-    build(spark, root, store, params)
+    build(spark, root, store, PARAMS)
     before = _store_rows(spark, store)
     assert before and all(emb == want for _, emb, want in before.values())
 
     mutate_corpus(root)
-    build(spark, root, store, params)
+    build(spark, root, store, PARAMS)
     after = _store_rows(spark, store)
     assert all(emb == want for _, emb, want in after.values())
     touched = {"notes.txt", "src/util/helpers.py", "data/config.yaml", "added.md"}
@@ -424,23 +454,32 @@ def test_stored_vectors_equal_recomputed(spark, corpus_dir, tmp_path, n_buckets,
     assert kept and {key: after[key][:2] for key in kept} == kept
 
 
-def test_v1_store_is_rebuilt_cold(spark, corpus_dir, tmp_path):
-    """A store written before chunks carried vectors (meta version 1, no
-    ``embedding`` column) fails the compat check: build() rebuilds it
-    cold instead of refreshing it, which would union rows of two
-    schemas."""
+@pytest.mark.parametrize("version", [1, 2], ids=["v1", "v2-bucketed"])
+def test_old_store_version_is_rebuilt_cold(spark, corpus_dir, tmp_path, version):
+    """A store of an older version fails the compat check: build()
+    rebuilds it cold instead of refreshing it, which would union rows of
+    two schemas. Version 1 has no ``embedding`` column; version 2 could
+    be hash-bucketed (``bucket=N`` partition dirs, ``n_buckets`` in its
+    meta), which a flat read turns into an extra ``bucket`` column."""
     store = str(tmp_path / "store")
-    save_store(cold_build(spark, corpus_dir, PARAMS).drop("embedding"), store, PARAMS)
-    meta_path = os.path.join(store, "_meta.json")
-    with open(meta_path, encoding="utf-8") as f:
-        meta = json.load(f)
-    meta["version"] = 1
-    with open(meta_path, "w", encoding="utf-8") as f:
+    chunks = cold_build(spark, corpus_dir, PARAMS)
+    meta = {
+        "version": version,
+        "chunk_size": PARAMS.chunk_size,
+        "chunk_overlap": PARAMS.chunk_overlap,
+        "model_name": PARAMS.model_name,
+    }
+    if version == 1:
+        chunks.drop("embedding").write.parquet(os.path.join(store, "chunks"))
+    else:
+        chunks.write.parquet(os.path.join(store, "chunks", "bucket=0"))
+        meta.update(content_hash=False, n_buckets=4)
+    with open(os.path.join(store, "_meta.json"), "w", encoding="utf-8") as f:
         json.dump(meta, f)
     assert load_store(spark, store, PARAMS) is None
 
     chunks = build(spark, corpus_dir, store, PARAMS)
-    assert "embedding" in chunks.columns
+    assert "embedding" in chunks.columns and "bucket" not in chunks.columns
     assert chunks.filter("embedding IS NULL").count() == 0
     assert load_store(spark, store, PARAMS) is not None
 
@@ -459,11 +498,9 @@ def _codecs(store: str) -> set[str]:
     return out
 
 
-@pytest.mark.parametrize("n_buckets", [0, 4])
-def test_store_writes_are_zstd(spark, corpus_dir, tmp_path, n_buckets):
-    """Every store write — cold build, flat or bucketed refresh, and
-    compaction — writes zstd parquet."""
-    import dataclasses
+def test_store_writes_are_zstd(spark, corpus_dir, tmp_path):
+    """Every store write — cold build, refresh, and compaction — writes
+    zstd parquet."""
     import shutil
 
     from mcp_rag_server_spark.sources.ingest import compact_store
@@ -471,12 +508,11 @@ def test_store_writes_are_zstd(spark, corpus_dir, tmp_path, n_buckets):
     root = str(tmp_path / "root")
     shutil.copytree(corpus_dir, root)
     store = str(tmp_path / "store")
-    params = dataclasses.replace(PARAMS, n_buckets=n_buckets)
-    build(spark, root, store, params)
+    build(spark, root, store, PARAMS)
     assert _codecs(store) == {"ZSTD"}
     mutate_corpus(root)
     before = _store_state(store)[0]
-    build(spark, root, store, params)
+    build(spark, root, store, PARAMS)
     assert _store_state(store)[0] != before
     assert _codecs(store) == {"ZSTD"}
     compact_store(spark, store, target_file_bytes=16 * 1024)
@@ -540,68 +576,6 @@ def test_path_guards():
     assert normalize_rel_path("/src") == "src"
     assert normalize_rel_path(".") == ""
     assert normalize_rel_path(".git") == ".git"
-
-
-def test_partitioned_store_delta_bucket_refresh(spark, corpus_dir, tmp_path):
-    """n_buckets > 0: refresh rewrites only the partition dirs whose
-    paths changed; untouched bucket dirs keep their exact files (mtime +
-    inode-level identity), and the logical table matches the flat-store
-    refresh result."""
-    import shutil
-
-    root = str(tmp_path / "pbroot")
-    shutil.copytree(corpus_dir, root)
-    store = str(tmp_path / "pbstore")
-    params = IngestParams(
-        chunk_size=120, chunk_overlap=30, allowed_ext=TEST_EXTS, n_buckets=4
-    )
-    first = build(spark, root, store, params)
-    flat = cold_build(spark, root, PARAMS)
-    # Snapshot BEFORE mutating the corpus: re-collecting `flat` later
-    # would re-scan the mutated root (its lineage reads the source files).
-    flat_rows = flat.collect()
-    assert sorted(map(tuple, first.collect())) == sorted(map(tuple, flat_rows))
-
-    chunks_dir = os.path.join(store, "chunks")
-    before = {}
-    for b in os.listdir(chunks_dir):
-        if b.startswith("bucket="):
-            d = os.path.join(chunks_dir, b)
-            before[b] = {f: os.stat(os.path.join(d, f)).st_mtime_ns
-                         for f in os.listdir(d)}
-
-    mutate_corpus(root)
-    second = build(spark, root, store, params)
-
-    # Logical result matches the flat incremental path on the same delta.
-    flat_old = spark.createDataFrame(flat_rows, flat.schema)
-    expected = incremental_update(spark, flat_old, root, PARAMS)
-    assert sorted(map(tuple, second.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
-
-    # Buckets of the touched paths (changed notes.txt, added added.md,
-    # deleted data/config.yaml) were rewritten; all other bucket dirs are
-    # byte-identical (same files, same mtimes).
-    from pyspark.sql import functions as F
-
-    touched = {"notes.txt", "added.md", "data/config.yaml"}
-    tb = {
-        r["b"]
-        for r in spark.createDataFrame([(p,) for p in touched], "rel_path string")
-        .select(F.pmod(F.hash("rel_path"), F.lit(4)).alias("b"))
-        .collect()
-    }
-    untouched_checked = 0
-    for b, files in before.items():
-        bucket_id = int(b.split("=")[1])
-        d = os.path.join(chunks_dir, b)
-        if bucket_id not in tb:
-            after = {f: os.stat(os.path.join(d, f)).st_mtime_ns
-                     for f in os.listdir(d)}
-            assert after == files, f"untouched {b} was rewritten"
-            untouched_checked += 1
-    assert untouched_checked >= 1  # the fixture spreads across buckets
 
 
 def test_compact_store_layout(spark, corpus_dir, tmp_path):

@@ -7,16 +7,14 @@ Jobs are counted by ``conftest.count_jobs`` (``setJobGroup`` +
 ceilings are the counts of the delta-proportional refresh on this
 corpus at ``local[8]``; a regression
 toward reading every body or rewriting the whole store on each build
-(a no-op reopen ran 20 jobs flat and 9 bucketed, a one-file refresh 23
-and 31, before it) fails here.
+(a no-op reopen ran 20 jobs and a one-file refresh 23 before it) fails
+here.
 """
 
 from __future__ import annotations
 
-import dataclasses
 import os
 
-import pytest
 from conftest import SF0001, count_jobs
 
 from mcp_rag_server_spark.registry import load_all
@@ -24,8 +22,8 @@ from mcp_rag_server_spark.sources.ingest import IngestParams, build
 
 PARAMS = IngestParams(chunk_size=200, chunk_overlap=40, allowed_ext=("md", "py"))
 
-#: (no-op reopen, one-file refresh) job ceilings per store layout.
-CEILINGS = {0: (4, 11), 4: (4, 12)}
+#: (no-op reopen, one-file refresh) job ceilings.
+NOOP_CEILING, REFRESH_CEILING = 4, 11
 
 
 def parquet_files(store: str) -> list[str]:
@@ -37,24 +35,21 @@ def parquet_files(store: str) -> list[str]:
     ]
 
 
-@pytest.mark.parametrize("n_buckets", sorted(CEILINGS))
-def test_warm_build_job_budget(spark, tmp_path, n_buckets):
+def test_warm_build_job_budget(spark, tmp_path):
     root = tmp_path / "corpus"
     for i in range(8):
         path = root / f"d{i % 3}" / f"f{i}.{'md' if i % 2 else 'py'}"
         path.parent.mkdir(parents=True, exist_ok=True)
         path.write_text(f"file {i} body text " * (40 + 10 * i))
     store = str(tmp_path / "store")
-    params = dataclasses.replace(PARAMS, n_buckets=n_buckets)
-    build(spark, str(root), store, params)
-    noop_ceiling, refresh_ceiling = CEILINGS[n_buckets]
+    build(spark, str(root), store, PARAMS)
 
-    assert count_jobs(spark, lambda: build(spark, str(root), store, params)) <= noop_ceiling
+    assert count_jobs(spark, lambda: build(spark, str(root), store, PARAMS)) <= NOOP_CEILING
 
     files_before = len(parquet_files(store))
     with open(root / "d1" / "f1.md", "a", encoding="utf-8") as f:
         f.write("appended so the size changes")
-    assert count_jobs(spark, lambda: build(spark, str(root), store, params)) <= refresh_ceiling
+    assert count_jobs(spark, lambda: build(spark, str(root), store, PARAMS)) <= REFRESH_CEILING
     assert len(parquet_files(store)) <= files_before
 
 
