@@ -19,13 +19,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mcp_rag_server_spark.obs import min_seconds
 from mcp_rag_server_spark.registry import load_all
 from mcp_rag_server_spark.session import get_spark
-from tools.box_probe import _WARMUP, measure_index
+from tools.box_probe import measure_index, warm_up
 
 
 def main() -> None:
@@ -44,8 +44,7 @@ def main() -> None:
     # sentinels are only meaningful on a fully-warmed JVM (all twelve
     # warm-up queries are themselves in the timed set, re-timed
     # min-of-N below, so this changes no reported number).
-    for w in _WARMUP:
-        bench_specs[w].spark_fn(spark, sf_dir).collect()
+    warm_up(spark, registry, sf_dir)
 
     # Self-adjudication (r12 verdict item 4): bracket the timed set
     # with the four box_probe sentinels so an artifact recorded on a
@@ -61,13 +60,10 @@ def main() -> None:
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
     for name in sorted(bench_specs):
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = bench_specs[name].spark_fn(spark, sf_dir)
-            df.collect()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        spark_fn = bench_specs[name].spark_fn
+        timings[name] = round(
+            min_seconds(lambda: spark_fn(spark, sf_dir).collect(), n_runs), 3
+        )
 
     probe_after = round(measure_index(spark, registry, sf_dir), 3)
 

@@ -1224,9 +1224,10 @@ def _bpe_split(dialect: str, col: str) -> str:
 # The single-statement form re-inlines every CTE per consumer: each
 # s{i} is read by p{i+1}, s{i+1} AND c{i}, so the words/s0 lineage
 # fans out multiplicatively and the formatted plan of ta_bpe_apply
-# held EIGHTEEN corpus scans at BPE_ITERS=3 (plans/r14/ta_bpe_apply_
-# before.txt). Only the word-frequency stage is corpus-cost, so ONLY
-# it is checkpointed (one eager localCheckpoint, bound as ``s0``);
+# held EIGHTEEN corpus scans at BPE_ITERS=3 (the plan at 0922401^,
+# the parent of the commit that staged it; tools/gen_plans.py
+# regenerates plans). Only the word-frequency stage is corpus-cost, so
+# ONLY it is checkpointed (one eager localCheckpoint, bound as ``s0``);
 # the merge chain above it stays one statement — its re-inlined
 # copies are vocabulary-sized, and Spark runs the independent
 # subtrees as CONCURRENT stages, which a fully-staged sequential
@@ -1360,8 +1361,8 @@ def ta_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (vocab-sized shuffles) + one word explode + one dictionary
     join + a source-keyed aggregate. r14: the corpus-cost words/s0
     stage is checkpointed once (the single-statement form re-inlined
-    it into EIGHTEEN corpus scans — plans/r14/ta_bpe_apply_before
-    .txt) and the bound corpus is spread_scan'd on doc_id so the
+    it into EIGHTEEN corpus scans — the plan at commit 0922401^)
+    and the bound corpus is spread_scan'd on doc_id so the
     two remaining corpus explodes (word counts, docw) run parallel
     on single-row-group fixture layouts."""
     docs = spread_scan(load_table(spark, sf_dir, "documents"), "doc_id")

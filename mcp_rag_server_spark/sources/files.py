@@ -29,6 +29,7 @@ their paths to the reader itself.
 
 from __future__ import annotations
 
+import os
 import posixpath
 import re
 from collections.abc import Callable, Iterable, Iterator
@@ -114,8 +115,10 @@ def discover_files(
     With ``with_content=False`` the ``content`` column is pruned from
     ReadSchema, so discovery never reads file bodies. An empty allow-list
     matches nothing; an extension holding a glob metacharacter raises
-    ``ValueError``.
+    ``ValueError``. A relative ``root`` is resolved against the current
+    directory.
     """
+    root = os.path.abspath(root)
     for ext in allowed_ext:
         if _EXT_GLOB_META.search(ext):
             raise ValueError(
@@ -154,6 +157,7 @@ def read_files(
     filter over :func:`discover_files` would still read every body; the
     paths go to the reader itself instead. The reader glob-expands an
     explicit path, so glob metacharacters in a name are escaped."""
+    root = os.path.abspath(root)
     paths = [
         _PATH_GLOB_META.sub(r"\\\1", posixpath.join(root, p)) for p in rel_paths
     ]
@@ -338,7 +342,9 @@ def within_root_col(path_col: F.Column, root: str = "/corpus") -> F.Column:
 def normalize_rel_path(p: str | None) -> str:
     """list_files dir normalization (reference src/index.ts:330-341):
     ``"."``/``"./"``/empty → root (""); strip a leading ``./`` or a
-    single leading slash; dot-names like ``.git`` survive."""
+    single leading slash, and trailing slashes (the reference resolves
+    ``dir`` as a path, so ``src/`` is ``src``); dot-names like ``.git``
+    survive."""
     if p is None:
         return ""
     p = p.strip()
@@ -348,4 +354,4 @@ def normalize_rel_path(p: str | None) -> str:
         p = p[2:]
     elif p.startswith("/"):
         p = p[1:]
-    return p
+    return p.rstrip("/")

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.functions.text import chunk_array
+from mcp_rag_server_spark.sources.ingest import IngestParams, chunk_files
 
 
 def read_text_file_stream(
@@ -60,34 +60,6 @@ def read_text_file_stream(
         rel.alias("rel_path"),
         F.col("_metadata.file_size").alias("file_size"),
         F.col("value").alias("text"),
-    )
-
-
-def chunk_stream(
-    texts: DataFrame, chunk_size: int = 800, chunk_overlap: int = 120
-) -> DataFrame:
-    """Streaming chunk explosion — identical chunk semantics to the
-    batch path (functions/text.py::chunk_array), keyed by the natural
-    (rel_path, chunk) composite instead of a global counter."""
-    return (
-        texts.withColumn(
-            "line_count", F.size(F.split("text", r"\r?\n")).cast("int")
-        )
-        .select(
-            "rel_path",
-            "file_size",
-            "line_count",
-            F.posexplode(chunk_array("text", chunk_size, chunk_overlap)).alias(
-                "chunk", "chunk_text"
-            ),
-        )
-        .select(
-            "rel_path",
-            F.col("chunk").cast("int").alias("chunk"),
-            F.col("chunk_text").alias("text"),
-            "file_size",
-            "line_count",
-        )
     )
 
 
@@ -124,7 +96,9 @@ def run_ingest_stream(
     Batches land via :func:`append_batch` (batch_id-partitioned dynamic
     overwrite), so checkpoint batch replay cannot duplicate chunks."""
     texts = read_text_file_stream(spark, root, ext=ext)
-    chunks = chunk_stream(texts, chunk_size, chunk_overlap)
+    chunks = chunk_files(
+        texts, IngestParams(chunk_size=chunk_size, chunk_overlap=chunk_overlap)
+    )
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         append_batch(store_dir, batch_df, batch_id)

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import itertools
 import os
 import sys
 
@@ -10,23 +9,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
-
-_groups = itertools.count()
-
-
-def count_jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs, counted under a fresh job group
-    (``setJobGroup`` + ``statusTracker()`` work with the UI off)."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # Job events reach the status store through the async listener bus.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

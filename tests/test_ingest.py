@@ -28,6 +28,7 @@ from mcp_rag_server_spark.sources.files import (
     discover_files,
     ensure_within_root,
     normalize_rel_path,
+    read_files,
 )
 from mcp_rag_server_spark.sources.ingest import (
     STORE_VERSION,
@@ -103,6 +104,20 @@ def test_discovery_filters(spark, corpus_dir):
         rel: len(text.encode()) for rel, text in expected_files().items()
     }
     assert got == exp
+
+
+def test_relative_root_lists_relative_paths(spark, corpus_dir, monkeypatch):
+    """A relative root is resolved against the current directory: its
+    rel_paths are the absolute root's, for the listing and the body read."""
+    monkeypatch.chdir(os.path.dirname(corpus_dir))
+    rel_root = os.path.basename(corpus_dir)
+
+    def rel_paths(df):
+        return sorted(r["rel_path"] for r in df.collect())
+
+    want = rel_paths(discover_files(spark, corpus_dir, allowed_ext=TEST_EXTS))
+    assert rel_paths(discover_files(spark, rel_root, allowed_ext=TEST_EXTS)) == want
+    assert rel_paths(read_files(spark, rel_root, ["notes.txt"])) == ["notes.txt"]
 
 
 def test_cold_build_matches_reference_chunker(spark, corpus_dir):
@@ -565,6 +580,14 @@ def test_list_files_semantics(spark, corpus_dir):
     assert rows == ["data", "src"]
 
 
+def test_list_files_trailing_slash(spark, corpus_dir):
+    """``src/`` names the directory ``src`` (the reference resolves
+    ``dir`` as a path, src/index.ts:342-352)."""
+    cat = file_catalog(discover_files(spark, corpus_dir, allowed_ext=TEST_EXTS))
+    want = list_files(cat, "src").collect()
+    assert want and list_files(cat, "src/").collect() == want
+
+
 def test_path_guards():
     assert ensure_within_root("/a/b", "x/y.txt") == "/a/b/x/y.txt"
     assert ensure_within_root("/a/b", ".") == "/a/b"
@@ -575,6 +598,8 @@ def test_path_guards():
     assert normalize_rel_path("./src") == "src"
     assert normalize_rel_path("/src") == "src"
     assert normalize_rel_path(".") == ""
+    assert normalize_rel_path("./") == ""
+    assert normalize_rel_path("src/") == "src"
     assert normalize_rel_path(".git") == ".git"
 
 

@@ -2,7 +2,7 @@
 its delta costs, not what the corpus costs; and job attribution of
 construction-time jobs run on pool threads.
 
-Jobs are counted by ``conftest.count_jobs`` (``setJobGroup`` +
+Jobs are counted by ``obs.count_jobs`` (``setJobGroup`` +
 ``statusTracker()``, both work with ``spark.ui.enabled=false``). The
 ceilings are the counts of the delta-proportional refresh on this
 corpus at ``local[8]``; a regression
@@ -15,8 +15,9 @@ from __future__ import annotations
 
 import os
 
-from conftest import SF0001, count_jobs
+from conftest import SF0001
 
+from mcp_rag_server_spark.obs import count_jobs, profile
 from mcp_rag_server_spark.registry import load_all
 from mcp_rag_server_spark.sources.ingest import IngestParams, build
 
@@ -58,7 +59,9 @@ def test_pooled_construction_jobs_carry_caller_job_group(spark):
     on a thread pool; those jobs must be attributed to the job group of
     the thread that built the query, or a per-query job count reads 0.
     A first build warms the relation memo, so the counted build runs
-    no schema-inference job on the calling thread: only pooled jobs."""
+    no schema-inference job on the calling thread: only pooled jobs,
+    which ``obs.profile`` files under the query's ``build`` layer."""
     q21 = load_all()["tpch_q21_waiting_orders"].spark_fn
     q21(spark, SF0001)
     assert count_jobs(spark, lambda: q21(spark, SF0001)) > 0
+    assert profile(spark, lambda: q21(spark, SF0001))["build"]["jobs"] > 0

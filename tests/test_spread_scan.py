@@ -26,10 +26,11 @@ from __future__ import annotations
 import os
 
 import pytest
-from conftest import SF0001, SF001, count_jobs
+from conftest import SF0001, SF001
 
 from mcp_rag_server_spark import session
 from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.obs import count_jobs
 from mcp_rag_server_spark.registry import load_all
 from mcp_rag_server_spark.session import spread_scan
 

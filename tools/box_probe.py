@@ -30,11 +30,11 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from mcp_rag_server_spark.obs import min_seconds  # noqa: E402
 from mcp_rag_server_spark.registry import load_all  # noqa: E402
 from mcp_rag_server_spark.session import get_spark  # noqa: E402
 
@@ -73,20 +73,22 @@ _WARMUP = (
 )
 
 
+def warm_up(spark, reg, sf_dir: str) -> None:
+    """Run the :data:`_WARMUP` queries once each."""
+    for w in _WARMUP:
+        reg[w].spark_fn(spark, sf_dir).collect()
+
+
 def measure_index(spark, reg, sf_dir: str, verbose: bool = False) -> float:
     """Time the four sentinels (min-of-5) against their pinned refs and
     return the geomean condition index. The caller is responsible for a
-    bench-like warm JVM (see _WARMUP) — on a cold session the ratios
-    read JIT, not box condition."""
+    bench-like warm JVM (:func:`warm_up`) — on a cold session the
+    ratios read JIT, not box condition."""
     ratios = []
     if verbose:
         print(f"{'sentinel':16s} {'ref':>7s} {'now':>7s} {'ratio':>6s}")
     for name, ref in SENTINEL_REF.items():
-        best = float("inf")
-        for _ in range(5):
-            t0 = time.perf_counter()
-            reg[name].spark_fn(spark, sf_dir).collect()
-            best = min(best, time.perf_counter() - t0)
+        best = min_seconds(lambda: reg[name].spark_fn(spark, sf_dir).collect(), 5)
         r = best / ref
         ratios.append(r)
         if verbose:
@@ -102,8 +104,7 @@ def main() -> int:
 
     # bench-like warm-up so ratios compare like with like (the refs
     # were recorded in a fully-warmed bench session — see _WARMUP)
-    for w in _WARMUP:
-        reg[w].spark_fn(spark, sf_dir).collect()
+    warm_up(spark, reg, sf_dir)
 
     index = measure_index(spark, reg, sf_dir, verbose=True)
     verdict = (

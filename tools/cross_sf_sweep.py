@@ -15,50 +15,17 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
-from test_oracle_parity import canon_rows  # noqa: E402
-
-from mcp_rag_server_spark.catalog import TABLES  # noqa: E402
-from mcp_rag_server_spark.registry import load_all  # noqa: E402
 from mcp_rag_server_spark.session import get_spark  # noqa: E402
+from tools.verify_contract import replay  # noqa: E402
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="cross_sf_sweep", cpus=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    bad, err = [], []
-    reg = load_all()
-    for name in sorted(reg):
-        spec = reg[name]
-        try:
-            spdf = spec.spark_fn(spark, sf_dir).toPandas()
-            if spec.oracle is None:
-                continue
-            ddf = con.execute(spec.oracle).fetchdf()
-            srows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
-            drows = [tuple(r) for r in ddf.itertuples(index=False, name=None)]
-            if canon_rows(list(spdf.columns), srows) != canon_rows(
-                list(ddf.columns), drows
-            ):
-                bad.append(name)
-                print(f"MISMATCH {name}")
-        except Exception as e:  # noqa: BLE001 - sweep must report, not die
-            err.append(name)
-            print(f"ERROR {name}: {str(e)[:160]}")
-    print(f"swept {len(reg)} queries at {sf_dir}: "
-          f"{len(bad)} mismatches, {len(err)} errors")
-    return 1 if (bad or err) else 0
+    return 1 if replay(spark, sf_dir) else 0
 
 
 if __name__ == "__main__":

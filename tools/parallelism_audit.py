@@ -68,22 +68,19 @@ ALLOW = {
 }
 
 _CHILD = r"""
-import sys, time, json
+import sys, json
 sys.path.insert(0, %(repo)r)
+from mcp_rag_server_spark.obs import min_seconds
 from mcp_rag_server_spark.registry import load_all
 from mcp_rag_server_spark.session import get_spark
 spark = get_spark(app_name="parallelism_audit", cpus=%(cpus)r)
 spark.sparkContext.setLogLevel("ERROR")
 bench = {n: s for n, s in load_all().items() if s.bench}
 bench["rag_topk"].spark_fn(spark, %(sf)r).collect()
-t = {}
-for name in sorted(bench):
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        bench[name].spark_fn(spark, %(sf)r).collect()
-        best = min(best, time.perf_counter() - t0)
-    t[name] = round(best, 3)
+t = {
+    name: round(min_seconds(lambda: spec.spark_fn(spark, %(sf)r).collect(), 2), 3)
+    for name, spec in sorted(bench.items())
+}
 json.dump(t, open(%(out)r, "w"))
 """
 

@@ -16,33 +16,18 @@ Exit code 1 on any mismatch or error.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from tools.verify_contract import replay  # noqa: E402
 
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-
-    import duckdb
     from pyspark.sql import SparkSession
-
-    from test_oracle_parity import canon_rows
-
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
 
     spark = (
         SparkSession.builder.master("local[3]")
@@ -51,44 +36,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    qs, osql = mod.queries(), mod.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{sf}/{t}.parquet')"
-        )
-    bad: list[str] = []
-    unchecked: list[str] = []  # ran, but no oracle to compare against
-    for name in sorted(qs):
-        try:
-            spdf = qs[name](spark, sf).toPandas()
-            srows = [
-                tuple(r) for r in spdf.itertuples(index=False, name=None)
-            ]
-            if name in osql:
-                ddf = con.execute(osql[name]).fetchdf()
-                drows = [
-                    tuple(r)
-                    for r in ddf.itertuples(index=False, name=None)
-                ]
-                if canon_rows(list(spdf.columns), srows) != canon_rows(
-                    list(ddf.columns), drows
-                ):
-                    bad.append(name)
-                    print("MISMATCH", name)
-            else:
-                unchecked.append(name)
-        except Exception as e:  # noqa: BLE001 - sweep reports, not raises
-            bad.append(name)
-            print("ERROR", name, type(e).__name__, str(e)[:160])
-    compared = len(qs) - len(unchecked) - len(bad)
-    print(
-        f"swept {len(qs)} queries at local[3]/3: {compared} compared and"
-        f" matched, {len(unchecked)} ran-but-no-oracle {unchecked},"
-        f" {len(bad)} bad {bad}"
-    )
-    return 1 if bad else 0
+    return 1 if replay(spark, sf) else 0
 
 
 if __name__ == "__main__":

@@ -37,30 +37,21 @@ from test_oracle_parity import canon_rows  # noqa: E402
 from mcp_rag_server_spark.catalog import TABLES  # noqa: E402
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+def load_entry():
+    """``__spark_entry__`` loaded by path, as the driver loads it."""
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
 
-    from pyspark.sql import SparkSession
 
-    builder = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-    )
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
-    for kv in filter(None, extra.split(",")):
-        k, _, v = kv.partition("=")
-        print(f"extra conf: {k.strip()}={v.strip()}")
-        builder = builder.config(k.strip(), v.strip())
-    spark = builder.getOrCreate()
-    df = mod.entry(spark)
-    print("entry rows:", len(df.collect()), df.schema.simpleString()[:120])
-
+def replay(spark, sf_dir: str) -> int:
+    """Every ``queries()`` entry at ``sf_dir`` against its
+    ``oracle_sql()`` under the driver's comparison; prints one line per
+    failure plus a TOTAL line and returns the number of failures."""
+    mod = load_entry()
     qs, osql = mod.queries(), mod.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
@@ -89,8 +80,28 @@ def main() -> int:
         if not ok:
             nbad += 1
             print(f"{name}: MISMATCH ({len(srows)} spark rows)")
-    print(f"TOTAL {len(qs)} MISMATCHES {nbad}")
-    return 1 if nbad else 0
+    print(f"TOTAL {len(qs)} at {sf_dir} MISMATCHES {nbad}")
+    return nbad
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    from pyspark.sql import SparkSession
+
+    builder = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+    )
+    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
+    for kv in filter(None, extra.split(",")):
+        k, _, v = kv.partition("=")
+        print(f"extra conf: {k.strip()}={v.strip()}")
+        builder = builder.config(k.strip(), v.strip())
+    spark = builder.getOrCreate()
+    df = load_entry().entry(spark)
+    print("entry rows:", len(df.collect()), df.schema.simpleString()[:120])
+    return 1 if replay(spark, sf_dir) else 0
 
 
 if __name__ == "__main__":
