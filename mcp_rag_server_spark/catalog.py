@@ -9,8 +9,11 @@ rely on Catalyst for column pruning + predicate pushdown.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
+import tempfile
 import uuid
 from urllib.parse import unquote, urlparse
 
@@ -97,6 +100,19 @@ def input_files(
     return tuple(
         sorted((p, st.st_size, st.st_mtime_ns) for p, st in zip(paths, stats))
     )
+
+
+def scratch_dir(tag: str, sf_dir: str) -> str:
+    """An emptied ``<tmp>/spark_graft_<tag>_<md5(sf_dir)[:8]>`` for a
+    side-effect query's files (corpus, store, stream source and
+    checkpoint). Keyed by ``sf_dir`` alone, so it assumes one run per
+    (tag, sf_dir) at a time: the registry runs its queries one after
+    another, and two concurrent same-sf runs would delete each other's
+    live files."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    base = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{digest}")
+    shutil.rmtree(base, ignore_errors=True)
+    return base
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -29,15 +29,13 @@ under test.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, scratch_dir
 from mcp_rag_server_spark.functions.numeric import finite_col
 from mcp_rag_server_spark.functions.text import chunk_stride
 from mcp_rag_server_spark.registry import register
@@ -205,9 +203,7 @@ def ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "lang", "text")
         .collect()
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_rt_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_rt", sf_dir)
     root = os.path.join(base, "corpus")
     store = os.path.join(base, "store")
     os.makedirs(root, exist_ok=True)
@@ -291,9 +287,7 @@ def ingest_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "lang", "text")
         .collect()
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_cp_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_cp", sf_dir)
     root = os.path.join(base, "corpus")
     store = os.path.join(base, "store")
     os.makedirs(root, exist_ok=True)
@@ -375,9 +369,7 @@ def st_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "lang", "text")
         .collect()
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_st_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_st", sf_dir)
     root = os.path.join(base, "corpus")
     store = os.path.join(base, "store")
     ckpt = os.path.join(base, "ckpt")
@@ -447,9 +439,7 @@ def ingest_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the un-partitioned fixture — a pruning bug that drops or doubles a
     directory flips the hash."""
     ev = load_table(spark, sf_dir, "events")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_pt_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_pt", sf_dir)
     ev.repartition("event_type").write.partitionBy("event_type").parquet(base)
     back = spark.read.parquet(base).filter(
         F.col("event_type").isin(*PT_KEEP)
@@ -522,9 +512,7 @@ def ingest_text_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < TXT_USERS)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_tx_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_tx", sf_dir)
     jdir, cdir = os.path.join(base, "jsonl"), os.path.join(base, "csv")
     ev.repartition(4).write.option("timestampFormat", TXT_TS_FMT).json(jdir)
     ev.drop("ts").repartition(4).write.option("header", "true").csv(cdir)
@@ -607,8 +595,8 @@ def ingest_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining exchange."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_bk_{digest}")
+    base = scratch_dir("ingest_bk", sf_dir)
+    digest = base[-8:]  # scratch_dir's sf_dir key, shared by the table names
     to, tl = f"bk_orders_{digest}", f"bk_lineitem_{digest}"
     (
         o.select("o_orderkey", "o_orderpriority")
@@ -690,9 +678,7 @@ def ingest_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletion domain. The final audit aggregate runs over the whole
     post-delete store and is hashed against the oracle's NOT IN."""
     ev = load_table(spark, sf_dir, "events")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_gd_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_gd", sf_dir)
     store = os.path.join(base, "store")
     (
         ev.withColumn("user_bucket", F.col("user_id") % GDPR_BUCKETS)
@@ -808,11 +794,7 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, backfills anything but NULL, or loses the added column on
     the v1 slice flips the hash."""
     o = load_table(spark, sf_dir, "orders")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ingest_sev_{digest}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_sev", sf_dir)
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -878,11 +860,7 @@ def ingest_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     forgets the anti-join (or applies it to the wrong id) resurfaces a
     tombstoned row and flips the hash."""
     docs = load_table(spark, sf_dir, "documents")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ingest_mor_{digest}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_mor", sf_dir)
     docs.coalesce(1).write.parquet(os.path.join(base, "base"))
     docs.filter(F.col("doc_id") % MOR_DELETE_MOD == 0).select(
         "doc_id"
@@ -945,9 +923,7 @@ def ingest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning; the version column here is the audit that the manifest
     indirection works."""
     docs = load_table(spark, sf_dir, "documents")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_ingest_tt_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_tt", sf_dir)
     os.makedirs(base)
     f_base = os.path.join(base, "data_base")
     f_delta = os.path.join(base, "data_delta")
@@ -1027,11 +1003,7 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < TXT_USERS)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ingest_orc_{digest}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_orc", sf_dir)
     odir = os.path.join(base, "events_orc")
     ev.repartition(4).write.orc(odir)
     schema = (
@@ -1108,11 +1080,7 @@ def ingest_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < TXT_USERS)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ingest_bad_{digest}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_bad", sf_dir)
     cdir = os.path.join(base, "csv")
     ev.drop("ts").repartition(4).write.csv(cdir)
     with open(os.path.join(cdir, "part-99999-bad.csv"), "w") as fh:
@@ -1125,7 +1093,7 @@ def ingest_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A prior same-session invocation cached a read of this SAME path;
     # CacheManager dedupes by analyzed plan, so without invalidation
     # the fresh .cache() below silently resolves to the stale
-    # InMemoryRelation whose part files the rmtree above deleted.
+    # InMemoryRelation whose part files scratch_dir deleted.
     spark.catalog.refreshByPath(cdir)
     parsed = (
         spark.read.schema(schema)
@@ -1205,11 +1173,7 @@ def ingest_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-level diffs first, row-level joins only within changed
     files."""
     docs = load_table(spark, sf_dir, "documents")
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ingest_sd_{digest}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("ingest_sd", sf_dir)
     os.makedirs(base)
     f_base = os.path.join(base, "data_base")
     f_delta = os.path.join(base, "data_delta")

@@ -140,16 +140,16 @@ def _meta_path(store_path: str) -> str:
     return os.path.join(store_path, META_FILE)
 
 
-def _recover_interrupted_swap(data_dir: str) -> None:
-    """:func:`_rewrite_data`'s swap is two renames, not one atomic op: a
-    crash between them leaves the canonical ``chunks`` dir missing and
-    the previous copy at ``chunks.old``. Openers call this first to roll
-    the store back to that copy. The meta sidecar is written only after
-    a swap completes, so the rolled-back store is consistent: a refresh
-    re-finds its delta, and a compaction is a pure layout rewrite."""
-    old = data_dir + ".old"
-    if not os.path.exists(data_dir) and os.path.exists(old):
-        os.rename(old, data_dir)
+def recover_dir(path: str) -> None:
+    """Roll back a :func:`replace_dir` cut between its two renames: the
+    live ``path`` is missing and its previous copy waits at ``.old``.
+    Every reader of a swapped directory calls this first. The chunk
+    store's meta sidecar is written only after a swap completes, so the
+    rolled-back store is consistent: a refresh re-finds its delta, and
+    a compaction is a pure layout rewrite."""
+    old = path + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
 
 
 def _store_writer(df: DataFrame):
@@ -157,24 +157,31 @@ def _store_writer(df: DataFrame):
     return df.write.mode("overwrite").option("compression", STORE_CODEC)
 
 
-def _rewrite_data(df: DataFrame, data_dir: str) -> None:
-    """Replace the store's data dir with ``df``, which may read it.
+def replace_dir(path: str, write: Callable[[str], None]) -> None:
+    """Replace the directory ``path`` (or create it) with the one
+    ``write(staged)`` writes; the package's one way to replace a live
+    directory.
 
-    Spark cannot read and overwrite one parquet dir in one job, so ``df``
-    is staged beside it and swapped in: data → ``.old``, staged → data,
-    then ``.old`` is deleted. Never ``collect()`` the table through the
-    driver (it may be 100 TB). A crash at any point leaves a complete
-    copy: before the first rename the data dir is untouched, between
-    the renames :func:`_recover_interrupted_swap` rolls back to
+    Spark cannot read and overwrite one parquet dir in one job, so the
+    new copy is staged at ``path.next`` — ``write`` may read ``path``
+    and may add sidecar files after its data — and swapped in: path →
+    ``.old``, staged → path, then ``.old`` is deleted. Never
+    ``collect()`` the table through the driver (it may be 100 TB). A
+    crash at any point leaves a complete copy: before the first rename
+    ``path`` is untouched (the next ``write`` overwrites the leftover
+    staged dir), between the renames :func:`recover_dir` rolls back to
     ``.old``, and after the second the new copy is in place. A
     concurrent reader during the window would need an external lock
-    (out of scope for a single-writer store)."""
-    staged, old = data_dir + ".next", data_dir + ".old"
-    _store_writer(df).parquet(staged)
+    (out of scope for a single writer)."""
+    staged, old = path + ".next", path + ".old"
+    write(staged)
+    if not os.path.exists(path):
+        os.rename(staged, path)
+        return
     if os.path.exists(old):
         shutil.rmtree(old)
-    os.rename(data_dir, old)
-    os.rename(staged, data_dir)
+    os.rename(path, old)
+    os.rename(staged, path)
     shutil.rmtree(old)
 
 
@@ -229,7 +236,7 @@ def load_store(
     if not compatible:
         return None
     data_dir = os.path.join(store_path, "chunks")
-    _recover_interrupted_swap(data_dir)
+    recover_dir(data_dir)
     return spark.read.parquet(data_dir)
 
 
@@ -360,7 +367,8 @@ def build(
         # No more parquet files than the store being replaced: each file
         # carries a fixed footer/schema overhead, so a refresh must not
         # fragment the store.
-        _rewrite_data(chunks.coalesce(max(1, len(input_files(cur_dir)))), cur_dir)
+        chunks = chunks.coalesce(max(1, len(input_files(cur_dir))))
+        replace_dir(cur_dir, _store_writer(chunks).parquet)
         _write_meta(store_path, params)
     # The swap replaced files under a path Spark may have listed; drop the
     # stale listing before handing back a reader.
@@ -388,22 +396,20 @@ def compact_store(
     + one footer read each).
 
     Returns the number of files written. The compacted copy is swapped
-    in by :func:`_rewrite_data`; the _meta.json sidecar lives at the
+    in by :func:`replace_dir`; the _meta.json sidecar lives at the
     store root and is untouched.
     """
     import math
 
     data_dir = os.path.join(store_path, "chunks")
-    _recover_interrupted_swap(data_dir)
+    recover_dir(data_dir)
     df = spark.read.parquet(data_dir)
     total_bytes = sum(size for _, size, _ in input_files(data_dir))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    _rewrite_data(
-        df.repartitionByRange(n_files, F.col(range_col)).sortWithinPartitions(
-            range_col
-        ),
-        data_dir,
+    df = df.repartitionByRange(n_files, F.col(range_col)).sortWithinPartitions(
+        range_col
     )
+    replace_dir(data_dir, _store_writer(df).parquet)
     # Same stale-FileStatusCache hazard as build(): a same-session reader
     # that already listed the store would otherwise see deleted files.
     spark.catalog.refreshByPath(data_dir)

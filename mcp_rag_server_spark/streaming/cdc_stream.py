@@ -13,23 +13,24 @@ what makes the streaming result hash-comparable to the batch oracle.
 Scale shape: each batch shuffles once on the merge key; the snapshot
 table is O(distinct keys), not O(events); on Delta/Iceberg the
 union+argmax+swap becomes a real MERGE INTO. The plain-parquet swap
-here is the same staging discipline sources/ingest.py uses.
+here is sources/ingest.py's :func:`replace_dir`, the one the chunk
+store's refresh uses.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, scratch_dir
 from mcp_rag_server_spark.registry import register
-
-N_SPLIT_FILES = 4
+from mcp_rag_server_spark.sources.ingest import recover_dir, replace_dir
+from mcp_rag_server_spark.streaming.events_stream import (
+    run_foreach_batch,
+    split_file_stream,
+)
 
 _STATE_COLS = (
     "user_id",
@@ -90,9 +91,9 @@ def _merge_snapshots(a: DataFrame, b: DataFrame) -> DataFrame:
 def applied_batch_id(snapshot_dir: str) -> int:
     """Highest batch_id merged into the snapshot (-1 if none). Stored as
     a ``_batch_id`` sidecar INSIDE the snapshot directory —
-    underscore-prefixed, so parquet readers ignore it — and swapped
-    atomically with the snapshot itself by the rename in
-    :func:`apply_batch`."""
+    underscore-prefixed, so parquet readers ignore it — written into
+    the staged copy before :func:`apply_merge_batch` swaps it in, so
+    the mark and the rows it describes are replaced together."""
     marker = os.path.join(snapshot_dir, "_batch_id")
     if not os.path.exists(marker):
         return -1
@@ -100,53 +101,31 @@ def applied_batch_id(snapshot_dir: str) -> int:
         return int(fh.read().strip())
 
 
-def _recover_snapshot_swap(tgt: str) -> None:
-    """Roll an interrupted swap forward (same discipline as
-    sources/ingest.py's staged store swap): a crash between the rmtree
-    of the old snapshot and the rename of the staged one leaves only
-    ``tgt.next``. The staged dir is promoted ONLY when its ``_batch_id``
-    marker exists — the marker is written after the parquet write
-    completes, so its presence proves completeness; without it (crash
-    mid-write, including a FIRST batch where no old snapshot existed)
-    the partial dir is discarded and the replayed batch rebuilds it.
-    A complete ``tgt.next`` beside a live ``tgt`` is a crash before the
-    rmtree: discarded too, since the batch replays against the intact
-    snapshot."""
-    nxt = tgt + ".next"
-    if not os.path.exists(nxt):
-        return
-    staged_complete = os.path.exists(os.path.join(nxt, "_batch_id"))
-    if staged_complete and not os.path.exists(tgt):
-        os.rename(nxt, tgt)
-    else:
-        shutil.rmtree(nxt)
-
-
 def apply_merge_batch(tgt, batch, batch_id, snapshot_fn, merge_fn) -> None:
     """Generic idempotent foreachBatch MERGE: collapse the micro-batch
     with ``snapshot_fn``, combine with the existing snapshot via the
-    associative+commutative ``merge_fn``, and swap atomically. A
-    batch_id at or below the snapshot's recorded high-water mark is a
-    checkpoint replay (crash after the snapshot swap but before the
-    checkpoint commit) and is skipped — re-merging would double-count.
-    An interrupted swap from a previous crash is rolled forward first,
-    so the pre-merge read never sees a missing snapshot. Shared by the
-    SCD-1 merge below and the incremental rollup
-    (streaming/rollup_stream.py)."""
+    associative+commutative ``merge_fn``, and replace the snapshot with
+    sources/ingest.py's :func:`replace_dir` (two renames; a crash
+    between them is rolled back to the previous snapshot by
+    :func:`recover_dir` before the next read). A batch_id at or below
+    the snapshot's recorded high-water mark is a checkpoint replay
+    (crash after the swap but before the checkpoint commit) and is
+    skipped — re-merging would double-count. Shared by every merged
+    stream (:func:`run_merge_stream`)."""
     s = batch.sparkSession
-    _recover_snapshot_swap(tgt)
-    if os.path.exists(tgt) and batch_id <= applied_batch_id(tgt):
+    recover_dir(tgt)
+    if batch_id <= applied_batch_id(tgt):
         return
     snap = snapshot_fn(batch)
     if os.path.exists(tgt):
         snap = merge_fn(s.read.parquet(tgt), snap)
-    nxt = tgt + ".next"
-    snap.write.mode("overwrite").parquet(nxt)
-    with open(os.path.join(nxt, "_batch_id"), "w", encoding="ascii") as fh:
-        fh.write(str(batch_id))
-    if os.path.exists(tgt):
-        shutil.rmtree(tgt)
-    os.rename(nxt, tgt)
+
+    def write(staged: str) -> None:
+        snap.write.mode("overwrite").parquet(staged)
+        with open(os.path.join(staged, "_batch_id"), "w", encoding="ascii") as fh:
+            fh.write(str(batch_id))
+
+    replace_dir(tgt, write)
     s.catalog.refreshByPath(tgt)
 
 
@@ -155,30 +134,20 @@ def apply_batch(tgt: str, batch: DataFrame, batch_id: int) -> None:
     apply_merge_batch(tgt, batch, batch_id, _batch_snapshot, _merge_snapshots)
 
 
-def run_scd1_stream(spark: SparkSession, src_dir: str, target_dir: str) -> str:
-    """Stream the change-log files one per trigger, merging each batch
-    into the snapshot table; returns the snapshot path."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+def run_merge_stream(events: DataFrame, base: str, snapshot_fn, merge_fn) -> DataFrame:
+    """Split ``events`` into files under ``base/src``, stream them one
+    file per trigger through :func:`apply_merge_batch` into
+    ``base/out`` (checkpoint ``base/_checkpoint``) and return the
+    merged table read back."""
+    tgt = os.path.join(base, "out")
+    run_foreach_batch(
+        split_file_stream(events, os.path.join(base, "src")),
+        lambda batch, batch_id: apply_merge_batch(
+            tgt, batch, batch_id, snapshot_fn, merge_fn
+        ),
+        os.path.join(base, "_checkpoint"),
     )
-    tgt = os.path.join(target_dir, "latest_state")
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        apply_batch(tgt, batch, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", os.path.join(target_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return tgt
+    return events.sparkSession.read.parquet(tgt)
 
 
 @register(
@@ -212,24 +181,12 @@ def st_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split. The driver-hashed row set therefore proves both the
     streaming plumbing (checkpointed foreachBatch upsert, idempotent
     under batch replay via the _batch_id sidecar) and the merge
-    algebra.
-
-    The digest-keyed temp dir assumes one run per (process, sf_dir) at
-    a time — the driver executes registry queries sequentially, and the
-    suite runs single-process; concurrent same-sf invocations (e.g.
-    pytest-xdist) would wipe each other's live state at the rmtree.
-    Same single-writer contract as ingest_compacted's corpus dir."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_st_scd1_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
+    algebra. Its scratch dir is keyed by sf_dir alone (one run per
+    sf_dir at a time, see catalog.scratch_dir)."""
     ev = load_table(spark, sf_dir, "events")
-    ev.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src)
-    tgt = run_scd1_stream(spark, src, os.path.join(base, "out"))
-    return (
-        spark.read.parquet(tgt)
-        .select(
-            "user_id", "last_ts", "last_event_type", "last_value", "n_events"
-        )
-        .orderBy("user_id")
+    snap = run_merge_stream(
+        ev, scratch_dir("st_scd1", sf_dir), _batch_snapshot, _merge_snapshots
     )
+    return snap.select(
+        "user_id", "last_ts", "last_event_type", "last_value", "n_events"
+    ).orderBy("user_id")

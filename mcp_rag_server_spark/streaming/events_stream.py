@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,7 +32,11 @@ from pyspark.sql import functions as F
 from mcp_rag_server_spark.catalog import normalize_event_ts
 from mcp_rag_server_spark.functions.numeric import dsum, duckdb_dsum
 from mcp_rag_server_spark.registry import register
+from mcp_rag_server_spark.sources.ingest import recover_dir, replace_dir
 
+#: Files a merged or stateful stream's source is split into (one per
+#: trigger, see :func:`split_file_stream`).
+N_SPLIT_FILES = 4
 SESSION_GAP = "30 minutes"
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -53,27 +58,56 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(stream)
 
 
+def split_file_stream(events: DataFrame, src_dir: str) -> DataFrame:
+    """Write ``events`` as :data:`N_SPLIT_FILES` parquet files under
+    ``src_dir`` and stream them back one file per trigger, so a
+    stateful or merging sink genuinely runs that many micro-batches."""
+    events.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src_dir)
+    return (
+        events.sparkSession.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
+
+
 def run_to_memory(
     result: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Execute a streaming aggregation to completion (availableNow) into
     a memory sink and return the final table. availableNow processes the
     whole backlog as micro-batches then stops — the batch-parity mode of
-    a streaming query."""
+    a streaming query. The memory sink keeps its rows in the driver, so
+    the checkpoint dir is deleted once the query has terminated."""
     name = "st_" + uuid.uuid4().hex[:12]
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="st_ckpt_"), name),
+    with tempfile.TemporaryDirectory(prefix="st_ckpt_") as ckpt:
+        q = (
+            result.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
+        q.awaitTermination()
+    return result.sparkSession.table(name)
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> None:
+    """Run ``stream`` to completion (availableNow), handing each
+    micro-batch and its batch id to ``sink``. The checkpoint makes a
+    rerun resume after the last committed batch; a batch whose sink
+    call died is delivered again."""
+    (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    return result.sparkSession.table(name)
 
 
 def hourly_windows(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -223,54 +257,34 @@ def merge_events_stream(
     keyed by event_id (idempotent — replays dedup away). This is the
     streaming generalization of the reference's incremental index
     maintenance (indexer.ts:446-462): new keys insert, existing keys
-    keep the stored row. Plain-parquet MERGE = union + dedup + swap; on
-    Delta/Iceberg this becomes a real MERGE INTO."""
-    stream = read_event_stream(spark, sf_dir)
+    keep the stored row. Plain-parquet MERGE = union + dedup +
+    sources/ingest.py's :func:`replace_dir` swap, so a crash at any
+    point of a batch leaves the stored rows whole and the replayed
+    batch merges again; on Delta/Iceberg this becomes a real MERGE
+    INTO."""
+    tgt = os.path.join(target_dir, "events_merged")
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        from mcp_rag_server_spark.streaming.cdc_stream import (
-            _recover_snapshot_swap,
-        )
-
         s = batch.sparkSession
-        tgt = os.path.join(target_dir, "events_merged")
-        # Roll forward an interrupted rmtree→rename swap from a prior
-        # crash (same staging discipline as cdc_stream.apply_batch);
-        # the keyed MERGE itself is replay-idempotent.
-        _recover_snapshot_swap(tgt)
+        recover_dir(tgt)
+        merged = batch
         if os.path.exists(tgt):
             existing = s.read.parquet(tgt)
+            first_by_ts = Window.partitionBy("event_id").orderBy(F.col("ts").asc())
             merged = (
                 existing.unionByName(batch.select(*existing.columns))
-                .withColumn(
-                    "_rn",
-                    F.row_number().over(
-                        Window.partitionBy("event_id").orderBy(F.col("ts").asc())
-                    ),
-                )
+                .withColumn("_rn", F.row_number().over(first_by_ts))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            nxt = tgt + ".next"
-            merged.write.mode("overwrite").parquet(nxt)
-            import shutil
+        replace_dir(tgt, merged.write.mode("overwrite").parquet)
+        s.catalog.refreshByPath(tgt)
 
-            shutil.rmtree(tgt)
-            os.rename(nxt, tgt)
-            s.catalog.refreshByPath(tgt)
-        else:
-            batch.write.mode("overwrite").parquet(tgt)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation",
-            os.path.join(target_dir, "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_event_stream(spark, sf_dir),
+        upsert,
+        os.path.join(target_dir, "_checkpoint"),
     )
-    q.awaitTermination()
 
 
 @register(

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mcp_rag_server_spark.sources.ingest import IngestParams, chunk_files
+from mcp_rag_server_spark.streaming.events_stream import run_foreach_batch
 
 
 def read_text_file_stream(
@@ -100,13 +101,8 @@ def run_ingest_stream(
         texts, IngestParams(chunk_size=chunk_size, chunk_overlap=chunk_overlap)
     )
 
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        append_batch(store_dir, batch_df, batch_id)
-
-    q = (
-        chunks.writeStream.foreachBatch(append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        chunks,
+        lambda batch_df, batch_id: append_batch(store_dir, batch_df, batch_id),
+        checkpoint_dir,
     )
-    q.awaitTermination()

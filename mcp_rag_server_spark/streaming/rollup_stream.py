@@ -12,9 +12,10 @@ table, so the streamed result equals the one-shot batch aggregate and
 the driver hash can compare it to a plain SQL oracle.
 
 Crash-safety is the shared apply_merge_batch discipline
-(streaming/cdc_stream.py): staged-write + marker + atomic swap, replay
-skipped via the _batch_id high-water mark — an at-least-once stream
-becomes an exactly-once table.
+(streaming/cdc_stream.py): staged write + marker + two-rename swap
+that a restart rolls back, replay skipped via the _batch_id
+high-water mark — an at-least-once stream becomes an exactly-once
+table.
 
 Scale shape: each batch shuffles once on (hour, event_type); the
 snapshot is O(hours × types), not O(events); on Delta/Iceberg the
@@ -24,21 +25,14 @@ union+sum+swap becomes MERGE INTO with aggregate update expressions.
 from __future__ import annotations
 
 import datetime
-import hashlib
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table
+from mcp_rag_server_spark.catalog import load_table, scratch_dir
 from mcp_rag_server_spark.functions.numeric import finite_col
 from mcp_rag_server_spark.registry import register
-from mcp_rag_server_spark.streaming.cdc_stream import (
-    N_SPLIT_FILES,
-    apply_merge_batch,
-)
+from mcp_rag_server_spark.streaming.cdc_stream import run_merge_stream
 
 
 def _rollup_snapshot(batch: DataFrame) -> DataFrame:
@@ -66,28 +60,11 @@ def _rollup_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def run_rollup_stream(spark: SparkSession, src_dir: str, target_dir: str) -> str:
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    tgt = os.path.join(target_dir, "hourly_rollup")
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        apply_merge_batch(tgt, batch, batch_id, _rollup_snapshot, _rollup_merge)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", os.path.join(target_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return tgt
+def _rollup_table(rollup: DataFrame) -> DataFrame:
+    """The maintained rollup as the oracle reads it: DOUBLE totals."""
+    return rollup.withColumn(
+        "total_value", F.col("total_value").cast("double")
+    ).orderBy("h", "event_type")
 
 
 @register(
@@ -114,27 +91,14 @@ def st_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events split into N files and streamed one per trigger, so the
     rollup genuinely merges N times; composable partials make the
     result split-invariant, which is what lets the driver hash a
-    STREAMED table against a plain batch oracle. Same digest-keyed
-    single-writer temp contract as st_latest_state."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_st_rollup_{digest}"
+    STREAMED table against a plain batch oracle."""
+    rollup = run_merge_stream(
+        load_table(spark, sf_dir, "events"),
+        scratch_dir("st_rollup", sf_dir),
+        _rollup_snapshot,
+        _rollup_merge,
     )
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
-    ev = load_table(spark, sf_dir, "events")
-    ev.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src)
-    tgt = run_rollup_stream(spark, src, os.path.join(base, "out"))
-    return (
-        spark.read.parquet(tgt)
-        .select(
-            "h",
-            "event_type",
-            "n_events",
-            F.col("total_value").cast("double").alias("total_value"),
-        )
-        .orderBy("h", "event_type")
-    )
+    return _rollup_table(rollup)
 
 
 #: Streamed head length (hours before the corpus max timestamp).
@@ -178,45 +142,19 @@ def st_lambda_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:
     and double-counts nothing. The cutover literal derives from a
     1-row max(ts) aggregate — control-plane metadata, same contract
     as the ingest store's bucket listing."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_st_lambda_{digest}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
     cutover = max_ts.replace(
         minute=0, second=0, microsecond=0
     ) - datetime.timedelta(hours=CUTOVER_HEAD_HOURS)
-
-    batch_half = (
-        ev.filter(F.col("ts") < F.lit(cutover))
-        .groupBy(F.date_trunc("hour", F.col("ts")).alias("h"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(finite_col(F.col("value")), 4).cast("decimal(18,4)"))
-            .cast("decimal(18,4)")
-            .alias("total_value"),
-        )
+    batch_half = _rollup_snapshot(ev.filter(F.col("ts") < F.lit(cutover)))
+    stream_half = run_merge_stream(
+        ev.filter(F.col("ts") >= F.lit(cutover)),
+        scratch_dir("st_lambda", sf_dir),
+        _rollup_snapshot,
+        _rollup_merge,
     )
-    src = os.path.join(base, "head_src")
-    ev.filter(F.col("ts") >= F.lit(cutover)).repartition(
-        N_SPLIT_FILES
-    ).write.mode("overwrite").parquet(src)
-    tgt = run_rollup_stream(spark, src, os.path.join(base, "out"))
-    stream_half = spark.read.parquet(tgt)
-    return (
-        batch_half.unionByName(stream_half)
-        .groupBy("h", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("total_value")
-            .cast("decimal(18,4)")
-            .cast("double")
-            .alias("total_value"),
-        )
-        .orderBy("h", "event_type")
-    )
+    return _rollup_table(_rollup_merge(batch_half, stream_half))
 
 
 # ---- streaming KMV sketch ------------------------------------------
@@ -306,37 +244,12 @@ def st_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle at all — and why, at 100 TB, per-shard sketches combine
     without re-scanning history. Same split-files + checkpoint +
     staged-swap machinery as st_incremental_rollup."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_st_kmv_{digest}"
+    sk = run_merge_stream(
+        load_table(spark, sf_dir, "events"),
+        scratch_dir("st_kmv", sf_dir),
+        _kmv_snapshot,
+        _kmv_merge,
     )
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
-    ev = load_table(spark, sf_dir, "events")
-    ev.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    tgt = os.path.join(base, "out", "kmv_sketch")
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        apply_merge_batch(tgt, batch, batch_id, _kmv_snapshot, _kmv_merge)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option(
-            "checkpointLocation", os.path.join(base, "out", "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    sk = spark.read.parquet(tgt)
     est = F.when(
         F.count("*") < KMV_K, F.count("*").cast("double")
     ).otherwise(
@@ -414,33 +327,12 @@ def st_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_cm_sketch_audit registers; the leaderboard read (rank window
     over per-type counts) is unchanged. Ties pin to user_id ASC so
     the top-k is hash-deterministic."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_st_hh_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
-    src = os.path.join(base, "src")
-    ev = load_table(spark, sf_dir, "events")
-    ev.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    counts = run_merge_stream(
+        load_table(spark, sf_dir, "events"),
+        scratch_dir("st_hh", sf_dir),
+        _hh_snapshot,
+        _hh_merge,
     )
-    tgt = os.path.join(base, "out", "hh_counts")
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        apply_merge_batch(tgt, batch, batch_id, _hh_snapshot, _hh_merge)
-
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    counts = spark.read.parquet(tgt)
     w = Window.partitionBy("event_type").orderBy(
         F.desc("n"), F.asc("user_id")
     )

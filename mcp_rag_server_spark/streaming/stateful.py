@@ -20,7 +20,6 @@ longs — state size is O(distinct users), not O(events).
 
 from __future__ import annotations
 
-import os
 import tempfile
 from collections.abc import Iterator
 
@@ -31,8 +30,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mcp_rag_server_spark.catalog import load_table
 from mcp_rag_server_spark.registry import register
-
-N_SPLIT_FILES = 4
+from mcp_rag_server_spark.streaming.events_stream import (
+    run_to_memory,
+    split_file_stream,
+)
 
 
 def running_user_stats(stream: DataFrame) -> DataFrame:
@@ -92,31 +93,13 @@ def st_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Splits events into N files and streams them one file per trigger,
     so the state genuinely accumulates across micro-batches; the memory
     sink (update mode) collects every per-batch emission and the final
-    per-user row is the one with the highest cumulative count."""
-    src = tempfile.mkdtemp(prefix="st_stateful_src_")
+    per-user row is the one with the highest cumulative count. The
+    memory sink holds the rows in the driver, so the split source is
+    deleted once the query has terminated."""
     ev = load_table(spark, sf_dir, "events")  # ts already micros here
-    ev.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    result = running_user_stats(stream)
-    name = "st_stateful_" + os.path.basename(src).split("_")[-1]
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.mkdtemp(prefix="st_ckpt_"), "c"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    updates = spark.table(name)
+    with tempfile.TemporaryDirectory(prefix="st_stateful_src_") as src:
+        stream = split_file_stream(ev, src)
+        updates = run_to_memory(running_user_stats(stream), output_mode="update")
     # n_events is cumulative and strictly grows with each touched batch:
     # the max-count row per user is the final state.
     final = updates.groupBy("user_id").agg(
@@ -192,46 +175,27 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory). Same multi-file micro-batch harness as
     st_stateful_user_stats; the max-count emission per user is the
     final state."""
-    src = tempfile.mkdtemp(prefix="st_tws_src_")
     ev = load_table(spark, sf_dir, "events")
-    ev.repartition(N_SPLIT_FILES).write.mode("overwrite").parquet(src)
-
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        result = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_twstate_processor(),
-            outputStructType="user_id long, n_events long, min_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        name = "st_tws_" + os.path.basename(src).split("_")[-1]
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.mkdtemp(prefix="st_ckpt_"), "c"),
+        with tempfile.TemporaryDirectory(prefix="st_tws_src_") as src:
+            stream = split_file_stream(ev, src)
+            result = stream.groupBy("user_id").transformWithStateInPandas(
+                statefulProcessor=_twstate_processor(),
+                outputStructType="user_id long, n_events long, min_value double",
+                outputMode="Update",
+                timeMode="None",
             )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            updates = run_to_memory(result, output_mode="update")
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    updates = spark.table(name)
     final = updates.groupBy("user_id").agg(
         F.max(F.struct("n_events", "min_value")).alias("s")
     )

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from mcp_rag_server_spark.streaming.events_stream import merge_events_stream
 
 SF0001 = "/root/testdata/sf0.001"
@@ -108,8 +110,8 @@ def test_scd1_apply_batch_skips_replayed_batch(spark, tmp_path):
     """apply_batch must be idempotent under checkpoint batch replay: a
     crash between the snapshot swap and the checkpoint commit makes
     foreachBatch re-deliver the same batch_id on restart, and re-merging
-    it would double-count n_events. The _batch_id sidecar (swapped
-    atomically with the snapshot) is the high-water mark."""
+    it would double-count n_events. The _batch_id sidecar (written into
+    the staged snapshot before the swap) is the high-water mark."""
     from mcp_rag_server_spark.catalog import load_table
     from mcp_rag_server_spark.streaming.cdc_stream import (
         apply_batch,
@@ -136,13 +138,35 @@ def test_scd1_apply_batch_skips_replayed_batch(spark, tmp_path):
     assert applied_batch_id(tgt) == 1
 
 
-def test_scd1_swap_recovery_rolls_forward(spark, tmp_path):
-    """Crash between the old-snapshot rmtree and the staged rename
-    leaves only tgt.next (complete by construction): the next
-    apply_batch must promote it, keep its high-water mark, and still
-    skip the replayed batch. A staged dir beside a LIVE snapshot (crash
-    before the rmtree, completeness unknown) is discarded and the
-    replayed batch re-merges."""
+def _seed_events(tmp_path) -> str:
+    """A corpus dir whose events.parquet holds 50 events with ids no
+    sf0.001 event has, so merging sf0.001 on top must keep all 50."""
+    import duckdb
+
+    seed = tmp_path / "seed"
+    seed.mkdir()
+    duckdb.sql(
+        "COPY (SELECT * REPLACE (event_id + 1000000000 AS event_id) "
+        f"FROM read_parquet('{SF0001}/events.parquet') ORDER BY event_id LIMIT 50) "
+        f"TO '{seed}/events.parquet' (FORMAT PARQUET)"
+    )
+    return str(seed)
+
+
+@pytest.mark.parametrize("sink", ["apply_batch", "merge_events_stream"])
+@pytest.mark.parametrize(
+    "call, nth",
+    [("rename", 1), ("rename", 2), ("rmtree", 1)],
+    ids=["rename-1", "rename-2", "rmtree"],
+)
+def test_crashed_merge_recovers(spark, tmp_path, monkeypatch, sink, call, nth):
+    """A streaming merge that dies at any step of its snapshot swap
+    (either rename, or partway through deleting a copy) loses nothing:
+    replaying the batch after the restart leaves the same table and the
+    same high-water mark as a run that never crashed. ``apply_batch``
+    merges batch 1 onto the snapshot of batch 0; ``merge_events_stream``
+    merges sf0.001's events onto 50 stored rows with other keys, and
+    its restart reuses the crashed run's checkpoint."""
     import shutil
 
     from mcp_rag_server_spark.catalog import load_table
@@ -151,33 +175,76 @@ def test_scd1_swap_recovery_rolls_forward(spark, tmp_path):
         applied_batch_id,
     )
 
-    tgt = str(tmp_path / "latest_state")
-    ev = load_table(spark, SF0001, "events").limit(100)
-    apply_batch(tgt, ev, 0)
-    total = spark.read.parquet(tgt).agg({"n_events": "sum"}).collect()[0][0]
-    assert total == 100
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    if sink == "apply_batch":
+        ev = load_table(spark, SF0001, "events")
+        b0, b1 = ev.filter("event_id % 5 = 0"), ev.filter("event_id % 5 = 1")
+        tables = {t: os.path.join(t, "latest_state") for t in (clean, crashed)}
+        for tgt in tables.values():
+            apply_batch(tgt, b0, 0)
 
-    # Crash case 1: after rmtree, before rename — only tgt.next exists.
-    os.rename(tgt, tgt + ".next")
-    apply_batch(tgt, ev, 0)  # replay of batch 0 arrives after the crash
-    spark.catalog.refreshByPath(tgt)
-    assert applied_batch_id(tgt) == 0
-    assert (
-        spark.read.parquet(tgt).agg({"n_events": "sum"}).collect()[0][0]
-        == 100
-    )
-    assert not os.path.exists(tgt + ".next")
+        def merge(target: str) -> None:
+            apply_batch(tables[target], b1, 1)
 
-    # Crash case 2: staged dir beside a live snapshot — discarded, and
-    # the genuinely-new batch merges on top of the intact snapshot.
-    shutil.copytree(tgt, tgt + ".next")
-    apply_batch(tgt, ev, 1)
-    spark.catalog.refreshByPath(tgt)
-    assert applied_batch_id(tgt) == 1
-    assert (
-        spark.read.parquet(tgt).agg({"n_events": "sum"}).collect()[0][0]
-        == 200
+    else:
+        seed = _seed_events(tmp_path)
+        tables = {t: os.path.join(t, "events_merged") for t in (clean, crashed)}
+        for target in tables:
+            merge_events_stream(spark, seed, target)
+            shutil.rmtree(os.path.join(target, "_checkpoint"))
+
+        def merge(target: str) -> None:
+            merge_events_stream(spark, SF0001, target)
+
+    merge(clean)
+    module = {"rename": os, "rmtree": shutil}[call]
+    real = getattr(module, call)
+    calls = []
+
+    def crash_on_nth(*args, **kwargs):
+        calls.append(args)
+        if len(calls) != nth:
+            return real(*args, **kwargs)
+        if call == "rmtree":  # delete one data file, then die
+            parquet = sorted(f for f in os.listdir(args[0]) if f.endswith(".parquet"))
+            os.remove(os.path.join(args[0], parquet[0]))
+        raise OSError("crash injected by the test")
+
+    monkeypatch.setattr(module, call, crash_on_nth)
+    with pytest.raises(Exception, match="crash injected"):
+        merge(crashed)
+    monkeypatch.undo()
+
+    merge(crashed)  # the restart replays the batch that died
+    got, want = (
+        sorted(map(tuple, spark.read.parquet(tables[t]).collect()))
+        for t in (crashed, clean)
     )
+    assert got == want
+    assert applied_batch_id(tables[crashed]) == applied_batch_id(tables[clean])
+
+
+def test_memory_sink_runs_leave_no_temp_dirs(spark):
+    """Memory-sink queries keep their rows in the driver, so their
+    checkpoint and split-source temp dirs are deleted once the query
+    has terminated rather than left behind on every call."""
+    import glob
+    import tempfile
+
+    from mcp_rag_server_spark.registry import load_all
+
+    def temp_dirs() -> set[str]:
+        tmp = tempfile.gettempdir()
+        return {
+            *glob.glob(os.path.join(tmp, "st_ckpt_*")),
+            *glob.glob(os.path.join(tmp, "st_*_src_*")),
+        }
+
+    before = temp_dirs()
+    reg = load_all()
+    for name in ("st_sliding_windows", "st_stateful_user_stats"):
+        assert reg[name].spark_fn(spark, SF0001).collect()
+    assert temp_dirs() == before
 
 
 def test_scd1_merge_is_split_invariant(spark, tmp_path):
