@@ -13,10 +13,11 @@ Two models:
 - ``hash_embedder`` (default, deterministic): a bag-of-hashed-words
   vector — token t votes into bucket = first hex digit of md5(t), then
   L2 normalization. Chosen because it is *relationally expressible*:
-  ``HASH_EMBED_ORACLE_*`` computes the identical vector in pure SQL on
-  both engines, so the pandas_udf path is golden-testable end to end
-  (the fixture-bypass idea of SURVEY.md §7.3 step 4, strengthened from
-  "skip the model" to "use a model with a SQL twin").
+  ``operators/embed.py::_ORACLE`` computes the identical vector in pure
+  DuckDB SQL via :func:`duckdb_hash_bucket`, so the pandas_udf path is
+  golden-testable end to end (the fixture-bypass idea of SURVEY.md §7.3
+  step 4, strengthened from "skip the model" to "use a model with a SQL
+  twin").
 - ``sentence_transformer_embedder(model_name)``: the real path, gated
   behind an import-try (the library and model weights are not in this
   container); loads once per worker process, mean-pool + normalize
@@ -135,19 +136,8 @@ def hash_embed_query_vec(text: str) -> list[float]:
     return _hash_embed_batch(pd.Series([text]))[0]
 
 
-# --- SQL twins of the hash embedder (float32-exact on both engines) --------
-
-
-def spark_hash_bucket(token_sql: str) -> str:
-    return f"(instr('0123456789abcdef', substring(md5({token_sql}), 1, 1)) - 1)"
+# --- SQL twin of the hash embedder ------------------------------------------
 
 
 def duckdb_hash_bucket(token_sql: str) -> str:
     return f"(strpos('0123456789abcdef', substring(md5({token_sql}), 1, 1)) - 1)"
-
-
-def cast_f32(expr: str, dialect: str) -> str:
-    """The pandas_udf returns array<float>: SQL twins must round-trip
-    through float32 to match it bit-for-bit."""
-    t = "FLOAT" if dialect == "spark" else "REAL"
-    return f"CAST({expr} AS {t})"

@@ -57,7 +57,8 @@ def profile(spark, fn) -> dict:
     ``fetch - (execute - plan)``.
 
     Returns ``{"wall_s", "rows", <layer>: {"s", "jobs", "stages",
-    "tasks", "executor_run_s", "shuffle_write_bytes", "spill_bytes"}}``;
+    "tasks", "executor_run_s", "input_bytes", "shuffle_write_bytes",
+    "spill_bytes"}}``;
     job statistics are read after the pass, outside ``wall_s``."""
     sc = spark.sparkContext
     groups = {layer: f"profile-{next(_groups)}-{layer}" for layer in LAYERS}
@@ -85,12 +86,13 @@ def profile(spark, fn) -> dict:
 
 
 def _group_stats(sc, group: str) -> dict:
-    """Jobs, stages, tasks, executor run time, shuffle write and spill
-    of ``group``'s jobs; a skipped stage (reused shuffle) is not counted."""
+    """Jobs, stages, tasks, executor run time, input (scan) bytes,
+    shuffle write and spill of ``group``'s jobs; a skipped stage (reused
+    shuffle) is not counted."""
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
     no_status = sc._jvm.java.util.ArrayList()
     no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
-    jobs = stages = tasks = run_ms = shuffle = spill = 0
+    jobs = stages = tasks = run_ms = input_bytes = shuffle = spill = 0
     for job_id in tracker.getJobIdsForGroup(group):
         info = tracker.getJobInfo(job_id)
         if info is None:
@@ -104,9 +106,10 @@ def _group_stats(sc, group: str) -> dict:
                 stages += 1
                 tasks += sd.numTasks()
                 run_ms += sd.executorRunTime()
+                input_bytes += sd.inputBytes()
                 shuffle += sd.shuffleWriteBytes()
                 spill += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
     return {
         "jobs": jobs, "stages": stages, "tasks": tasks, "executor_run_s": run_ms / 1000,
-        "shuffle_write_bytes": shuffle, "spill_bytes": spill,
+        "input_bytes": input_bytes, "shuffle_write_bytes": shuffle, "spill_bytes": spill,
     }

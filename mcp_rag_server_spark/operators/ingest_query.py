@@ -230,7 +230,7 @@ def _write_junk(root: str) -> None:
     disallowed-extension file (P1), and a non-empty ``.pdf`` whose
     extraction FAILS (P4 — ``ingest_compacted`` allows the pdf ext and
     injects an extractor that raises, so the file survives P1/P2/P3
-    discovery and must be dropped by decode_text's swallow-and-skip
+    discovery and must be dropped by extract_pdf's swallow-and-skip
     contract, reference indexer.ts:165-188). Malformed-UTF-8 *text* is
     deliberately not junk: both Node and our decode() ingest it with
     U+FFFD replacement — P4 is about read/extract failures."""
@@ -250,7 +250,7 @@ def _write_junk(root: str) -> None:
 
 def _failing_pdf_extractor(blobs) -> "pd.Series":  # noqa: F821
     """Injected P4 extractor: every PDF in the batch fails extraction,
-    exercising decode_text's error path (null text → row dropped) with
+    exercising extract_pdf's error path (null text → row dropped) with
     a deterministic failure instead of a real parser."""
     raise RuntimeError("injected extraction failure (P4)")
 

@@ -17,14 +17,14 @@ Reference parity:
 
 Scale shape: discovery is Spark's distributed file listing — ONE
 ``binaryFile`` read whose ``pathGlobFilter`` is the Hadoop alternation
-``*.{ext1,ext2,...}``, so the tree is listed once whatever the size of
-the allow-list. Metadata-only scans prune the ``content`` column at
-ReadSchema level, so "list 100 TB" reads no file bodies; the content
-pass happens once, after every path-level predicate is applied to the
-listing. Excluded-folder and dotfile predicates are path regexes —
-evaluated per file entry, never requiring IO. A refresh reads the
-bodies of just its changed files with :func:`read_files`, which hands
-their paths to the reader itself.
+``*.{ext1,ext2,...}``, so a call lists the tree once whatever the size
+of the allow-list. Metadata-only scans prune the ``content`` column at
+ReadSchema level, so "list 100 TB" reads no file bodies. Ingest lists
+text and PDF extensions apart (:func:`split_pdf`), once per body class,
+so each body is scanned once, by its own decoder. Excluded-folder and
+dotfile predicates are path regexes — evaluated per file entry, never
+requiring IO. A refresh reads the bodies of just its changed files with
+:func:`read_files`, which hands their paths to the reader itself.
 """
 
 from __future__ import annotations
@@ -179,24 +179,26 @@ def _listing_columns(df: DataFrame, root: str, with_content: bool) -> DataFrame:
 
 
 def _empty_listing(spark: SparkSession, with_content: bool) -> DataFrame:
+    # where(false) makes this an empty local relation, which runs no
+    # task; a bare empty createDataFrame runs one per default partition.
     return spark.createDataFrame(
         [],
         "rel_path string, file_size long"
         + (", content binary" if with_content else ""),
-    )
+    ).where(F.lit(False))
 
 
-def is_pdf_col(path_col: str = "rel_path") -> F.Column:
-    """Case-insensitive ``.pdf`` suffix test (src/pdf-extractor.ts:218-220)."""
-    return F.lower(F.col(path_col)).endswith(".pdf")
-
-
-def admits_pdf(allowed_ext: Iterable[str]) -> bool:
-    """Whether a listing under ``allowed_ext`` can hold a file that
-    :func:`is_pdf_col` accepts. Discovery's glob admits only names ending
-    in ``.<ext>``, so a PDF can arrive only through an extension that is
-    ``pdf`` or ends in ``.pdf``, in any case."""
-    return any(("." + ext).lower().endswith(".pdf") for ext in allowed_ext)
+def split_pdf(names: Iterable[str]) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """(text, PDF) halves of ``names``: allowed extensions or listed
+    paths. A name is a PDF if ``"." + name`` ends in ``.pdf``, in any
+    case (src/pdf-extractor.ts:218-220); for a path the dot changes
+    nothing. The glob ``*.<ext>`` lists only names ending in ``.<ext>``,
+    so an extension lists PDFs iff ``.<ext>`` is one, and the two halves
+    of an allow-list list disjoint files."""
+    text, pdf = [], []
+    for name in names:
+        (pdf if ("." + name).lower().endswith(".pdf") else text).append(name)
+    return tuple(text), tuple(pdf)
 
 
 def _default_pdf_extractor(blobs: pd.Series) -> pd.Series:
@@ -223,39 +225,39 @@ def _has_text(df: DataFrame) -> DataFrame:
 
 
 def decode_utf8(files: DataFrame) -> DataFrame:
-    """(rel_path, file_size, content) → (rel_path, file_size, text), every
-    row UTF-8 decoded JVM-side (replacement-char convention matches
-    Node, see module docstring); rows with null or empty text are
-    dropped. This is the whole decode when no PDF can be in ``files``:
-    one scan of the bodies and no Python worker."""
+    """(rel_path, file_size, content) → (rel_path, file_size, text) of
+    text files, UTF-8 decoded JVM-side (replacement-char convention
+    matches Node, see module docstring); rows with null or empty text
+    are dropped. One scan of the bodies and no Python worker."""
     return _has_text(
         files.withColumn("text", F.decode("content", "UTF-8")).drop("content")
     )
 
 
-def decode_text(
+def extract_pdf(
     files: DataFrame,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
 ) -> DataFrame:
-    """(rel_path, file_size, content) → (rel_path, file_size, text).
-
-    Text files: :func:`decode_utf8`. PDFs: routed through an
-    Arrow-batched ``mapInPandas`` extractor; extraction failures and
-    empty extractions null the row out, matching ``readFileContent``'s
-    swallow-and-skip contract (src/indexer.ts:165-188). Rows with null
-    text are dropped (src/indexer.ts:267-269). The PDF branch is always
-    planned — a second scan of ``files`` and a Python stage even when no
-    row is a PDF — so a caller that knows its listing holds no PDF
-    (:func:`admits_pdf`) calls :func:`decode_utf8` instead."""
+    """(rel_path, file_size, content) of PDFs → (rel_path, file_size,
+    text) through an Arrow-batched ``mapInPandas`` extractor. A failed
+    or empty extraction skips that file alone (``readFileContent``'s
+    swallow-and-skip, src/indexer.ts:165-188, 267-269): a batch that
+    raises is retried row by row and only the rows that raise are
+    dropped."""
     extractor = pdf_extractor or _default_pdf_extractor
-    out_schema = "rel_path string, file_size long, text string"
+
+    def extract_one(blob: bytes) -> str | None:
+        try:
+            return extractor(pd.Series([blob])).iloc[0]
+        except Exception:
+            return None
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             try:
                 texts = extractor(pdf["content"])
             except Exception:
-                texts = pd.Series([None] * len(pdf), dtype=object)
+                texts = pdf["content"].map(extract_one)
             yield pd.DataFrame(
                 {
                     "rel_path": pdf["rel_path"],
@@ -264,8 +266,20 @@ def decode_text(
                 }
             )
 
-    pdf_part = files.filter(is_pdf_col()).mapInPandas(extract, schema=out_schema)
-    return decode_utf8(files.filter(~is_pdf_col())).unionByName(_has_text(pdf_part))
+    out_schema = "rel_path string, file_size long, text string"
+    return _has_text(files.mapInPandas(extract, schema=out_schema))
+
+
+def decode_text(
+    files: DataFrame,
+    pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
+) -> DataFrame:
+    """:func:`decode_utf8` and :func:`extract_pdf` of a listing that
+    mixes both, split by :func:`split_pdf`'s rule. Each half scans all
+    of ``files``; ingest lists each body class on its own instead."""
+    pdf = F.lower("rel_path").endswith(".pdf")
+    text = decode_utf8(files.filter(~pdf))
+    return text.unionByName(extract_pdf(files.filter(pdf), pdf_extractor))
 
 
 def ensure_within_root(root: str, rel_path: str) -> str:

@@ -36,6 +36,10 @@ ordered computation is a running sum over one row per FILE, so no task
 ever sorts the full chunk set; the ids stay bit-identical to
 ``row_number() over (order by rel_path, chunk)`` for golden parity.
 
+Each body is read once, by its class's decoder: ``_texts`` reads text
+files and PDFs through separate listings (or path lists), so a tree or
+delta without PDFs starts no Python extractor.
+
 The refresh costs what the delta costs: one metadata-only listing is
 joined with the store's per-path ``file_size`` and only the delta keys
 (path + deleted flag) come to the driver. An empty delta writes
@@ -54,7 +58,7 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 import pandas as pd
@@ -68,11 +72,11 @@ from mcp_rag_server_spark.functions.text import chunk_array
 from mcp_rag_server_spark.sources.files import (
     DEFAULT_ALLOWED_EXT,
     DEFAULT_EXCLUDED_FOLDERS,
-    admits_pdf,
-    decode_text,
     decode_utf8,
     discover_files,
+    extract_pdf,
     read_files,
+    split_pdf,
 )
 
 #: 2 = chunks carry ``embedding``; 3 = the flat, size-keyed layout is
@@ -241,15 +245,18 @@ def load_store(
 
 
 def _texts(
-    files: DataFrame,
-    params: IngestParams,
+    read: Callable[[tuple[str, ...]], DataFrame],
+    names: Iterable[str],
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
-    """(rel_path, file_size, content) → decoded texts. The PDF branch is
-    planned only when the allow-list can list a PDF."""
-    if admits_pdf(params.allowed_ext):
-        return decode_text(files, pdf_extractor=pdf_extractor)
-    return decode_utf8(files)
+    """Decoded (rel_path, file_size, text) of the files ``read(names)``
+    returns, read once per body class (:func:`split_pdf`). A class with
+    nothing to read runs no task, so a Python extractor runs only when a
+    PDF was listed."""
+    text_names, pdf_names = split_pdf(names)
+    return decode_utf8(read(text_names)).unionByName(
+        extract_pdf(read(pdf_names), pdf_extractor)
+    )
 
 
 def cold_build(
@@ -260,39 +267,12 @@ def cold_build(
 ) -> DataFrame:
     """Full rebuild (reference cold path, indexer.ts:257-316):
     discover → read/extract → chunk → assign ids → embed."""
-    files = discover_files(
-        spark, root, params.allowed_ext, params.excluded_folders, with_content=True
-    )
-    return _assign_ids(chunk_files(_texts(files, params, pdf_extractor), params))
 
+    def listing(exts: tuple[str, ...]) -> DataFrame:
+        return discover_files(spark, root, exts, params.excluded_folders, with_content=True)
 
-def incremental_update(
-    spark: SparkSession,
-    old_chunks: DataFrame,
-    root: str,
-    params: IngestParams = IngestParams(),
-    pdf_extractor: Callable[[pd.Series], pd.Series] | None = None,
-) -> DataFrame:
-    """Reference ``incrementalUpdate`` (indexer.ts:413-511) as one delta
-    step plus a read of only the delta's bodies:
-
-    J1 (deleted):  old chunk paths absent from the current listing →
-                   dropped (indexer.ts:431-443).
-    J2 (changed):  current listing vs old per-path file_size; new path or
-                   size mismatch → re-ingest that file (indexer.ts:446-462).
-
-    New chunk ids continue from max(surviving id)+1 (getMaxId()+1,
-    indexer.ts:393-400), ordered by (rel_path, chunk) for determinism.
-    Only changed files are re-read/re-chunked/re-embedded; survivors
-    pass through untouched, stored vectors included — at scale this is a
-    MERGE keyed on rel_path.
-
-    Accepted cost: a PDF whose extraction fails has no store rows, so
-    every refresh sees it as new and re-tries the extraction (the store
-    contents stay unchanged).
-    """
-    delta = _delta_keys(spark, old_chunks, root, params)
-    return _apply_delta(spark, old_chunks, root, delta, params, pdf_extractor)
+    texts = _texts(listing, params.allowed_ext, pdf_extractor)
+    return _assign_ids(chunk_files(texts, params))
 
 
 def _delta_keys(
@@ -301,9 +281,14 @@ def _delta_keys(
     root: str,
     params: IngestParams,
 ) -> list[Row]:
-    """The J1/J2 delta as driver-side rows (rel_path, deleted): the
+    """The refresh's delta (reference ``incrementalUpdate``,
+    indexer.ts:413-511) as driver-side rows (rel_path, deleted): the
     current listing full-outer-joined with the store's per-path
-    ``file_size``, in one job that reads no file bodies."""
+    ``file_size``, in one job that reads no file bodies.
+
+    J1 (deleted):  old chunk paths absent from the current listing
+                   (indexer.ts:431-443).
+    J2 (changed):  new path or size mismatch (indexer.ts:446-462)."""
     listing = discover_files(
         spark, root, params.allowed_ext, params.excluded_folders
     )
@@ -328,14 +313,19 @@ def _apply_delta(
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
     """Survivors ∪ new chunks: the old chunks of paths outside the
-    delta, and the chunks of the changed/new files — whose bodies alone
-    are read — with ids from max(surviving id)+1 (getMaxId()+1,
-    indexer.ts:393-400)."""
+    delta pass through untouched, stored vectors included (at scale a
+    MERGE keyed on rel_path), and only the changed/new files' bodies are
+    read, chunked and embedded, with ids from max(surviving id)+1 in
+    (rel_path, chunk) order (getMaxId()+1, indexer.ts:393-400).
+
+    Accepted cost: a PDF whose extraction fails has no store rows, so
+    every refresh sees it as new and re-tries the extraction (the store
+    contents stay unchanged)."""
     survivors = old_chunks.filter(
         ~F.col("rel_path").isin([r["rel_path"] for r in delta])
     )
     changed = [r["rel_path"] for r in delta if not r["deleted"]]
-    texts = _texts(read_files(spark, root, changed), params, pdf_extractor)
+    texts = _texts(lambda paths: read_files(spark, root, paths), changed, pdf_extractor)
     max_id = survivors.agg(F.max("id")).first()[0]
     next_id = (max_id + 1) if max_id is not None else 0
     new_chunks = _assign_ids(chunk_files(texts, params), start_id=next_id)

@@ -13,7 +13,7 @@ Semantics vs the batch refresh (sources/ingest.py):
   - NEW files: handled natively — this is what the file source tracks.
   - MODIFIED/DELETED files: out of scope for a file stream (Spark file
     sources are append-only by contract); production pairs this stream
-    with a periodic batch reconcile (incremental_update) for edits —
+    with a periodic batch reconcile (a warm ``build()``) for edits —
     the same division CDC systems use (stream for appends, compaction
     for rewrites).
 

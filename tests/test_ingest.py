@@ -35,7 +35,6 @@ from mcp_rag_server_spark.sources.ingest import (
     IngestParams,
     build,
     cold_build,
-    incremental_update,
     load_store,
     save_store,
 )
@@ -173,18 +172,15 @@ def mutate_corpus(root: str) -> None:
 
 
 def test_incremental_update_delta_semantics(spark, corpus_dir, tmp_path):
+    """A warm build() refreshes the store by the J1/J2 delta rules."""
     root = str(tmp_path / "inc")
+    store = str(tmp_path / "inc_store")
     import shutil
 
     shutil.copytree(corpus_dir, root)
-    # Decouple `old` from corpus lineage (in real use it comes from the
-    # parquet store, see build()): a rescan of the mutated root would
-    # otherwise recompute it against deleted files.
-    built = cold_build(spark, root, PARAMS)
-    old_rows = built.collect()
-    old = spark.createDataFrame(old_rows, built.schema)
+    old_rows = build(spark, root, store, PARAMS).collect()
     mutate_corpus(root)
-    new = incremental_update(spark, old, root, PARAMS).collect()
+    new = build(spark, root, store, PARAMS).collect()
     by_path: dict[str, list] = {}
     for r in new:
         by_path.setdefault(r["rel_path"], []).append(r)
@@ -412,26 +408,105 @@ def test_pdf_plumbing_with_injected_extractor(spark, tmp_path):
     assert by_path["plain.txt"]["text"] == "plain text"
 
 
-def test_pdf_branch_planned_only_when_allow_list_admits_pdf(spark, corpus_dir):
-    """The PDF branch (a Python stage and a second body scan) is planned
-    only when discovery can list a PDF. The id join reads the decoded
-    texts twice (chunk rows and per-file counts), so without the branch
-    a cold build scans the bodies twice, and with it four times."""
+def test_admitting_pdf_reads_no_extra_bytes(spark, corpus_dir, tmp_path):
+    """On a tree without PDFs, admitting ``pdf`` changes no body read.
+    A cold build's input bytes and task count are the same with and
+    without it. A refresh of one changed ``.md`` reads as many bytes
+    either way and runs no PDF extraction task. Which files are PDFs
+    comes from the name: an extension is PDF-class iff a name it lists
+    ends in ``.pdf`` in any case, and a changed path splits by the same
+    suffix."""
     import dataclasses
+    import shutil
 
-    from mcp_rag_server_spark.plans.inspect import plan_string
-    from mcp_rag_server_spark.sources.files import admits_pdf
+    from mcp_rag_server_spark.obs import profile
+    from mcp_rag_server_spark.sources.files import split_pdf
 
-    assert admits_pdf(("md", "PDF")) and admits_pdf(("x.pdf",))
-    assert not admits_pdf(("md", "xpdf", "pdf.md")) and not admits_pdf(())
+    assert split_pdf(("md", "PDF", "x.pdf", "xpdf", "pdf.md")) == (
+        ("md", "xpdf", "pdf.md"),
+        ("PDF", "x.pdf"),
+    )
+    assert split_pdf(()) == ((), ())
+    assert split_pdf(["a.md", "d/B.PDF", "pdf.txt"]) == (("a.md", "pdf.txt"), ("d/B.PDF",))
 
-    no_pdf = dataclasses.replace(PARAMS, allowed_ext=("md", "py", "txt", "yaml"))
-    plan = plan_string(cold_build(spark, corpus_dir, no_pdf), "simple")
-    assert "MapInPandas" not in plan
-    assert plan.count("FileScan binaryFile") == 2
-    plan = plan_string(cold_build(spark, corpus_dir, PARAMS), "simple")
-    assert "MapInPandas" in plan
-    assert plan.count("FileScan binaryFile") == 4
+    no_pdf = dataclasses.replace(
+        PARAMS, allowed_ext=tuple(e for e in PARAMS.allowed_ext if e != "pdf")
+    )
+    assert no_pdf.allowed_ext != PARAMS.allowed_ext
+
+    def cold(params):
+        return profile(spark, lambda: cold_build(spark, corpus_dir, params))["execute"]
+
+    with_pdf, without = cold(PARAMS), cold(no_pdf)
+    assert without["input_bytes"] > 0
+    assert (with_pdf["input_bytes"], with_pdf["tasks"]) == (
+        without["input_bytes"],
+        without["tasks"],
+    )
+
+    class LoadLoggingExtractor:
+        """Logs each unpickling in a Python worker: once per task of a
+        PDF extraction stage, whether or not the task has rows."""
+
+        def __init__(self, log):
+            self.log = str(log)
+
+        def __setstate__(self, state):
+            self.__dict__.update(state)
+            with open(self.log, "a", encoding="utf-8") as f:
+                f.write("loaded\n")
+
+        def __call__(self, blobs: pd.Series) -> pd.Series:
+            return blobs.map(lambda b: "PDFTEXT")
+
+    log = tmp_path / "loads.log"
+    root = tmp_path / "root"
+    shutil.copytree(corpus_dir, root)
+    build(spark, str(root), str(tmp_path / "a"), no_pdf)
+    shutil.copytree(tmp_path / "a", tmp_path / "b")
+    with open(root / "readme.md", "a", encoding="utf-8") as f:
+        f.write("appended " * 2000)
+
+    def refresh_bytes(store, params):
+        stats = profile(
+            spark,
+            lambda: build(
+                spark, str(root), str(tmp_path / store), params,
+                pdf_extractor=LoadLoggingExtractor(log),
+            ),
+        )
+        return stats["build"]["input_bytes"]
+
+    assert refresh_bytes("b", PARAMS) == refresh_bytes("a", no_pdf)
+    assert not log.exists()
+    (root / "doc.pdf").write_bytes(b"%PDF-1.4")
+    refresh_bytes("b", PARAMS)
+    assert log.exists()
+
+
+def test_failing_pdf_drops_only_itself(spark):
+    """An extraction that raises on one PDF of an Arrow batch skips that
+    file alone (src/indexer.ts:165-188): every good PDF of the same
+    partition keeps its text."""
+    from mcp_rag_server_spark.sources.files import decode_text
+
+    rows = [(f"doc{i}.pdf", 3, bytearray(b"ok%d" % i)) for i in range(6)]
+    rows.insert(3, ("bad.pdf", 3, bytearray(b"BAD")))
+    rows.append(("plain.txt", 5, bytearray(b"plain")))
+    files = spark.createDataFrame(
+        rows, "rel_path string, file_size long, content binary"
+    ).coalesce(1)
+
+    def picky_extractor(blobs: pd.Series) -> pd.Series:
+        if any(bytes(b) == b"BAD" for b in blobs):
+            raise ValueError("unreadable PDF")
+        return blobs.map(lambda b: "PDF " + bytes(b).decode())
+
+    got = {r["rel_path"]: r["text"] for r in decode_text(files, picky_extractor).collect()}
+    assert got == {
+        **{f"doc{i}.pdf": f"PDF ok{i}" for i in range(6)},
+        "plain.txt": "plain",
+    }
 
 
 def _store_rows(spark, store: str) -> dict:
