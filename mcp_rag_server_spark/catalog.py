@@ -103,12 +103,10 @@ def input_files(
 
 
 def scratch_dir(tag: str, sf_dir: str) -> str:
-    """An emptied ``<tmp>/spark_graft_<tag>_<md5(sf_dir)[:8]>`` for a
-    side-effect query's files (corpus, store, stream source and
-    checkpoint). Keyed by ``sf_dir`` alone, so it assumes one run per
-    (tag, sf_dir) at a time: the registry runs its queries one after
-    another, and two concurrent same-sf runs would delete each other's
-    live files."""
+    """An emptied ``<tmp>/spark_graft_<tag>_<md5(sf_dir)[:8]>`` for an
+    ``ingest_*`` query's corpus and store. Keyed by ``sf_dir`` alone, so
+    it assumes one run per (tag, sf_dir) at a time: a concurrent or
+    later same-sf run deletes the files an earlier frame still reads."""
     digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     base = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{digest}")
     shutil.rmtree(base, ignore_errors=True)

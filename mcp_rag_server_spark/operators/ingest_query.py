@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -356,7 +357,8 @@ def st_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once accounting (no duplicates from pass 1 files) and
     completeness (no appended file missed). Chunk identity is the
     natural (rel_path, chunk) key — a global dense id is meaningless
-    under continuous arrival."""
+    under continuous arrival. Nothing outlives the call: the rows come
+    back as ``localCheckpoint`` blocks of a deleted per-call dir."""
     from mcp_rag_server_spark.streaming.ingest_stream import run_ingest_stream
 
     from pyspark.sql import functions as F
@@ -369,35 +371,35 @@ def st_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "lang", "text")
         .collect()
     )
-    base = scratch_dir("ingest_st", sf_dir)
-    root = os.path.join(base, "corpus")
-    store = os.path.join(base, "store")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(root, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix="st_ingest_") as base:
+        root = os.path.join(base, "corpus")
+        store = os.path.join(base, "store")
+        ckpt = os.path.join(base, "ckpt")
+        os.makedirs(root)
 
-    _write_corpus_v1(root, docs)
-    run_ingest_stream(
-        spark, root, store, ckpt,
-        chunk_size=RT_CHUNK_SIZE, chunk_overlap=RT_CHUNK_OVERLAP,
-    )
-    # Append the held-back slice (the %7 "new" docs); nothing else changes.
-    for r in docs:
-        if r.doc_id % MOD_NEW[0] != MOD_NEW[1] or len(r.text) == 0:
-            continue
-        p = os.path.join(root, _doc_rel_path(r.source, r.lang, r.doc_id))
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w", encoding="utf-8") as f:
-            f.write(r.text)
-    run_ingest_stream(
-        spark, root, store, ckpt,
-        chunk_size=RT_CHUNK_SIZE, chunk_overlap=RT_CHUNK_OVERLAP,
-    )
-    spark.catalog.refreshByPath(store)
-    return (
-        spark.read.parquet(store)
-        .select("rel_path", "chunk", "text", "file_size", "line_count")
-        .orderBy("rel_path", "chunk")
-    )
+        _write_corpus_v1(root, docs)
+        run_ingest_stream(
+            spark, root, store, ckpt,
+            chunk_size=RT_CHUNK_SIZE, chunk_overlap=RT_CHUNK_OVERLAP,
+        )
+        # Append the held-back slice (the %7 "new" docs); nothing else changes.
+        for r in docs:
+            if r.doc_id % MOD_NEW[0] != MOD_NEW[1] or len(r.text) == 0:
+                continue
+            p = os.path.join(root, _doc_rel_path(r.source, r.lang, r.doc_id))
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            with open(p, "w", encoding="utf-8") as f:
+                f.write(r.text)
+        run_ingest_stream(
+            spark, root, store, ckpt,
+            chunk_size=RT_CHUNK_SIZE, chunk_overlap=RT_CHUNK_OVERLAP,
+        )
+        chunks = (
+            spark.read.parquet(store)
+            .select("rel_path", "chunk", "text", "file_size", "line_count")
+            .localCheckpoint()
+        )
+    return chunks.orderBy("rel_path", "chunk")
 
 
 #: Partition-pruned scan: the kept partition values (2 of 5 event

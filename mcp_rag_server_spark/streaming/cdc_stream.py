@@ -20,11 +20,12 @@ store's refresh uses.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table, scratch_dir
+from mcp_rag_server_spark.catalog import load_table
 from mcp_rag_server_spark.registry import register
 from mcp_rag_server_spark.sources.ingest import recover_dir, replace_dir
 from mcp_rag_server_spark.streaming.events_stream import (
@@ -134,20 +135,20 @@ def apply_batch(tgt: str, batch: DataFrame, batch_id: int) -> None:
     apply_merge_batch(tgt, batch, batch_id, _batch_snapshot, _merge_snapshots)
 
 
-def run_merge_stream(events: DataFrame, base: str, snapshot_fn, merge_fn) -> DataFrame:
-    """Split ``events`` into files under ``base/src``, stream them one
-    file per trigger through :func:`apply_merge_batch` into
-    ``base/out`` (checkpoint ``base/_checkpoint``) and return the
-    merged table read back."""
-    tgt = os.path.join(base, "out")
-    run_foreach_batch(
-        split_file_stream(events, os.path.join(base, "src")),
-        lambda batch, batch_id: apply_merge_batch(
-            tgt, batch, batch_id, snapshot_fn, merge_fn
-        ),
-        os.path.join(base, "_checkpoint"),
-    )
-    return events.sparkSession.read.parquet(tgt)
+def run_merge_stream(events: DataFrame, snapshot_fn, merge_fn) -> DataFrame:
+    """Split ``events`` into files, stream them one file per trigger
+    through :func:`apply_merge_batch` and return the merged table as
+    ``localCheckpoint`` blocks of a per-call dir deleted on return."""
+    with tempfile.TemporaryDirectory(prefix="st_merge_") as base:
+        tgt = os.path.join(base, "out")
+        run_foreach_batch(
+            split_file_stream(events, os.path.join(base, "src")),
+            lambda batch, batch_id: apply_merge_batch(
+                tgt, batch, batch_id, snapshot_fn, merge_fn
+            ),
+            os.path.join(base, "_checkpoint"),
+        )
+        return events.sparkSession.read.parquet(tgt).localCheckpoint()
 
 
 @register(
@@ -181,12 +182,9 @@ def st_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split. The driver-hashed row set therefore proves both the
     streaming plumbing (checkpointed foreachBatch upsert, idempotent
     under batch replay via the _batch_id sidecar) and the merge
-    algebra. Its scratch dir is keyed by sf_dir alone (one run per
-    sf_dir at a time, see catalog.scratch_dir)."""
+    algebra."""
     ev = load_table(spark, sf_dir, "events")
-    snap = run_merge_stream(
-        ev, scratch_dir("st_scd1", sf_dir), _batch_snapshot, _merge_snapshots
-    )
+    snap = run_merge_stream(ev, _batch_snapshot, _merge_snapshots)
     return snap.select(
         "user_id", "last_ts", "last_event_type", "last_value", "n_events"
     ).orderBy("user_id")

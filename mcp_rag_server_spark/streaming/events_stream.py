@@ -7,7 +7,8 @@ defers "incremental watch mode (fs events)" to future work
 the same parquet events land as a *file stream*, and the batch queries
 in operators/events.py become watermarked streaming aggregations with
 identical results — each registry entry here runs the real streaming
-engine (availableNow trigger → memory sink) and is hash-checked against
+engine (availableNow trigger → foreachBatch into ``localCheckpoint``
+blocks, :func:`run_to_frame`) and is hash-checked against
 the same DuckDB oracle family as the batch twins.
 
 Scale shape: streaming aggregations keep per-key state in the state
@@ -23,8 +24,8 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -70,44 +71,48 @@ def split_file_stream(events: DataFrame, src_dir: str) -> DataFrame:
     )
 
 
-def run_to_memory(
-    result: DataFrame, output_mode: str = "complete"
-) -> DataFrame:
-    """Execute a streaming aggregation to completion (availableNow) into
-    a memory sink and return the final table. availableNow processes the
-    whole backlog as micro-batches then stops — the batch-parity mode of
-    a streaming query. The memory sink keeps its rows in the driver, so
-    the checkpoint dir is deleted once the query has terminated."""
-    name = "st_" + uuid.uuid4().hex[:12]
-    with tempfile.TemporaryDirectory(prefix="st_ckpt_") as ckpt:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return result.sparkSession.table(name)
-
-
 def run_foreach_batch(
     stream: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
+    output_mode: str = "append",
 ) -> None:
-    """Run ``stream`` to completion (availableNow), handing each
-    micro-batch and its batch id to ``sink``. The checkpoint makes a
-    rerun resume after the last committed batch; a batch whose sink
-    call died is delivered again."""
+    """Run ``stream`` to completion (availableNow: the whole backlog as
+    micro-batches, then stop), handing each micro-batch and its batch id
+    to ``sink``. The checkpoint makes a rerun resume after the last
+    committed batch; a batch whose sink call died is delivered again."""
     (
         stream.writeStream.foreachBatch(sink)
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
+
+
+def run_to_frame(result: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Run ``result`` to completion and return the last micro-batch
+    (``complete`` mode) or the union of the batches (``append`` /
+    ``update``) as ``localCheckpoint`` blocks; no batch, no rows. No
+    view or checkpoint dir outlives the call. A micro-batch belongs to
+    the stream's cloned session (AQE off), so the rows are re-bound to
+    the caller's."""
+    spark = result.sparkSession
+    batches: list[DataFrame] = []
+    with tempfile.TemporaryDirectory(prefix="st_ckpt_") as ckpt:
+        run_foreach_batch(
+            result,
+            lambda batch, _: batches.append(batch.localCheckpoint()),
+            ckpt,
+            output_mode,
+        )
+    kept = batches[-1:] if output_mode == "complete" else batches
+    if not kept:
+        return spark.createDataFrame([], result.schema)
+    plan = reduce(DataFrame.unionByName, kept)._jdf.logicalPlan()
+    jvm_dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(jvm_dataset.ofRows(spark._jsparkSession, plan), spark)
 
 
 def hourly_windows(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -171,7 +176,7 @@ ORDER BY window_start, event_type
     tags=("streaming", "events", "window"),
 )
 def st_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = run_to_memory(sliding_windows(read_event_stream(spark, sf_dir)))
+    out = run_to_frame(sliding_windows(read_event_stream(spark, sf_dir)))
     return out.orderBy("window_start", "event_type")
 
 
@@ -206,11 +211,11 @@ GROUP BY date_trunc('hour', ts), event_type
 ORDER BY window_start, event_type
 """,
     description="STREAMING tumbling 1h windows (watermark + window(), "
-    "availableNow → memory sink) hash-matched to the batch oracle",
+    "availableNow → foreachBatch) hash-matched to the batch oracle",
     tags=("streaming", "events", "window"),
 )
 def st_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = run_to_memory(hourly_windows(read_event_stream(spark, sf_dir)))
+    out = run_to_frame(hourly_windows(read_event_stream(spark, sf_dir)))
     return out.orderBy("window_start", "event_type")
 
 
@@ -246,7 +251,7 @@ ORDER BY user_id, session_start
 def st_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's session_window end = last event + gap, which is exactly
     MAX(ts) + INTERVAL in the oracle."""
-    out = run_to_memory(session_windows(read_event_stream(spark, sf_dir)))
+    out = run_to_frame(session_windows(read_event_stream(spark, sf_dir)))
     return out.orderBy("user_id", "session_start")
 
 
@@ -340,7 +345,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_user").alias("user_id"),
         (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("lag_us"),
     )
-    out = run_to_memory(joined, output_mode="append")
+    out = run_to_frame(joined, output_mode="append")
     return out.orderBy("view_id", "click_id")
 
 
@@ -377,7 +382,7 @@ def st_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts_sec", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "ts_sec"])
     )
-    out = run_to_memory(deduped, output_mode="append")
+    out = run_to_frame(deduped, output_mode="append")
     return out.orderBy("user_id", "event_type", "ts_sec")
 
 
@@ -441,4 +446,4 @@ def st_enrich_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return run_to_memory(agg).orderBy("window_start", "segment")
+    return run_to_frame(agg).orderBy("window_start", "segment")

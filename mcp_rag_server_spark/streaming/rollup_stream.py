@@ -29,7 +29,7 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table, scratch_dir
+from mcp_rag_server_spark.catalog import load_table
 from mcp_rag_server_spark.functions.numeric import finite_col
 from mcp_rag_server_spark.registry import register
 from mcp_rag_server_spark.streaming.cdc_stream import run_merge_stream
@@ -94,7 +94,6 @@ def st_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMED table against a plain batch oracle."""
     rollup = run_merge_stream(
         load_table(spark, sf_dir, "events"),
-        scratch_dir("st_rollup", sf_dir),
         _rollup_snapshot,
         _rollup_merge,
     )
@@ -150,7 +149,6 @@ def st_lambda_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_half = _rollup_snapshot(ev.filter(F.col("ts") < F.lit(cutover)))
     stream_half = run_merge_stream(
         ev.filter(F.col("ts") >= F.lit(cutover)),
-        scratch_dir("st_lambda", sf_dir),
         _rollup_snapshot,
         _rollup_merge,
     )
@@ -246,7 +244,6 @@ def st_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged-swap machinery as st_incremental_rollup."""
     sk = run_merge_stream(
         load_table(spark, sf_dir, "events"),
-        scratch_dir("st_kmv", sf_dir),
         _kmv_snapshot,
         _kmv_merge,
     )
@@ -329,7 +326,6 @@ def st_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k is hash-deterministic."""
     counts = run_merge_stream(
         load_table(spark, sf_dir, "events"),
-        scratch_dir("st_hh", sf_dir),
         _hh_snapshot,
         _hh_merge,
     )

@@ -21,7 +21,7 @@ longs — state size is O(distinct users), not O(events).
 from __future__ import annotations
 
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,7 +31,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from mcp_rag_server_spark.catalog import load_table
 from mcp_rag_server_spark.registry import register
 from mcp_rag_server_spark.streaming.events_stream import (
-    run_to_memory,
+    run_to_frame,
     split_file_stream,
 )
 
@@ -91,24 +91,25 @@ ORDER BY user_id
 )
 def st_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Splits events into N files and streams them one file per trigger,
-    so the state genuinely accumulates across micro-batches; the memory
-    sink (update mode) collects every per-batch emission and the final
-    per-user row is the one with the highest cumulative count. The
-    memory sink holds the rows in the driver, so the split source is
-    deleted once the query has terminated."""
+    so the state genuinely accumulates across micro-batches."""
     ev = load_table(spark, sf_dir, "events")  # ts already micros here
+    return _final_state(ev, running_user_stats, "max_value")
+
+
+def _final_state(
+    ev: DataFrame, stateful: Callable[[DataFrame], DataFrame], value: str
+) -> DataFrame:
+    """Stream ``ev`` through ``stateful`` one split file per trigger and
+    keep every update-mode emission (:func:`run_to_frame`); n_events is
+    cumulative and strictly grows with each touched batch, so the
+    max-count row per user is the final state."""
     with tempfile.TemporaryDirectory(prefix="st_stateful_src_") as src:
         stream = split_file_stream(ev, src)
-        updates = run_to_memory(running_user_stats(stream), output_mode="update")
-    # n_events is cumulative and strictly grows with each touched batch:
-    # the max-count row per user is the final state.
+        updates = run_to_frame(stateful(stream), output_mode="update")
     final = updates.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "max_value")).alias("s")
+        F.max(F.struct("n_events", value)).alias("s")
     )
-    return final.select(
-        "user_id", F.col("s.n_events").alias("n_events"),
-        F.col("s.max_value").alias("max_value"),
-    ).orderBy("user_id")
+    return final.select("user_id", "s.n_events", f"s.{value}").orderBy("user_id")
 
 
 def _twstate_processor():
@@ -173,8 +174,10 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     RocksDB state store — the 100 TB-stream answer to unbounded key
     cardinality (state spills off-heap instead of living in executor
     memory). Same multi-file micro-batch harness as
-    st_stateful_user_stats; the max-count emission per user is the
-    final state."""
+    st_stateful_user_stats (:func:`_final_state`), so it ends in
+    :func:`run_to_frame` like the registered streaming queries; that
+    path is unverified wherever protobuf is missing, since its test then
+    skips (:func:`transform_with_state_available`)."""
     ev = load_table(spark, sf_dir, "events")
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
@@ -182,25 +185,18 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        with tempfile.TemporaryDirectory(prefix="st_tws_src_") as src:
-            stream = split_file_stream(ev, src)
-            result = stream.groupBy("user_id").transformWithStateInPandas(
+        return _final_state(
+            ev,
+            lambda stream: stream.groupBy("user_id").transformWithStateInPandas(
                 statefulProcessor=_twstate_processor(),
                 outputStructType="user_id long, n_events long, min_value double",
                 outputMode="Update",
                 timeMode="None",
-            )
-            updates = run_to_memory(result, output_mode="update")
+            ),
+            "min_value",
+        )
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    final = updates.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "min_value")).alias("s")
-    )
-    return final.select(
-        "user_id",
-        F.col("s.n_events").alias("n_events"),
-        F.col("s.min_value").alias("min_value"),
-    ).orderBy("user_id")

@@ -21,7 +21,9 @@ from mcp_rag_server_spark.registry import load_all
 
 #: Queries that returned wrong rows under concurrency while operators
 #: bound relations through session-global temp views, plus every
-#: operator that chains an intermediate relation into a later statement.
+#: operator that chains an intermediate relation into a later statement,
+#: plus one streaming query per sink shape (windowed aggregation and
+#: foreachBatch merge).
 QUERIES = (
     "dd_method_agreement",
     "dd_simhash",
@@ -29,6 +31,8 @@ QUERIES = (
     "sim_multiprobe_lsh",
     "sql_rag_topk",
     "sql_recursive_reach",
+    "st_latest_state",
+    "st_sliding_windows",
     "ta_bpe_apply",
     "ta_bpe_train",
     "ta_dataset_card",

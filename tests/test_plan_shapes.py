@@ -9,6 +9,8 @@ broadcast joins, TakeOrderedAndProject.
 
 from __future__ import annotations
 
+from conftest import SF0001
+
 from mcp_rag_server_spark.plans.inspect import (
     broadcast_join_count,
     count_exchanges,
@@ -20,6 +22,22 @@ from mcp_rag_server_spark.plans.inspect import (
 from mcp_rag_server_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
+
+#: operator → checkpoint expected visible in the FINAL plan. The
+#: dd_method_agreement final statement reads its checkpointed relations, so
+#: ExistingRDD shows there too; rag_mmr_batch's checkpoint sits below
+#: the rerank cogroup (also final-plan-visible).
+CKPT_QUERIES = (
+    "ev_ivm_delta_rollup",
+    "rag_mmr_batch",
+    "dd_method_agreement",
+    "tpch_q21_waiting_orders",
+    # the BPE pair reads the checkpointed s0 corpus stage — pinned so
+    # a regression re-inlining the 18-scan chain is caught here, not
+    # only in the bench.
+    "ta_bpe_train",
+    "ta_bpe_apply",
+)
 
 
 def q(spark, name):
@@ -2394,3 +2412,21 @@ def test_round8_perf_fixes_stay_pinned(spark):
 
     p = plan_string(q(spark, "ta_fingerprint"))
     assert p.count("sequence(1, greatest(") == 1
+
+
+def test_final_plans_read_checkpointed_stage(spark):
+    reg = load_all()
+    for name in CKPT_QUERIES:
+        df = reg[name].spark_fn(spark, SF0001)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in plan, name
+        # the re-inlined form this replaced scanned parquet many times
+        # in ONE statement; the checkpointed final statement must not
+        # (tpch_q21 keeps its supplier-dim scan, ev_ivm its bounds,
+        # ta_bpe_apply its docw corpus explode; the bound asserts the
+        # blow-up is gone, not zero scans). "Scan parquet" matches both
+        # the v1 "FileScan parquet" and v2 "BatchScan parquet"
+        # spellings exactly once per scan node (counting both patterns
+        # would double-count every scan).
+        n_scans = plan.count("Scan parquet")
+        assert n_scans <= 3, (name, n_scans)

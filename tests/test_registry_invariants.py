@@ -123,6 +123,14 @@ def test_bench_set_is_stable():
         # live directory (and recover_dir its one rollback); a second
         # rename-based swap elsewhere has its own crash windows.
         pytest.param(("os.rename(", "os.replace("), {"ingest.py"}, id="dir_swap"),
+        # events_stream.run_foreach_batch is the one streaming sink: a
+        # memory sink registers a session-global view per query name
+        # that outlives the call, and a second writeStream call site is
+        # a second runner with its own checkpoint and result handling.
+        pytest.param(
+            (".queryName(", 'format("memory")'), set(), id="stream_sink"
+        ),
+        pytest.param((".writeStream",), {"events_stream.py"}, id="stream_writer"),
     ],
 )
 def test_no_session_conf_mutation_outside_session_module(patterns, allowed):
@@ -132,7 +140,9 @@ def test_no_session_conf_mutation_outside_session_module(patterns, allowed):
     driver-session wrapper), temp views in catalog.py (a rebound view
     name makes a concurrent statement read another query's
     relation); file stats and listings are read ONLY in catalog.py
-    too, and a live directory is renamed ONLY in sources/ingest.py."""
+    too, a live directory is renamed ONLY in sources/ingest.py, and a
+    stream is written ONLY by streaming/events_stream.py's foreachBatch
+    runner."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "mcp_rag_server_spark"

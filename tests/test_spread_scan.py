@@ -37,7 +37,8 @@ from mcp_rag_server_spark.session import spread_scan
 #: bench spread targets whose FINAL plan retains the keyed exchange
 #: (query name → hash key the spread declares). Queries that fold the
 #: exchange into a downstream checkpoint job (dd_method_agreement,
-#: ta_bpe_*) are pinned by test_r14_optimizations instead.
+#: ta_bpe_*) are pinned by test_plan_shapes'
+#: test_final_plans_read_checkpointed_stage instead.
 SPREAD_PLAN_QUERIES = {
     "tpch_q1": "l_orderkey",
     "top_parts_by_revenue": "l_partkey",

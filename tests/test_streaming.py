@@ -224,29 +224,6 @@ def test_crashed_merge_recovers(spark, tmp_path, monkeypatch, sink, call, nth):
     assert applied_batch_id(tables[crashed]) == applied_batch_id(tables[clean])
 
 
-def test_memory_sink_runs_leave_no_temp_dirs(spark):
-    """Memory-sink queries keep their rows in the driver, so their
-    checkpoint and split-source temp dirs are deleted once the query
-    has terminated rather than left behind on every call."""
-    import glob
-    import tempfile
-
-    from mcp_rag_server_spark.registry import load_all
-
-    def temp_dirs() -> set[str]:
-        tmp = tempfile.gettempdir()
-        return {
-            *glob.glob(os.path.join(tmp, "st_ckpt_*")),
-            *glob.glob(os.path.join(tmp, "st_*_src_*")),
-        }
-
-    before = temp_dirs()
-    reg = load_all()
-    for name in ("st_sliding_windows", "st_stateful_user_stats"):
-        assert reg[name].spark_fn(spark, SF0001).collect()
-    assert temp_dirs() == before
-
-
 def test_scd1_merge_is_split_invariant(spark, tmp_path):
     """The merge algebra claim, tested directly: slicing the same event
     log into 1, 3, or 7 batches (deterministic mod split) must produce

@@ -1,9 +1,10 @@
 """Re-invocation audit: run every SIDE-EFFECT operator twice in one
 session and require identical result sets.
 
-Operators in the ingest_*/st_* families build an on-disk corpus under
-tempfile.gettempdir() (rmtree + rewrite) before querying it. Two
-same-session hazards exist for that shape:
+Operators in the ingest_* family build an on-disk corpus under
+tempfile.gettempdir() (rmtree + rewrite) before querying it; st_*
+operators use per-call temp dirs. Two same-session hazards exist for
+that shape:
 
 1. CacheManager stale-relation dedup: a second ``.cache()`` over the
    SAME path resolves to the first invocation's InMemoryRelation,
