@@ -9,11 +9,8 @@ rely on Catalyst for column pruning + predicate pushdown.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
-import shutil
-import tempfile
 import uuid
 from urllib.parse import unquote, urlparse
 
@@ -100,17 +97,6 @@ def input_files(
     return tuple(
         sorted((p, st.st_size, st.st_mtime_ns) for p, st in zip(paths, stats))
     )
-
-
-def scratch_dir(tag: str, sf_dir: str) -> str:
-    """An emptied ``<tmp>/spark_graft_<tag>_<md5(sf_dir)[:8]>`` for an
-    ``ingest_*`` query's corpus and store. Keyed by ``sf_dir`` alone, so
-    it assumes one run per (tag, sf_dir) at a time: a concurrent or
-    later same-sf run deletes the files an earlier frame still reads."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{digest}")
-    shutil.rmtree(base, ignore_errors=True)
-    return base
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -25,18 +25,25 @@ The only driver-side loop writes the fixture corpus to local disk —
 control-plane scaffolding (500 files at sf0.01); in production the
 corpus already exists, and the ingest itself is the distributed path
 under test.
+
+Every ``ingest_*`` query here writes its files into a per-call
+``tempfile.TemporaryDirectory`` and returns ``localCheckpoint`` blocks
+taken before the directory is deleted: nothing outlives the call, so a
+second or concurrent call never touches what a held frame reads.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table, scratch_dir
+from mcp_rag_server_spark.catalog import load_table
 from mcp_rag_server_spark.functions.numeric import finite_col
 from mcp_rag_server_spark.functions.text import chunk_stride
 from mcp_rag_server_spark.registry import register
@@ -204,23 +211,23 @@ def ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "lang", "text")
         .collect()
     )
-    base = scratch_dir("ingest_rt", sf_dir)
-    root = os.path.join(base, "corpus")
-    store = os.path.join(base, "store")
-    os.makedirs(root, exist_ok=True)
-
     params = IngestParams(
         chunk_size=RT_CHUNK_SIZE,
         chunk_overlap=RT_CHUNK_OVERLAP,
         allowed_ext=("txt",),
     )
-    _write_corpus_v1(root, docs)
-    build(spark, root, store, params)  # cold path: S1→S2→F1→ids→S6
-    _mutate_corpus_v2(root, docs)
-    out = build(spark, root, store, params)  # warm path: S5→J1/J2→S6
-    return out.select(
-        "id", "rel_path", "chunk", "text", "file_size", "line_count"
-    ).orderBy("id")
+    with tempfile.TemporaryDirectory(prefix="ingest_rt_") as base:
+        root = os.path.join(base, "corpus")
+        store = os.path.join(base, "store")
+        os.makedirs(root)
+        _write_corpus_v1(root, docs)
+        build(spark, root, store, params)  # cold path: S1→S2→F1→ids→S6
+        _mutate_corpus_v2(root, docs)
+        out = build(spark, root, store, params)  # warm path: S5→J1/J2→S6
+        out = out.select(
+            "id", "rel_path", "chunk", "text", "file_size", "line_count"
+        ).localCheckpoint()
+    return out.orderBy("id")
 
 
 def _write_junk(root: str) -> None:
@@ -288,33 +295,33 @@ def ingest_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "lang", "text")
         .collect()
     )
-    base = scratch_dir("ingest_cp", sf_dir)
-    root = os.path.join(base, "corpus")
-    store = os.path.join(base, "store")
-    os.makedirs(root, exist_ok=True)
-
     params = IngestParams(
         chunk_size=RT_CHUNK_SIZE,
         chunk_overlap=RT_CHUNK_OVERLAP,
         allowed_ext=("txt", "pdf"),  # pdf admitted so P4 is reachable
     )
-    _write_corpus_v1(root, docs)
-    _write_junk(root)  # P1/P2/P3/P4 + dotfile: all must be filtered out
-    build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
-    _mutate_corpus_v2(root, docs)
-    build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
-    n_files = compact_store(spark, store, target_file_bytes=32 * 1024)
-    if n_files < 2:
-        raise RuntimeError(
-            f"compaction wrote {n_files} file(s); target_file_bytes too"
-            " large for the fixture to exercise the range layout"
-        )
-    out = load_store(spark, store, params)
-    if out is None:
-        raise RuntimeError("compacted store failed load_store meta check")
-    return out.select(
-        "id", "rel_path", "chunk", "text", "file_size", "line_count"
-    ).orderBy("id")
+    with tempfile.TemporaryDirectory(prefix="ingest_cp_") as base:
+        root = os.path.join(base, "corpus")
+        store = os.path.join(base, "store")
+        os.makedirs(root)
+        _write_corpus_v1(root, docs)
+        _write_junk(root)  # P1/P2/P3/P4 + dotfile: all must be filtered out
+        build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
+        _mutate_corpus_v2(root, docs)
+        build(spark, root, store, params, pdf_extractor=_failing_pdf_extractor)
+        n_files = compact_store(spark, store, target_file_bytes=32 * 1024)
+        if n_files < 2:
+            raise RuntimeError(
+                f"compaction wrote {n_files} file(s); target_file_bytes too"
+                " large for the fixture to exercise the range layout"
+            )
+        out = load_store(spark, store, params)
+        if out is None:
+            raise RuntimeError("compacted store failed load_store meta check")
+        out = out.select(
+            "id", "rel_path", "chunk", "text", "file_size", "line_count"
+        ).localCheckpoint()
+    return out.orderBy("id")
 
 
 #: The streaming roundtrip uses a half-size corpus slice — the
@@ -360,8 +367,6 @@ def st_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     under continuous arrival. Nothing outlives the call: the rows come
     back as ``localCheckpoint`` blocks of a deleted per-call dir."""
     from mcp_rag_server_spark.streaming.ingest_stream import run_ingest_stream
-
-    from pyspark.sql import functions as F
 
     # bounded driver-side corpus materialization — see the PRECONDITION
     # note above _write_corpus_v1
@@ -441,24 +446,28 @@ def ingest_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the un-partitioned fixture — a pruning bug that drops or doubles a
     directory flips the hash."""
     ev = load_table(spark, sf_dir, "events")
-    base = scratch_dir("ingest_pt", sf_dir)
-    ev.repartition("event_type").write.partitionBy("event_type").parquet(base)
-    back = spark.read.parquet(base).filter(
-        F.col("event_type").isin(*PT_KEEP)
-    )
-    return (
-        back.groupBy(
-            "event_type", (F.col("user_id") % 10).alias("user_bucket")
+    with tempfile.TemporaryDirectory(prefix="ingest_pt_") as base:
+        layout = os.path.join(base, "events")
+        ev.repartition("event_type").write.partitionBy("event_type").parquet(
+            layout
         )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(finite_col(F.col("value")).cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
-            F.max("event_id").alias("max_event_id"),
+        back = spark.read.parquet(layout).filter(
+            F.col("event_type").isin(*PT_KEEP)
         )
-        .orderBy("event_type", "user_bucket")
-    )
+        out = (
+            back.groupBy(
+                "event_type", (F.col("user_id") % 10).alias("user_bucket")
+            )
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(finite_col(F.col("value")).cast("decimal(18,4)"))
+                .cast("double")
+                .alias("total_value"),
+                F.max("event_id").alias("max_event_id"),
+            )
+            .localCheckpoint()
+        )
+    return out.orderBy("event_type", "user_bucket")
 
 
 #: Text-format round-trip: explicit micros-precision timestamp format
@@ -514,22 +523,11 @@ def ingest_text_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < TXT_USERS)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    base = scratch_dir("ingest_tx", sf_dir)
-    jdir, cdir = os.path.join(base, "jsonl"), os.path.join(base, "csv")
-    ev.repartition(4).write.option("timestampFormat", TXT_TS_FMT).json(jdir)
-    ev.drop("ts").repartition(4).write.option("header", "true").csv(cdir)
-
     jschema = (
         "event_id bigint, user_id bigint, event_type string, value double,"
         " ts timestamp"
     )
     cschema = "event_id bigint, user_id bigint, event_type string, value double"
-    js = (
-        spark.read.schema(jschema)
-        .option("timestampFormat", TXT_TS_FMT)
-        .json(jdir)
-    )
-    cs = spark.read.schema(cschema).option("header", "true").csv(cdir)
 
     def agg(df: DataFrame, fmt: str, with_ts: bool) -> DataFrame:
         cols = [
@@ -551,11 +549,19 @@ def ingest_text_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_ts",
         )
 
-    return (
-        agg(js, "jsonl", True)
-        .unionByName(agg(cs, "csv", False))
-        .orderBy("fmt", "event_type")
-    )
+    with tempfile.TemporaryDirectory(prefix="ingest_tx_") as base:
+        jdir, cdir = os.path.join(base, "jsonl"), os.path.join(base, "csv")
+        ev.repartition(4).write.option("timestampFormat", TXT_TS_FMT).json(jdir)
+        ev.drop("ts").repartition(4).write.option("header", "true").csv(cdir)
+        js = (
+            spark.read.schema(jschema)
+            .option("timestampFormat", TXT_TS_FMT)
+            .json(jdir)
+        )
+        cs = spark.read.schema(cschema).option("header", "true").csv(cdir)
+        out = agg(js, "jsonl", True).unionByName(agg(cs, "csv", False))
+        out = out.localCheckpoint()
+    return out.orderBy("fmt", "event_type")
 
 
 #: Bucketed co-located join geometry. 8 buckets — enough to show the
@@ -594,46 +600,51 @@ def ingest_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the broadcast path the tiny fixture would otherwise take (at
     real scale two fact tables exceed any broadcast threshold and SMJ
     is what AQE picks anyway). The aggregate after the join is the one
-    remaining exchange."""
+    remaining exchange. The bucket spec lives in the catalog, not in
+    the files, so the two tables get per-call names and are dropped
+    before the call returns."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    base = scratch_dir("ingest_bk", sf_dir)
-    digest = base[-8:]  # scratch_dir's sf_dir key, shared by the table names
-    to, tl = f"bk_orders_{digest}", f"bk_lineitem_{digest}"
-    (
-        o.select("o_orderkey", "o_orderpriority")
-        .write.mode("overwrite")
-        .bucketBy(BK_BUCKETS, "o_orderkey")
-        .sortBy("o_orderkey")
-        .option("path", os.path.join(base, "orders"))
-        .saveAsTable(to)
-    )
-    (
-        li.select("l_orderkey", "l_extendedprice", "l_discount")
-        .write.mode("overwrite")
-        .bucketBy(BK_BUCKETS, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", os.path.join(base, "lineitem"))
-        .saveAsTable(tl)
-    )
-    ob, lb = spark.table(to), spark.table(tl)
-    return (
-        ob.hint("merge")
-        .join(lb, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,4)"
-                )
+    suffix = uuid.uuid4().hex
+    to, tl = f"bk_orders_{suffix}", f"bk_lineitem_{suffix}"
+    with tempfile.TemporaryDirectory(prefix="ingest_bk_") as base:
+        try:
+            (
+                o.select("o_orderkey", "o_orderpriority")
+                .write.bucketBy(BK_BUCKETS, "o_orderkey")
+                .sortBy("o_orderkey")
+                .option("path", os.path.join(base, "orders"))
+                .saveAsTable(to)
             )
-            .cast("double")
-            .alias("revenue"),
-            F.countDistinct("o_orderkey").alias("n_orders"),
-        )
-        .orderBy("o_orderpriority")
-    )
+            (
+                li.select("l_orderkey", "l_extendedprice", "l_discount")
+                .write.bucketBy(BK_BUCKETS, "l_orderkey")
+                .sortBy("l_orderkey")
+                .option("path", os.path.join(base, "lineitem"))
+                .saveAsTable(tl)
+            )
+            out = (
+                spark.table(to)
+                .hint("merge")
+                .join(spark.table(tl), F.col("l_orderkey") == F.col("o_orderkey"))
+                .groupBy("o_orderpriority")
+                .agg(
+                    F.count("*").alias("n_items"),
+                    F.sum(
+                        (
+                            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+                        ).cast("decimal(18,4)")
+                    )
+                    .cast("double")
+                    .alias("revenue"),
+                    F.countDistinct("o_orderkey").alias("n_orders"),
+                )
+                .localCheckpoint()
+            )
+        finally:
+            for table in (to, tl):
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
+    return out.orderBy("o_orderpriority")
 
 
 #: GDPR-deletion geometry: hash-bucketed user partitions; the erasure
@@ -680,80 +691,83 @@ def ingest_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletion domain. The final audit aggregate runs over the whole
     post-delete store and is hashed against the oracle's NOT IN."""
     ev = load_table(spark, sf_dir, "events")
-    base = scratch_dir("ingest_gd", sf_dir)
-    store = os.path.join(base, "store")
-    (
-        ev.withColumn("user_bucket", F.col("user_id") % GDPR_BUCKETS)
-        .repartition("user_bucket")
-        .write.partitionBy("user_bucket")
-        .parquet(store)
-    )
     affected = sorted({u % GDPR_BUCKETS for u in GDPR_DELETE_USERS})
-
-    def clean_bucket_files() -> dict[str, list[str]]:
-        # enumerate the bucket dirs that actually exist (tiny fixtures
-        # may not populate all GDPR_BUCKETS values); the Hive default
-        # partition (NULL user_bucket — rows with no user) is never an
-        # erasure target, so it counts as a clean bucket
-        out = {}
-        for d in os.listdir(store):
-            if not d.startswith("user_bucket="):
-                continue
-            val = d.split("=")[1]
-            if val.isdigit() and int(val) in affected:
-                continue
-            out[d] = sorted(os.listdir(os.path.join(store, d)))
-        return out
-
-    before = clean_bucket_files()
-    # Materialize the survivors BEFORE overwriting: the write targets
-    # the same path it reads, and dynamic overwrite deletes the source
-    # files at commit — a lazy plan would race its own input. (A table
-    # format's MERGE does this transactionally; on raw parquet the
-    # staged rewrite is the correct shape, and the staged set is one
-    # bucket's survivors, not the store.)
-    kept = (
-        spark.read.parquet(store)
-        .filter(F.col("user_bucket").isin(affected))
-        .filter(~F.col("user_id").isin(*GDPR_DELETE_USERS))
-        .localCheckpoint(eager=True)
-    )
-    (
-        kept.repartition("user_bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("user_bucket")
-        .parquet(store)
-    )
-    # Dynamic overwrite replaces only partitions PRESENT in the written
-    # frame — a bucket whose every row was erased contributes none, so
-    # its old files silently survive (the classic delete-everything
-    # no-op; the sf0.001 fixture, one user per bucket, exposed it: the
-    # erased user's whole bucket stayed on disk). Fully-emptied buckets
-    # need the explicit directory delete a table format's commit would
-    # have done.
-    present = {
-        r.user_bucket
-        for r in kept.select("user_bucket").distinct().collect()
-    }
-    for b in affected:
-        if b not in present:
-            shutil.rmtree(
-                os.path.join(store, f"user_bucket={b}"), ignore_errors=True
-            )
-    after = clean_bucket_files()
-    # dynamic overwrite must not have touched the other buckets
-    assert before == after, "dynamic partition overwrite rewrote clean buckets"
-    return (
-        spark.read.parquet(store)
-        .groupBy(F.col("user_bucket").cast("bigint").alias("user_bucket"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.max("event_id").alias("max_event_id"),
+    with tempfile.TemporaryDirectory(prefix="ingest_gd_") as base:
+        store = os.path.join(base, "store")
+        (
+            ev.withColumn("user_bucket", F.col("user_id") % GDPR_BUCKETS)
+            .repartition("user_bucket")
+            .write.partitionBy("user_bucket")
+            .parquet(store)
         )
-        .orderBy("user_bucket")
-    )
+
+        def clean_bucket_files() -> dict[str, list[str]]:
+            # enumerate the bucket dirs that actually exist (tiny fixtures
+            # may not populate all GDPR_BUCKETS values); the Hive default
+            # partition (NULL user_bucket — rows with no user) is never an
+            # erasure target, so it counts as a clean bucket
+            files = {}
+            for d in os.listdir(store):
+                if not d.startswith("user_bucket="):
+                    continue
+                val = d.split("=")[1]
+                if val.isdigit() and int(val) in affected:
+                    continue
+                files[d] = sorted(os.listdir(os.path.join(store, d)))
+            return files
+
+        before = clean_bucket_files()
+        # Materialize the survivors BEFORE overwriting: the write targets
+        # the same path it reads, and dynamic overwrite deletes the source
+        # files at commit — a lazy plan would race its own input. (A table
+        # format's MERGE does this transactionally; on raw parquet the
+        # staged rewrite is the correct shape, and the staged set is one
+        # bucket's survivors, not the store.)
+        kept = (
+            spark.read.parquet(store)
+            .filter(F.col("user_bucket").isin(affected))
+            .filter(~F.col("user_id").isin(*GDPR_DELETE_USERS))
+            .localCheckpoint(eager=True)
+        )
+        (
+            kept.repartition("user_bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("user_bucket")
+            .parquet(store)
+        )
+        # Dynamic overwrite replaces only partitions PRESENT in the written
+        # frame — a bucket whose every row was erased contributes none, so
+        # its old files silently survive (the classic delete-everything
+        # no-op; the sf0.001 fixture, one user per bucket, exposed it: the
+        # erased user's whole bucket stayed on disk). Fully-emptied buckets
+        # need the explicit directory delete a table format's commit would
+        # have done.
+        present = {
+            r.user_bucket
+            for r in kept.select("user_bucket").distinct().collect()
+        }
+        for b in affected:
+            if b not in present:
+                shutil.rmtree(
+                    os.path.join(store, f"user_bucket={b}"), ignore_errors=True
+                )
+        after = clean_bucket_files()
+        # dynamic overwrite must not have touched the other buckets
+        assert before == after, (
+            "dynamic partition overwrite rewrote clean buckets"
+        )
+        out = (
+            spark.read.parquet(store)
+            .groupBy(F.col("user_bucket").cast("bigint").alias("user_bucket"))
+            .agg(
+                F.count("*").alias("n_events"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.max("event_id").alias("max_event_id"),
+            )
+            .localCheckpoint()
+        )
+    return out.orderBy("user_bucket")
 
 
 @register(
@@ -796,32 +810,33 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, backfills anything but NULL, or loses the added column on
     the v1 slice flips the hash."""
     o = load_table(spark, sf_dir, "orders")
-    base = scratch_dir("ingest_sev", sf_dir)
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    v1.coalesce(1).write.parquet(os.path.join(base, "v1"))
-    v2.coalesce(1).write.parquet(os.path.join(base, "v2"))
-    back = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(base, "v1"), os.path.join(base, "v2")
-    )
-    return (
-        back.groupBy(
-            F.coalesce(F.col("o_orderpriority"), F.lit("<pre-evolution>"))
-            .alias("priority")
+    with tempfile.TemporaryDirectory(prefix="ingest_sev_") as base:
+        v1.coalesce(1).write.parquet(os.path.join(base, "v1"))
+        v2.coalesce(1).write.parquet(os.path.join(base, "v2"))
+        back = spark.read.option("mergeSchema", "true").parquet(
+            os.path.join(base, "v1"), os.path.join(base, "v2")
         )
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice"), 4).cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_price"),
-            F.max("o_orderkey").alias("max_orderkey"),
+        out = (
+            back.groupBy(
+                F.coalesce(F.col("o_orderpriority"), F.lit("<pre-evolution>"))
+                .alias("priority")
+            )
+            .agg(
+                F.count("*").alias("n_orders"),
+                F.sum(F.round(F.col("o_totalprice"), 4).cast("decimal(18,4)"))
+                .cast("double")
+                .alias("total_price"),
+                F.max("o_orderkey").alias("max_orderkey"),
+            )
+            .localCheckpoint()
         )
-        .orderBy("priority")
-    )
+    return out.orderBy("priority")
 
 
 #: Merge-on-read deletes: every 7th doc is tombstoned.
@@ -862,25 +877,26 @@ def ingest_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     forgets the anti-join (or applies it to the wrong id) resurfaces a
     tombstoned row and flips the hash."""
     docs = load_table(spark, sf_dir, "documents")
-    base = scratch_dir("ingest_mor", sf_dir)
-    docs.coalesce(1).write.parquet(os.path.join(base, "base"))
-    docs.filter(F.col("doc_id") % MOR_DELETE_MOD == 0).select(
-        "doc_id"
-    ).coalesce(1).write.parquet(os.path.join(base, "deletes"))
-    base_df = spark.read.parquet(os.path.join(base, "base"))
-    dels = spark.read.parquet(os.path.join(base, "deletes"))
-    live = base_df.join(F.broadcast(dels), "doc_id", "left_anti")
-    return (
-        live.groupBy("source")
-        .agg(
-            F.count("*").alias("n_live"),
-            F.sum(F.col("n_chars").cast("decimal(18,0)"))
-            .cast("bigint")
-            .alias("live_chars"),
-            F.max("doc_id").alias("max_live_doc"),
+    with tempfile.TemporaryDirectory(prefix="ingest_mor_") as base:
+        docs.coalesce(1).write.parquet(os.path.join(base, "base"))
+        docs.filter(F.col("doc_id") % MOR_DELETE_MOD == 0).select(
+            "doc_id"
+        ).coalesce(1).write.parquet(os.path.join(base, "deletes"))
+        base_df = spark.read.parquet(os.path.join(base, "base"))
+        dels = spark.read.parquet(os.path.join(base, "deletes"))
+        live = base_df.join(F.broadcast(dels), "doc_id", "left_anti")
+        out = (
+            live.groupBy("source")
+            .agg(
+                F.count("*").alias("n_live"),
+                F.sum(F.col("n_chars").cast("decimal(18,0)"))
+                .cast("bigint")
+                .alias("live_chars"),
+                F.max("doc_id").alias("max_live_doc"),
+            )
+            .localCheckpoint()
         )
-        .orderBy("source")
-    )
+    return out.orderBy("source")
 
 
 #: Time travel: the delta vintage is every 3rd doc (an "append batch").
@@ -925,28 +941,6 @@ def ingest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning; the version column here is the audit that the manifest
     indirection works."""
     docs = load_table(spark, sf_dir, "documents")
-    base = scratch_dir("ingest_tt", sf_dir)
-    os.makedirs(base)
-    f_base = os.path.join(base, "data_base")
-    f_delta = os.path.join(base, "data_delta")
-    docs.filter(F.col("doc_id") % TT_DELTA_MOD != 0).coalesce(1).write.parquet(
-        f_base
-    )
-    docs.filter(F.col("doc_id") % TT_DELTA_MOD == 0).coalesce(1).write.parquet(
-        f_delta
-    )
-    # manifests: newline-separated data paths per version
-    with open(os.path.join(base, "manifest_v0"), "w", encoding="utf-8") as fh:
-        fh.write(f_base + "\n")
-    with open(os.path.join(base, "manifest_v1"), "w", encoding="utf-8") as fh:
-        fh.write(f_base + "\n" + f_delta + "\n")
-
-    def read_version(v: int):
-        with open(
-            os.path.join(base, f"manifest_v{v}"), encoding="utf-8"
-        ) as fh:
-            paths = [p for p in fh.read().splitlines() if p]
-        return spark.read.parquet(*paths)
 
     def census(df: DataFrame, v: int) -> DataFrame:
         return df.agg(
@@ -958,11 +952,31 @@ def ingest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").alias("max_doc_id"),
         )
 
-    return (
-        census(read_version(0), 0)
-        .unionByName(census(read_version(1), 1))
-        .orderBy("version")
-    )
+    with tempfile.TemporaryDirectory(prefix="ingest_tt_") as base:
+        f_base = os.path.join(base, "data_base")
+        f_delta = os.path.join(base, "data_delta")
+        is_delta = F.col("doc_id") % TT_DELTA_MOD == 0
+        docs.filter(~is_delta).coalesce(1).write.parquet(f_base)
+        docs.filter(is_delta).coalesce(1).write.parquet(f_delta)
+        # manifests: newline-separated data paths per version
+        with open(os.path.join(base, "manifest_v0"), "w", encoding="utf-8") as fh:
+            fh.write(f_base + "\n")
+        with open(os.path.join(base, "manifest_v1"), "w", encoding="utf-8") as fh:
+            fh.write(f_base + "\n" + f_delta + "\n")
+
+        def read_version(v: int):
+            with open(
+                os.path.join(base, f"manifest_v{v}"), encoding="utf-8"
+            ) as fh:
+                paths = [p for p in fh.read().splitlines() if p]
+            return spark.read.parquet(*paths)
+
+        out = (
+            census(read_version(0), 0)
+            .unionByName(census(read_version(1), 1))
+            .localCheckpoint()
+        )
+    return out.orderBy("version")
 
 
 @register(
@@ -1005,28 +1019,29 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") < TXT_USERS)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    base = scratch_dir("ingest_orc", sf_dir)
-    odir = os.path.join(base, "events_orc")
-    ev.repartition(4).write.orc(odir)
     schema = (
         "event_id bigint, user_id bigint, event_type string, value double,"
         " ts timestamp"
     )
-    back = spark.read.schema(schema).orc(odir).filter(
-        F.col("user_id") < TXT_USERS
-    )
-    return (
-        back.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(finite_col(F.col("value")).cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
-            F.max("event_id").alias("max_event_id"),
-            F.max("ts").alias("max_ts"),
+    with tempfile.TemporaryDirectory(prefix="ingest_orc_") as base:
+        odir = os.path.join(base, "events_orc")
+        ev.repartition(4).write.orc(odir)
+        back = spark.read.schema(schema).orc(odir).filter(
+            F.col("user_id") < TXT_USERS
         )
-        .orderBy("event_type")
-    )
+        out = (
+            back.groupBy("event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(finite_col(F.col("value")).cast("decimal(18,4)"))
+                .cast("double")
+                .alias("total_value"),
+                F.max("event_id").alias("max_event_id"),
+                F.max("ts").alias("max_ts"),
+            )
+            .localCheckpoint()
+        )
+    return out.orderBy("event_type")
 
 
 #: Malformed-row fixture: the bad-lines file planted beside the good
@@ -1071,39 +1086,33 @@ def ingest_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-mismatched or short rows parse to NULLs with the raw line
     preserved in the corrupt column. Three planted shapes cover the
     failure classes (bad bigint, bad double, wrong arity). The parsed
-    frame is cached before aggregating — Spark disallows queries that
-    read ONLY the internal corrupt column straight off the files
-    (SPARK-21610); at 100 TB the same pipeline points
-    badRecordsPath/observed-metrics at the quarantine instead of
-    caching. Written headerless so the planted file's first line is
-    data, not a phantom header."""
+    frame is checkpointed before aggregating, so both branches read one
+    parse — Spark disallows queries that read ONLY the internal corrupt
+    column straight off the files (SPARK-21610); at 100 TB the same
+    pipeline points badRecordsPath/observed-metrics at the quarantine
+    instead of materializing the parse. Written headerless so the
+    planted file's first line is data, not a phantom header."""
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < TXT_USERS)
         .select("event_id", "user_id", "event_type", "value", "ts")
     )
-    base = scratch_dir("ingest_bad", sf_dir)
-    cdir = os.path.join(base, "csv")
-    ev.drop("ts").repartition(4).write.csv(cdir)
-    with open(os.path.join(cdir, "part-99999-bad.csv"), "w") as fh:
-        fh.write("\n".join(CSV_BAD_LINES) + "\n")
-
     schema = (
         "event_id bigint, user_id bigint, event_type string,"
         " value double, _corrupt string"
     )
-    # A prior same-session invocation cached a read of this SAME path;
-    # CacheManager dedupes by analyzed plan, so without invalidation
-    # the fresh .cache() below silently resolves to the stale
-    # InMemoryRelation whose part files scratch_dir deleted.
-    spark.catalog.refreshByPath(cdir)
-    parsed = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(cdir)
-        .cache()
-    )
+    with tempfile.TemporaryDirectory(prefix="ingest_bad_") as base:
+        cdir = os.path.join(base, "csv")
+        ev.drop("ts").repartition(4).write.csv(cdir)
+        with open(os.path.join(cdir, "part-99999-bad.csv"), "w") as fh:
+            fh.write("\n".join(CSV_BAD_LINES) + "\n")
+        parsed = (
+            spark.read.schema(schema)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt")
+            .csv(cdir)
+            .localCheckpoint()
+        )
     good = (
         parsed.filter(F.col("_corrupt").isNull())
         .groupBy("event_type")
@@ -1175,38 +1184,6 @@ def ingest_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-level diffs first, row-level joins only within changed
     files."""
     docs = load_table(spark, sf_dir, "documents")
-    base = scratch_dir("ingest_sd", sf_dir)
-    os.makedirs(base)
-    f_base = os.path.join(base, "data_base")
-    f_delta = os.path.join(base, "data_delta")
-    docs.filter(F.col("doc_id") % SD_ADD_MOD != 0).select(
-        "doc_id"
-    ).coalesce(1).write.parquet(f_base)
-    docs.filter(F.col("doc_id") % SD_ADD_MOD == 0).select(
-        "doc_id"
-    ).coalesce(1).write.parquet(f_delta)
-    manifests = {
-        0: {"paths": [f_base], "delete_mod": None},
-        1: {"paths": [f_base, f_delta], "delete_mod": None},
-        2: {"paths": [f_base, f_delta], "delete_mod": SD_DEL_MOD},
-    }
-    import json
-
-    for v, m in manifests.items():
-        with open(
-            os.path.join(base, f"manifest_v{v}.json"), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(m, fh)
-
-    def read_version(v: int) -> DataFrame:
-        with open(
-            os.path.join(base, f"manifest_v{v}.json"), encoding="utf-8"
-        ) as fh:
-            m = json.load(fh)
-        df = spark.read.parquet(*m["paths"])
-        if m["delete_mod"] is not None:
-            df = df.filter(F.col("doc_id") % m["delete_mod"] != 0)
-        return df
 
     def diff(a: DataFrame, b: DataFrame, label: str) -> DataFrame:
         added = b.join(a, "doc_id", "left_anti").agg(
@@ -1229,9 +1206,37 @@ def ingest_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    v0, v1, v2 = read_version(0), read_version(1), read_version(2)
-    return (
-        diff(v0, v1, "0_to_1")
-        .unionByName(diff(v1, v2, "1_to_2"))
-        .orderBy("version_pair")
-    )
+    with tempfile.TemporaryDirectory(prefix="ingest_sd_") as base:
+        f_base = os.path.join(base, "data_base")
+        f_delta = os.path.join(base, "data_delta")
+        is_delta = F.col("doc_id") % SD_ADD_MOD == 0
+        docs.filter(~is_delta).select("doc_id").coalesce(1).write.parquet(f_base)
+        docs.filter(is_delta).select("doc_id").coalesce(1).write.parquet(f_delta)
+        manifests = {
+            0: {"paths": [f_base], "delete_mod": None},
+            1: {"paths": [f_base, f_delta], "delete_mod": None},
+            2: {"paths": [f_base, f_delta], "delete_mod": SD_DEL_MOD},
+        }
+        for v, m in manifests.items():
+            with open(
+                os.path.join(base, f"manifest_v{v}.json"), "w", encoding="utf-8"
+            ) as fh:
+                json.dump(m, fh)
+
+        def read_version(v: int) -> DataFrame:
+            with open(
+                os.path.join(base, f"manifest_v{v}.json"), encoding="utf-8"
+            ) as fh:
+                m = json.load(fh)
+            df = spark.read.parquet(*m["paths"])
+            if m["delete_mod"] is not None:
+                df = df.filter(F.col("doc_id") % m["delete_mod"] != 0)
+            return df
+
+        v0, v1, v2 = read_version(0), read_version(1), read_version(2)
+        out = (
+            diff(v0, v1, "0_to_1")
+            .unionByName(diff(v1, v2, "1_to_2"))
+            .localCheckpoint()
+        )
+    return out.orderBy("version_pair")

@@ -28,7 +28,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mcp_rag_server_spark.catalog import load_table, sql
+from mcp_rag_server_spark.catalog import load_table
 from mcp_rag_server_spark.functions.text import chunk_stride, duckdb_chunk_sql
 from mcp_rag_server_spark.operators.chunking import (
     DOC_CHUNK_OVERLAP,
@@ -48,12 +48,12 @@ from mcp_rag_server_spark.registry import register
 )
 def chunk_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """splitChunks (reference src/indexer.ts:201-215) as a Python UDTF:
-    ``eval`` yields one row per character window. Registered and invoked
-    through SQL LATERAL — the standard table-function call shape.
-    ``useArrow=True`` moves the Python boundary to Arrow batches
-    (ArrowEvalPythonUDTF — plan-linted: the row-at-a-time
-    BatchEvalPython path is banned repo-wide); prefer the codegen
-    chunker (chunk_split) unless the fan-out logic needs Python.
+    ``eval`` yields one row per character window. Invoked through a
+    DataFrame lateral join — the table-function call shape, with no
+    session-global function name. ``useArrow=True`` moves the Python
+    boundary to Arrow batches (ArrowEvalPythonUDTF — plan-linted: the
+    row-at-a-time BatchEvalPython path is banned repo-wide); prefer the
+    codegen chunker (chunk_split) unless the fan-out logic needs Python.
     """
     from pyspark.sql.functions import udtf
 
@@ -68,12 +68,10 @@ def chunk_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
             for ordinal, start in enumerate(range(0, len(text), stride)):
                 yield ordinal, text[start : start + size]
 
-    spark.udtf.register("chunk_udtf", ChunkUDTF)
-    text = (
-        "SELECT d.doc_id, c.chunk, c.chunk_text "
-        "FROM documents d, LATERAL chunk_udtf(d.text) c"
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.lateralJoin(ChunkUDTF(F.col("text").outer())).select(
+        "doc_id", "chunk", "chunk_text"
     )
-    return sql(spark, text, documents=load_table(spark, sf_dir, "documents"))
 
 
 @register(

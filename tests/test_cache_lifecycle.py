@@ -2,12 +2,13 @@
 
 Operators in this repo ``cache()`` a small set of intermediates that a
 single query references more than once (LSH signatures, the
-cell-probe assignment and its scored half-matrix, a re-read of a
-rebuilt ingest dir) and ``localCheckpoint(eager=True)`` loop-invariant
-stages in iterative ops. Neither is ever ``unpersist()``ed by the
-operator, BY DESIGN: a query function returns a LAZY DataFrame, so the
-cache must still exist when the caller executes it — a scoped
-unpersist inside the operator would evict before first use.
+cell-probe assignment and its scored half-matrix) and
+``localCheckpoint(eager=True)`` loop-invariant stages in iterative ops
+and the read-backs of the ``ingest_*`` queries' per-call files.
+Neither is ever ``unpersist()``ed by the operator, BY DESIGN: a query
+function returns a LAZY DataFrame, so the cache must still exist when
+the caller executes it — a scoped unpersist inside the operator would
+evict before first use.
 
 The documented contract that makes this safe in a long shared session:
 
@@ -51,7 +52,6 @@ CACHING_QUERIES = [
     "dd_lsh_band_audit",  # its own sigs + per-band cache
     "dd_incremental_minhash",
     "dd_graph_triangles",
-    "ingest_csv_malformed",  # rebuilt-dir re-read cache
     "sim_knn_graph",  # probed + half caches
     "sim_graph_greedy_search",  # shares the half cache entry
     "sim_kcore_decompose",  # shares the half cache entry

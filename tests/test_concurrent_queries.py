@@ -71,3 +71,26 @@ def test_concurrent_queries_match_sequential(spark):
         wrong = sorted(job for job in jobs if got[job] != expected[job])
         assert wrong == [], f"shuffle seed {seed}: wrong rows for {wrong}"
     assert _temp_views(spark) == views_before
+
+
+#: Queries that write files: each call owns a per-call temp dir (and,
+#: for the bucketed join, per-call table names), so two calls at once on
+#: the SAME sf neither collide on a path nor read each other's files.
+FILE_WRITING_QUERIES = ("ingest_orc_roundtrip", "ingest_bucketed_join")
+
+
+def test_same_sf_file_writers_run_concurrently(spark):
+    reg = load_all()
+    expected = {
+        name: _digest(reg[name].spark_fn(spark, SF0001))
+        for name in FILE_WRITING_QUERIES
+    }
+    jobs = [name for name in FILE_WRITING_QUERIES for _ in range(2)]
+
+    def run(name: str) -> str:
+        return _digest(reg[name].spark_fn(spark, SF0001))
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        got = list(pool.map(run, jobs, timeout=900))
+    wrong = [name for name, d in zip(jobs, got) if d != expected[name]]
+    assert wrong == [], f"wrong rows for {wrong}"

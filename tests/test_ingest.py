@@ -851,19 +851,3 @@ def test_within_root_col_property_parity(spark):
     }
     for p, want in expected.items():
         assert got[p] == want, (p, got[p], want)
-
-
-def test_csv_malformed_reinvocation_safe(spark):
-    """Re-running ingest_csv_malformed in ONE session must keep
-    matching itself: the op rebuilds its side-effect dir and re-caches
-    a read of the SAME path, and without the refreshByPath guard
-    CacheManager dedupes the new .cache() onto the stale
-    InMemoryRelation whose part files the rmtree deleted (caught by a
-    suite-order interaction in r7)."""
-    from mcp_rag_server_spark.registry import load_all
-
-    sf = "/root/testdata/sf0.001"
-    fn = load_all()["ingest_csv_malformed"].spark_fn
-    first = sorted(map(tuple, fn(spark, sf).collect()))
-    second = sorted(map(tuple, fn(spark, sf).collect()))
-    assert first == second and len(first) > 0

@@ -4,10 +4,14 @@ gives these for free ONLY if the query is expressed so it can).
 
 These assert on the initial (pre-AQE) plan text, which is stable for
 the properties checked: scan pushdown/pruning, exchange counts,
-broadcast joins, TakeOrderedAndProject.
+broadcast joins, TakeOrderedAndProject. An operator that returns
+checkpointed rows is checked on the plan of the read-back it ran
+(:func:`read_back_plan`).
 """
 
 from __future__ import annotations
+
+import re
 
 from conftest import SF0001
 
@@ -42,6 +46,52 @@ CKPT_QUERIES = (
 
 def q(spark, name):
     return load_all()[name].spark_fn(spark, SF)
+
+
+def _initial_plan(description: str) -> str:
+    """``description`` (a formatted physical plan) cut to its pre-AQE
+    part: the ``== Initial Plan ==`` tree, a blank line, then the
+    details of that tree's nodes — the layout of ``plan_string``."""
+    tree, details = description.split("\n\n", 1)
+    tree = tree.split("== Initial Plan ==", 1)[-1]
+    tree = tree.removeprefix("== Physical Plan ==").strip("\n")
+    nodes = set(re.findall(r"\((\d+)\)", tree))
+    kept = [
+        block
+        for block in details.strip("\n").split("\n\n")
+        if re.match(r"\((\d+)\)", block)[1] in nodes
+    ]
+    return "\n\n".join([tree, *kept])
+
+
+def read_back_plan(spark, name) -> str:
+    """The pre-AQE plan of the one read (a plan that scans and writes
+    nothing) that building operator ``name`` executed, from the SQL
+    status store: for an operator that writes files and returns a
+    checkpoint of reading them back, the plan of that read-back. Plans,
+    not execution descriptions, pick it: a job description left set on
+    the thread replaces the description of every later execution."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        # in execution-id order; events reach the store through the
+        # async listener bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return store.executionsList()
+
+    before = executions()
+    last = before.last().executionId() if before.nonEmpty() else -1
+    q(spark, name)
+    after = executions()
+    executed = []
+    for i in reversed(range(after.size())):
+        if after.apply(i).executionId() <= last:
+            break
+        executed.insert(0, after.apply(i))
+    plans = [_initial_plan(e.physicalPlanDescription()) for e in executed]
+    reads = [p for p in plans if "Scan " in p and "Execute " not in p]
+    assert len(reads) == 1, plans
+    return reads[0]
 
 
 def test_rag_topk_is_shuffle_free_heap_topk(spark):
@@ -420,20 +470,19 @@ def test_partitioned_scan_prunes_directories(spark):
     on the scan), and the pruned scan's input files must come only from
     the kept partition values — at 100 TB this is 2/5 of the scan cost,
     decided before any row is read."""
-    import re
-
-    df = q(spark, "ingest_partitioned_scan")
-    plan = plan_string(df)
-    # the partition filter is attached to the temp-layout scan and names
+    plan = read_back_plan(spark, "ingest_partitioned_scan")
+    # the one scan is of the temp layout; its partition filter names
     # exactly the kept values (inputFiles() can't check this: it lists
     # the FileIndex BEFORE pruning)
+    locations = re.findall(r"^Location: .*", plan, re.M)
+    assert len(locations) == 1 and "ingest_pt" in locations[0], locations
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m, plan
     assert "IN (click,purchase)" in m.group(1), m.group(1)
     # row-group/data filters must NOT carry event_type — pruning, not
     # filtering, satisfies the predicate
-    pf = pushed_filters(df, "ingest_pt")
-    assert "event_type" not in pf, pf
+    pf = re.findall(r"^PushedFilters: .*", plan, re.M)
+    assert "event_type" not in "".join(pf), pf
 
 
 def test_bucketed_join_has_no_join_side_exchange(spark):
@@ -442,16 +491,14 @@ def test_bucketed_join_has_no_join_side_exchange(spark):
     ONLY exchange in the plan is the post-join aggregation. An Exchange
     or Sort sneaking in above either scan means the write-time shuffle
     isn't being reused."""
-    from mcp_rag_server_spark.plans.inspect import tree_section
-
-    df = q(spark, "ingest_bucketed_join")
-    tree = tree_section(df)
+    plan = read_back_plan(spark, "ingest_bucketed_join")
+    tree = plan.split("\n\n")[0]
     assert "SortMergeJoin" in tree
     # the formatted tree lists children BELOW the join line: nothing
     # between the join and its scans may redistribute
     below_join = tree[tree.index("SortMergeJoin"):]
     assert "Exchange" not in below_join, below_join
-    assert "Bucketed: true" in plan_string(df), "scans not bucketed"
+    assert "Bucketed: true" in plan, "scans not bucketed"
 
 
 def test_bm25_single_corpus_shuffle_heap_topk(spark):
@@ -697,8 +744,7 @@ def test_schema_evolution_reads_union_schema(spark):
     """ingest_schema_evolution: the merged read must surface the added
     column over BOTH vintages (pre-evolution rows as NULL) — the scan's
     ReadSchema carries the union; no Python, no cartesian."""
-    df = q(spark, "ingest_schema_evolution")
-    plan = plan_string(df)
+    plan = read_back_plan(spark, "ingest_schema_evolution")
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
     assert "o_orderpriority" in plan
@@ -926,8 +972,7 @@ def test_mor_read_is_broadcast_anti_join(spark):
     """ingest_mor_deletes: the read path applies tombstones as a
     broadcast LEFT ANTI join — the delete set never shuffles the
     base."""
-    df = q(spark, "ingest_mor_deletes")
-    plan = plan_string(df)
+    plan = read_back_plan(spark, "ingest_mor_deletes")
     assert "LeftAnti" in plan, plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
@@ -974,8 +1019,7 @@ def test_hard_negatives_single_role_keyed_window(spark):
 def test_time_travel_v0_reads_only_base_file(spark):
     """ingest_time_travel: the version-0 branch's scan must list ONLY
     the base data path — manifest indirection, not directory listing."""
-    df = q(spark, "ingest_time_travel")
-    plan = plan_string(df)
+    plan = read_back_plan(spark, "ingest_time_travel")
     # formatted plans elide long path lists; the visible evidence is
     # the v0 scan listing ONLY the base path and the v1 scan listing
     # base + 1 elided extra entry
@@ -1191,8 +1235,7 @@ def test_orc_roundtrip_pushes_filter_to_orc_scan(spark):
     """ingest_orc_roundtrip: the read-back is a native ORC columnar
     scan with the user_id predicate pushed to it — the same pushdown
     discipline the parquet fixtures get."""
-    df = q(spark, "ingest_orc_roundtrip")
-    plan = plan_string(df)
+    plan = read_back_plan(spark, "ingest_orc_roundtrip")
     assert "Scan orc" in plan, plan[:2000]
     assert "PushedFilters: [" in plan
     assert "user_id" in plan.split("PushedFilters:")[1][:200]
@@ -1353,13 +1396,18 @@ def test_weighted_sample_window_is_source_keyed(spark):
     assert "windowspecdefinition(source" in stripped
 
 
-def test_csv_malformed_single_cached_parse(spark):
+def test_csv_malformed_single_checkpointed_parse(spark):
     """ingest_csv_malformed: good and corrupt branches both read the
-    ONE cached parse of the CSV directory (InMemoryTableScan on both
-    sides) — never two raw-file passes with different corrupt-column
-    projections (SPARK-21610 territory)."""
+    ONE checkpointed parse of the CSV directory (the same ExistingRDD
+    on both sides), and that parse is one scan of the files — never two
+    raw-file passes with different corrupt-column projections
+    (SPARK-21610 territory)."""
+    parse = read_back_plan(spark, "ingest_csv_malformed")
+    assert parse.split("\n\n")[0].count("Scan csv") == 1, parse
     plan = plan_string(q(spark, "ingest_csv_malformed"))
-    assert plan.count("InMemoryTableScan") >= 2
+    rdds = re.findall(r"(\w+RDD\[\d+\]) at localCheckpoint", plan)
+    assert len(rdds) >= 2 and len(set(rdds)) == 1, rdds
+    assert "Scan csv" not in plan
     assert "EvalPython" not in plan
 
 
@@ -1738,7 +1786,7 @@ def test_snapshot_diff_keyed_anti_semi_joins(spark):
     """ingest_snapshot_diff: version diffs are keyed anti/semi joins
     of manifest reads — no cartesian beyond the 1-row count
     composition, no Python."""
-    plan = plan_string(q(spark, "ingest_snapshot_diff"))
+    plan = read_back_plan(spark, "ingest_snapshot_diff")
     assert "EvalPython" not in plan
     assert "LeftAnti" in plan and "LeftSemi" in plan
 

@@ -131,6 +131,18 @@ def test_bench_set_is_stable():
             (".queryName(", 'format("memory")'), set(), id="stream_sink"
         ),
         pytest.param((".writeStream",), {"events_stream.py"}, id="stream_writer"),
+        # a registered function name is session-global: a second call
+        # rebinds it under a concurrent statement and it outlives the
+        # call. A UDTF is applied as a DataFrame lateral join instead.
+        pytest.param(
+            ("udtf.register(", "udf.register("), set(), id="session_name"
+        ),
+        # the bucket spec lives in the catalog, so ingest_bucketed_join
+        # saves per-call uuid-named tables and drops them before it
+        # returns; anywhere else a saved table is a leaked global name.
+        pytest.param(
+            (".saveAsTable(",), {"ingest_query.py"}, id="session_table"
+        ),
     ],
 )
 def test_no_session_conf_mutation_outside_session_module(patterns, allowed):
@@ -140,9 +152,10 @@ def test_no_session_conf_mutation_outside_session_module(patterns, allowed):
     driver-session wrapper), temp views in catalog.py (a rebound view
     name makes a concurrent statement read another query's
     relation); file stats and listings are read ONLY in catalog.py
-    too, a live directory is renamed ONLY in sources/ingest.py, and a
+    too, a live directory is renamed ONLY in sources/ingest.py, a
     stream is written ONLY by streaming/events_stream.py's foreachBatch
-    runner."""
+    runner, no function name is registered, and a table is saved ONLY
+    by operators/ingest_query.py."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "mcp_rag_server_spark"

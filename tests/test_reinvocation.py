@@ -6,11 +6,13 @@ A long-lived server session keeps the frames it handed out while it
 answers the next call. So a call must not delete what an earlier frame
 reads (a shared scratch dir emptied by the next run), and must not
 leave state behind in the session: no temp view (a memory sink's
-query name), no active stream, no temp dir.
+query name), no saved table, no registered function, no active
+stream, no temp dir.
 
-Inputs: every streaming-tagged query, plus the operators that read
-``localCheckpoint`` blocks (checkpoints must not leak between calls)
-or materialize them from a thread pool (no ordering or race
+Inputs: every streaming-tagged query, every ``ingest_*`` query that
+writes files, ``chunk_udtf`` (a table function), plus the operators
+that read ``localCheckpoint`` blocks (checkpoints must not leak between
+calls) or materialize them from a thread pool (no ordering or race
 sensitivity). The values themselves are oracle-pinned elsewhere; this
 compares call to call.
 """
@@ -34,17 +36,36 @@ STREAMING_QUERIES = tuple(
     name for name, spec in load_all().items() if "streaming" in spec.tags
 )
 
-QUERIES = sorted({*CKPT_QUERIES, *THREADED_QUERIES, *STREAMING_QUERIES})
+#: operators that write files into a per-call temp dir.
+INGEST_QUERIES = tuple(
+    name
+    for name, spec in load_all().items()
+    if spec.spark_fn.__module__.endswith(".ingest_query")
+)
+
+QUERIES = sorted(
+    {
+        *CKPT_QUERIES,
+        *THREADED_QUERIES,
+        *STREAMING_QUERIES,
+        *INGEST_QUERIES,
+        "chunk_udtf",
+    }
+)
 
 
 def _session_state(spark) -> tuple:
     tmp = tempfile.gettempdir()
+    tables = spark.catalog.listTables()
     return (
-        {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        {t.name for t in tables if t.isTemporary},
+        {t.name for t in tables if not t.isTemporary},
+        {f.name for f in spark.catalog.listFunctions() if f.isTemporary},
         {q.id for q in spark.streams.active},
         {
-            *glob.glob(os.path.join(tmp, "st_*")),
-            *glob.glob(os.path.join(tmp, "spark_graft_st_*")),
+            path
+            for pattern in ("st_*", "ingest_*", "spark_graft_*")
+            for path in glob.glob(os.path.join(tmp, pattern))
         },
     )
 

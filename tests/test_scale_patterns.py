@@ -5061,7 +5061,22 @@ def test_du_rollup_matches_python(spark):
     assert root["total_bytes"] == total
 
 
-def test_csv_quarantine_preserves_raw_lines(spark):
+def _keep_ingest_files(monkeypatch, tmp_path) -> None:
+    """Point the ``ingest_*`` queries' per-call temp dir at the
+    test-owned ``tmp_path``, so the files a query wrote outlive the
+    call and the test can read them."""
+    import contextlib
+
+    from mcp_rag_server_spark.operators import ingest_query
+
+    @contextlib.contextmanager
+    def owned_dir(**_kwargs):
+        yield str(tmp_path)
+
+    monkeypatch.setattr(ingest_query.tempfile, "TemporaryDirectory", owned_dir)
+
+
+def test_csv_quarantine_preserves_raw_lines(spark, monkeypatch, tmp_path):
     """ingest_csv_malformed's contract is quarantine-don't-crash AND
     never-silently-drop: beyond the count the oracle pins, the corrupt
     column must hold the planted bad lines VERBATIM so a downstream
@@ -5069,18 +5084,12 @@ def test_csv_quarantine_preserves_raw_lines(spark):
     from mcp_rag_server_spark.operators.ingest_query import CSV_BAD_LINES
     from mcp_rag_server_spark.registry import load_all
 
-    import hashlib as _h
-    import os
-    import tempfile
-
     sf = "/root/testdata/sf0.001"
-    # run the operator to (re)build its side-effect corpus
+    # run the operator to build its side-effect corpus in tmp_path
+    _keep_ingest_files(monkeypatch, tmp_path)
     load_all()["ingest_csv_malformed"].spark_fn(spark, sf).collect()
 
-    digest = _h.md5(sf.encode()).hexdigest()[:8]
-    cdir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ingest_bad_{digest}", "csv"
-    )
+    cdir = str(tmp_path / "csv")
     schema = (
         "event_id bigint, user_id bigint, event_type string,"
         " value double, _corrupt string"
@@ -5623,7 +5632,7 @@ def test_compaction_plan_matches_python_packing(spark):
         assert r["avg_fill_ratio"] == math.floor(fill * 1e4 + 0.5) / 1e4
 
 
-def test_orc_roundtrip_matches_python_and_rows(spark):
+def test_orc_roundtrip_matches_python_and_rows(spark, monkeypatch, tmp_path):
     """ingest_orc_roundtrip: (a) the ORC-read aggregates match a plain
     Python/Decimal recomputation from the parquet slice (Spark casts
     double->DECIMAL(18,4) via the shortest-repr HALF_UP route —
@@ -5636,6 +5645,7 @@ def test_orc_roundtrip_matches_python_and_rows(spark):
     from mcp_rag_server_spark.registry import load_all
 
     sf = "/root/testdata/sf0.001"
+    _keep_ingest_files(monkeypatch, tmp_path)
     got = {
         r["event_type"]: r
         for r in load_all()["ingest_orc_roundtrip"]
@@ -5658,15 +5668,7 @@ def test_orc_roundtrip_matches_python_and_rows(spark):
         assert r["max_ts"] == grp["ts"].max().floor("us")
 
     # row-level: the ORC dir written by the op vs the parquet slice
-    import hashlib as _hl
-    import os
-    import tempfile
-
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ingest_orc_{_hl.md5(sf.encode()).hexdigest()[:8]}",
-    )
-    back = spark.read.orc(os.path.join(base, "events_orc"))
+    back = spark.read.orc(str(tmp_path / "events_orc"))
     src = (
         spark.read.parquet(f"{sf}/events.parquet")
         .filter(F.col("user_id") < TXT_USERS)

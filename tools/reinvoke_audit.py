@@ -1,22 +1,22 @@
-"""Re-invocation audit: run every SIDE-EFFECT operator twice in one
-session and require identical result sets.
+"""Re-invocation audit: call every SIDE-EFFECT operator twice in one
+session, holding the first frame, then collect both and require
+identical result sets.
 
-Operators in the ingest_* family build an on-disk corpus under
-tempfile.gettempdir() (rmtree + rewrite) before querying it; st_*
-operators use per-call temp dirs. Two same-session hazards exist for
-that shape:
+The ingest_* and st_* operators write files into a per-call temp dir
+and return ``localCheckpoint`` blocks read before it is deleted. Two
+same-session hazards exist for that shape:
 
-1. CacheManager stale-relation dedup: a second ``.cache()`` over the
-   SAME path resolves to the first invocation's InMemoryRelation,
-   whose part files the rmtree deleted (caught live in round 7 on
-   ingest_csv_malformed; fixed with ``refreshByPath`` before the
-   read).
+1. A second call deleting or rewriting the files a held frame of the
+   first call still reads (a scratch dir shared by calls): collecting
+   each frame before the next call cannot see it, so the first frame
+   is collected only after the second call.
 2. Checkpoint/high-water-mark state that survives the rebuild and
    makes the second run skip batches.
 
 The driver itself runs each query once per session, but the bench's
-cold/steady timing, the timing sweeps, and any interactive use
-re-invoke — so the contract is: same session, same inputs, same rows.
+cold/steady timing, the timing sweeps, and any interactive or server
+use re-invoke — so the contract is: same session, same inputs, same
+rows.
 
 Usage: python tools/reinvoke_audit.py [sf_dir]   (~2.5 min at sf0.001)
 Exit code 1 if any operator diverges or errors.
@@ -61,8 +61,10 @@ def main() -> int:
     for n in names:
         t0 = time.time()
         try:
-            a = sorted(map(tuple, reg[n].spark_fn(spark, sf).collect()))
-            b = sorted(map(tuple, reg[n].spark_fn(spark, sf).collect()))
+            first = reg[n].spark_fn(spark, sf)
+            second = reg[n].spark_fn(spark, sf)
+            a = sorted(map(tuple, first.collect()))
+            b = sorted(map(tuple, second.collect()))
             ok = (a == b) and len(a) > 0
         except Exception as e:  # noqa: BLE001 - audit reports, not raises
             ok = False
