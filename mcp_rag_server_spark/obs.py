@@ -20,16 +20,32 @@ _groups = itertools.count()
 LAYERS = ("build", "plan", "execute", "fetch")
 
 
+#: The thread-local properties ``setJobGroup`` sets.
+_JOB_LABELS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+def _job_labels(sc) -> dict:
+    return {key: sc.getLocalProperty(key) for key in _JOB_LABELS}
+
+
+def _restore_job_labels(sc, prior: dict) -> None:
+    """Put back the job group and description the caller had, so the
+    jobs and SQL executions it runs later keep their own labels."""
+    for key, value in prior.items():
+        sc.setLocalProperty(key, value)
+
+
 def count_jobs(spark, fn) -> int:
     """Spark jobs ``fn`` runs, counted under a fresh job group
     (``setJobGroup`` + ``statusTracker()`` work with the UI off)."""
     sc = spark.sparkContext
     group = f"count-jobs-{next(_groups)}"
+    prior = _job_labels(sc)
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        _restore_job_labels(sc, prior)
     # Job events reach the status store through the async listener bus.
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -71,6 +87,7 @@ def profile(spark, fn) -> dict:
         seconds[layer] = round(time.perf_counter() - t0, 4)
         return result
 
+    prior = _job_labels(sc)
     t_pass = time.perf_counter()
     try:
         df = timed("build", fn)
@@ -79,7 +96,7 @@ def profile(spark, fn) -> dict:
         rows = len(timed("fetch", df.collect))
         wall = round(time.perf_counter() - t_pass, 4)
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        _restore_job_labels(sc, prior)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     layers = {layer: {"s": seconds[layer], **_group_stats(sc, groups[layer])} for layer in LAYERS}
     return {"wall_s": wall, "rows": rows, **layers}

@@ -594,9 +594,12 @@ def ingest_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``option("path")`` — works under ANY session's warehouse config,
     including the correctness driver's foreign session). Reading them
     back, the SortMergeJoin consumes each side's bucketing as its
-    distribution AND its sort order: no Exchange, no Sort, on either
-    side — the shuffle was paid ONCE at write time and is amortized
-    over every subsequent join on that key. The ``merge`` hint opts out
+    distribution: no Exchange on either side — the shuffle was paid
+    ONCE at write time and is amortized over every subsequent join on
+    that key. Each side still sorts its buckets (a ``Sort`` above each
+    bucketed scan): Spark does not take the order of the bucket files
+    as the scan's output ordering
+    (``spark.sql.legacy.bucketedTableScan.outputOrdering`` is false). The ``merge`` hint opts out
     of the broadcast path the tiny fixture would otherwise take (at
     real scale two fact tables exceed any broadcast threshold and SMJ
     is what AQE picks anyway). The aggregate after the join is the one

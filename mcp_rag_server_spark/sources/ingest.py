@@ -29,14 +29,21 @@ systems. We define ids as ``row_number() over (order by rel_path, chunk)
 NOT ``monotonically_increasing_id`` — that varies with partitioning and
 would break golden tests (SURVEY.md §1.5).
 
-Scale shape: chunking is ``posexplode`` over a pure SQL chunk expression
-— a narrow, shuffle-free scan stage. Id assignment decomposes the
-global ``row_number`` into per-file offsets (functions/ids.py): the only
-ordered computation is a running sum over one row per FILE, so no task
-ever sorts the full chunk set; the ids stay bit-identical to
-``row_number() over (order by rel_path, chunk)`` for golden parity.
+Scale shape: the decoded (rel_path, file_size, text) rows, one per
+file, are hash-exchanged on ``rel_path`` once (``_assign_ids``). The
+per-file chunk counts, the ``posexplode`` of a pure SQL chunk
+expression, the id join and the embedding all read that one exchange,
+so each body is scanned once (src/indexer.ts:165-188 reads each file
+once). Id assignment decomposes the global ``row_number`` into per-file
+offsets (functions/ids.py): the only ordered computation is a running
+sum over one row per FILE, so no task ever sorts the full chunk set;
+the ids stay bit-identical to ``row_number() over (order by rel_path,
+chunk)`` for golden parity. AQE coalesces the exchange's partitions to
+its target size, and those partitions are the embedder's tasks and,
+on a cold build, the store's files: the file count follows the
+corpus's bytes, not the listing's split count.
 
-Each body is read once, by its class's decoder: ``_texts`` reads text
+Each body is decoded by its class's decoder: ``_texts`` reads text
 files and PDFs through separate listings (or path lists), so a tree or
 delta without PDFs starts no Python extractor.
 
@@ -67,8 +74,8 @@ from pyspark.sql import functions as F
 
 from mcp_rag_server_spark.catalog import input_files
 from mcp_rag_server_spark.functions.embedding import with_embedding
-from mcp_rag_server_spark.functions.ids import dense_chunk_ids
-from mcp_rag_server_spark.functions.text import chunk_array
+from mcp_rag_server_spark.functions.ids import ids_from_counts
+from mcp_rag_server_spark.functions.text import chunk_array, chunk_count
 from mcp_rag_server_spark.sources.files import (
     DEFAULT_ALLOWED_EXT,
     DEFAULT_EXCLUDED_FOLDERS,
@@ -130,13 +137,25 @@ def chunk_files(texts: DataFrame, params: IngestParams) -> DataFrame:
     )
 
 
-def _assign_ids(chunks: DataFrame, start_id: int = 0) -> DataFrame:
-    """id = row_number over (rel_path, chunk) - 1 + start_id, computed
-    per-file (functions/ids.py) so no task ever sorts the full chunk
-    set — the ordered step is one row per file. The new rows are
-    embedded here, once, after the id join."""
+def _assign_ids(texts: DataFrame, params: IngestParams, start_id: int = 0) -> DataFrame:
+    """Chunk rows of ``texts`` (one row per file) with id = row_number
+    over (rel_path, chunk) - 1 + start_id, computed per-file
+    (functions/ids.py) so no task ever sorts the full chunk set — the
+    ordered step is one row per file. The new rows are embedded here,
+    once, after the id join.
+
+    ``texts`` is hash-exchanged on ``rel_path`` once, and the per-file
+    chunk counts, the chunks and the embedding all read that exchange,
+    so each body is scanned once. The counts group by ``(rel_path,
+    file_size)``, which every file has one row of: both readers then
+    use every column of the exchange, so column pruning leaves their
+    two exchanges identical and AQE runs one of them."""
+    texts = texts.repartition("rel_path")
+    counts = texts.groupBy("rel_path", "file_size").agg(
+        F.sum(chunk_count("text", params.chunk_size, params.chunk_overlap)).alias("n_chunks")
+    )
     return with_embedding(
-        dense_chunk_ids(chunks, "rel_path", start_id=start_id)
+        ids_from_counts(chunk_files(texts, params), counts, "rel_path", "n_chunks", start_id=start_id)
     ).select("id", "rel_path", "chunk", "text", "file_size", "line_count", "embedding")
 
 
@@ -272,7 +291,7 @@ def cold_build(
         return discover_files(spark, root, exts, params.excluded_folders, with_content=True)
 
     texts = _texts(listing, params.allowed_ext, pdf_extractor)
-    return _assign_ids(chunk_files(texts, params))
+    return _assign_ids(texts, params)
 
 
 def _delta_keys(
@@ -328,7 +347,7 @@ def _apply_delta(
     texts = _texts(lambda paths: read_files(spark, root, paths), changed, pdf_extractor)
     max_id = survivors.agg(F.max("id")).first()[0]
     next_id = (max_id + 1) if max_id is not None else 0
-    new_chunks = _assign_ids(chunk_files(texts, params), start_id=next_id)
+    new_chunks = _assign_ids(texts, params, start_id=next_id)
     return survivors.select(*new_chunks.columns).unionByName(new_chunks)
 
 

@@ -851,3 +851,131 @@ def test_within_root_col_property_parity(spark):
     }
     for p, want in expected.items():
         assert got[p] == want, (p, got[p], want)
+
+
+def _write_tree(root, files: dict[str, str]) -> None:
+    for rel, text in files.items():
+        p = root / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(text, encoding="utf-8")
+
+
+def test_cold_build_reads_each_body_once(spark, tmp_path):
+    """On a tree with no PDF and nothing under an excluded folder, a cold
+    build scans exactly the listed bytes (src/indexer.ts:165-188 reads
+    each file once): the per-file chunk counts, the chunks and their
+    vectors read one exchange of the decoded texts. The store's file
+    count follows that exchange's AQE sizing, not the listing's splits."""
+    from mcp_rag_server_spark.obs import profile
+
+    root = tmp_path / "once"
+    _write_tree(root, {
+        f"d{i % 3}/f{i:02d}.{('md', 'py', 'txt')[i % 3]}": f"file {i} " * (20 + 37 * i)
+        for i in range(24)
+    })
+    listing = discover_files(spark, str(root), PARAMS.allowed_ext, PARAMS.excluded_folders)
+    listed = sum(r["file_size"] for r in listing.collect())
+    assert listed == sum(p.stat().st_size for p in root.rglob("*") if p.is_file())
+
+    stats = profile(spark, lambda: cold_build(spark, str(root), PARAMS))
+    assert stats["execute"]["input_bytes"] == listed
+
+    with_content = discover_files(
+        spark, str(root), PARAMS.allowed_ext, PARAMS.excluded_folders, with_content=True
+    )
+    assert with_content.rdd.getNumPartitions() > 1
+    store = str(tmp_path / "once_store")
+    build(spark, str(root), store, PARAMS)
+    data = os.path.join(store, "chunks")
+    assert len([n for n in os.listdir(data) if n.endswith(".parquet")]) == 1
+
+
+def test_refresh_reads_grown_bodies_once(spark, tmp_path):
+    """A refresh of k grown files reads those k bodies once. Two
+    refreshes from copies of one store, whose k grown files differ only
+    in size, read the same store bytes (delta keys, surviving max id,
+    the survivors' rewrite), so their input bytes differ by exactly the
+    bodies' size difference times the number of body scans: one."""
+    import shutil
+
+    from mcp_rag_server_spark.obs import profile
+
+    root = tmp_path / "grow"
+    _write_tree(root, {f"f{i:02d}.md": f"small {i}\n" * 3 for i in range(12)})
+    store = str(tmp_path / "grow_store")
+    build(spark, str(root), store, PARAMS)
+    grown = ("f03.md", "f07.md", "f11.md")
+
+    def refresh(tag: str, repeat: int) -> tuple[int, int]:
+        """(input bytes of the refresh, size of the grown bodies)."""
+        tree, copy = tmp_path / f"tree_{tag}", str(tmp_path / f"store_{tag}")
+        shutil.copytree(root, tree)
+        shutil.copytree(store, copy)
+        for i, name in enumerate(grown):
+            with open(tree / name, "a", encoding="utf-8") as f:
+                f.write(f"grown {i} " * repeat * (i + 1))
+        stats = profile(spark, lambda: build(spark, str(tree), copy, PARAMS))
+        paths = {r["rel_path"] for r in load_store(spark, copy, PARAMS).collect()}
+        assert paths == {f"f{i:02d}.md" for i in range(12)}
+        return stats["build"]["input_bytes"], sum((tree / n).stat().st_size for n in grown)
+
+    small_read, small_bodies = refresh("small", 200)
+    big_read, big_bodies = refresh("big", 2000)
+    assert small_read >= small_bodies
+    assert big_read - small_read == big_bodies - small_bodies
+
+
+#: Names whose code-point order differs from the order they are written
+#: and listed in: ' ' < '-' < '/' < digits < upper < '_' < lower < 'ä'.
+_ADVERSARIAL_NAMES = (
+    "zz.md", "ä.md", "a/b.md", "a-b.md", "a b.md", "aa.md", "B/c.txt",
+    "b/C.txt", "a_b.py", "9.txt", "10.txt", "Z.md",
+)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_build_ids_equal_global_row_number(spark, tmp_path, seed):
+    """Property: a cold build's stored ids equal ``row_number() over
+    (order by rel_path, chunk) - 1`` on trees with uneven chunk counts,
+    a one-chunk file and names that sort differently than listed; a
+    refresh keeps every survivor's id and numbers the new chunks from
+    max(id)+1 in the same order (src/indexer.ts:393-400)."""
+    import random
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rng = random.Random(seed)
+    names = list(_ADVERSARIAL_NAMES)
+    rng.shuffle(names)
+    lengths = [rng.choice((1, 40, 90, 91, 300, 1000, 2500)) for _ in names]
+    lengths[0] = 50  # a one-chunk file
+    root = tmp_path / "ids"
+    _write_tree(root, {n: ("x" * (n_chars - 1)) + "\n" for n, n_chars in zip(names, lengths)})
+    store = str(tmp_path / "ids_store")
+
+    def stored():
+        w = Window.orderBy("rel_path", "chunk")
+        return {
+            (r["rel_path"], r["chunk"]): (r["id"], r["want"])
+            for r in build(spark, str(root), store, PARAMS)
+            .withColumn("want", F.row_number().over(w) - 1)
+            .collect()
+        }
+
+    cold = stored()
+    counts = {n: len(ref_split_chunks((root / n).read_text(), 120, 30)) for n in names}
+    assert len(set(counts.values())) > 2 and 1 in counts.values()
+    assert len(cold) == sum(counts.values())
+    assert all(got == want for got, want in cold.values())
+
+    grown = sorted(names)[1::4]
+    for n in grown:
+        with open(root / n, "a", encoding="utf-8") as f:
+            f.write("y" * rng.choice((10, 200, 700)))
+    refreshed = stored()
+    survivors = {k: v[0] for k, v in cold.items() if k[0] not in grown}
+    assert {k: refreshed[k][0] for k in survivors} == survivors
+    new = sorted(k for k in refreshed if k[0] in grown)
+    start = max(survivors.values()) + 1
+    assert [refreshed[k][0] for k in new] == list(range(start, start + len(new)))

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from conftest import SF0001
 
-from mcp_rag_server_spark.obs import LAYERS, min_seconds, profile
+from mcp_rag_server_spark.obs import LAYERS, count_jobs, min_seconds, profile
 from mcp_rag_server_spark.registry import load_all
 
 
@@ -30,3 +30,28 @@ def test_profile_lazy_query_runs_no_construction_job(spark):
     layer_s = sum(rec[layer]["s"] for layer in LAYERS)
     assert abs(layer_s - rec["wall_s"]) <= 0.05 * rec["wall_s"]
 
+
+
+def test_profile_and_count_jobs_restore_the_job_labels(spark):
+    """A measured call leaves the thread's job group and description as
+    they were, so later jobs and SQL executions keep their own labels;
+    unset labels stay unset."""
+    sc = spark.sparkContext
+    labels = ("spark.jobGroup.id", "spark.job.description")
+
+    def run_both():
+        profile(spark, lambda: spark.range(3))
+        assert tuple(map(sc.getLocalProperty, labels)) == before
+        count_jobs(spark, lambda: spark.range(3).collect())
+        assert tuple(map(sc.getLocalProperty, labels)) == before
+
+    before = (None, None)
+    assert tuple(map(sc.getLocalProperty, labels)) == before
+    run_both()
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        before = ("caller-group", "caller description")
+        run_both()
+    finally:
+        for key in labels:
+            sc.setLocalProperty(key, None)

@@ -21,6 +21,7 @@ from mcp_rag_server_spark.plans.inspect import (
     has_take_ordered,
     plan_string,
     pushed_filters,
+    read_plans,
     read_schema,
 )
 from mcp_rag_server_spark.registry import load_all
@@ -48,49 +49,12 @@ def q(spark, name):
     return load_all()[name].spark_fn(spark, SF)
 
 
-def _initial_plan(description: str) -> str:
-    """``description`` (a formatted physical plan) cut to its pre-AQE
-    part: the ``== Initial Plan ==`` tree, a blank line, then the
-    details of that tree's nodes — the layout of ``plan_string``."""
-    tree, details = description.split("\n\n", 1)
-    tree = tree.split("== Initial Plan ==", 1)[-1]
-    tree = tree.removeprefix("== Physical Plan ==").strip("\n")
-    nodes = set(re.findall(r"\((\d+)\)", tree))
-    kept = [
-        block
-        for block in details.strip("\n").split("\n\n")
-        if re.match(r"\((\d+)\)", block)[1] in nodes
-    ]
-    return "\n\n".join([tree, *kept])
-
-
 def read_back_plan(spark, name) -> str:
-    """The pre-AQE plan of the one read (a plan that scans and writes
-    nothing) that building operator ``name`` executed, from the SQL
-    status store: for an operator that writes files and returns a
-    checkpoint of reading them back, the plan of that read-back. Plans,
-    not execution descriptions, pick it: a job description left set on
-    the thread replaces the description of every later execution."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        # in execution-id order; events reach the store through the
-        # async listener bus
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return store.executionsList()
-
-    before = executions()
-    last = before.last().executionId() if before.nonEmpty() else -1
-    q(spark, name)
-    after = executions()
-    executed = []
-    for i in reversed(range(after.size())):
-        if after.apply(i).executionId() <= last:
-            break
-        executed.insert(0, after.apply(i))
-    plans = [_initial_plan(e.physicalPlanDescription()) for e in executed]
-    reads = [p for p in plans if "Scan " in p and "Execute " not in p]
-    assert len(reads) == 1, plans
+    """The plan of the one read that building operator ``name`` ran: for
+    an operator that returns a checkpoint of the files it wrote, the
+    read-back."""
+    reads = read_plans(spark, lambda: q(spark, name))
+    assert len(reads) == 1, reads
     return reads[0]
 
 
@@ -489,8 +453,9 @@ def test_bucketed_join_has_no_join_side_exchange(spark):
     """ingest_bucketed_join: both sides carry bucketBy(orderkey) +
     sortBy, so the SortMergeJoin must consume the layout directly — the
     ONLY exchange in the plan is the post-join aggregation. An Exchange
-    or Sort sneaking in above either scan means the write-time shuffle
-    isn't being reused."""
+    sneaking in above either scan means the write-time shuffle isn't
+    being reused. (Each side still sorts its buckets: Spark does not
+    take the bucket files' order as the scan's output ordering.)"""
     plan = read_back_plan(spark, "ingest_bucketed_join")
     tree = plan.split("\n\n")[0]
     assert "SortMergeJoin" in tree
