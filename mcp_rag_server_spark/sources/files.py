@@ -21,9 +21,10 @@ Scale shape: discovery is Spark's distributed file listing — ONE
 of the allow-list. Metadata-only scans prune the ``content`` column at
 ReadSchema level, so "list 100 TB" reads no file bodies. Ingest lists
 text and PDF extensions apart (:func:`split_pdf`), once per body class,
-so each body is scanned once, by its own decoder. Excluded-folder and
-dotfile predicates are path regexes — evaluated per file entry, never
-requiring IO. A refresh reads the bodies of just its changed files with
+so each body is scanned once, by its own decoder. The dotfile and
+excluded-folder rules are one path regex alternation, ANDed with the
+size-0 skip into one Filter: evaluated per file entry, never requiring
+IO. A refresh reads the bodies of just its changed files with
 :func:`read_files`, which hands their paths to the reader itself.
 """
 
@@ -108,10 +109,11 @@ def discover_files(
     One ``binaryFile`` read whose ``pathGlobFilter`` alternates the
     allowed extensions (applied during listing, the Spark analog of
     fast-glob's pattern expansion; a case-sensitive suffix match on the
-    file name), then:
-      - dotfile/dot-dir exclusion (fast-glob ``dot: false``),
-      - excluded-folder regexes (src/indexer.ts:354-360),
-      - size-0 skip (src/indexer.ts:374).
+    file name), then one predicate that drops
+      - dotfiles and dot-dirs (fast-glob ``dot: false``) and the
+        excluded folders (src/indexer.ts:354-360), one ``rlike`` of an
+        alternation with each rule's regex in ``(?:…)``,
+      - zero-byte files (src/indexer.ts:374).
     With ``with_content=False`` the ``content`` column is pruned from
     ReadSchema, so discovery never reads file bodies. An empty allow-list
     matches nothing; an extension holding a glob metacharacter raises
@@ -138,12 +140,14 @@ def discover_files(
         .option("recursiveFileLookup", "true")
         .load(root)
     )
-    df = _listing_columns(df, root, with_content)
-    # fast-glob dot:false — no path segment may start with ".".
-    df = df.filter(~F.col("rel_path").rlike(r"(^|/)\.[^/]"))
-    for folder in excluded_folders:
-        df = df.filter(~F.col("rel_path").rlike(_glob_to_regex(folder)))
-    return df.filter(F.col("file_size") > 0)
+    # fast-glob dot:false (no path segment may start with ".") and the
+    # excluded folders, as one alternation.
+    excluded = "|".join(
+        f"(?:{regex})" for regex in (r"(^|/)\.[^/]", *map(_glob_to_regex, excluded_folders))
+    )
+    return _listing_columns(df, root, with_content).filter(
+        ~F.col("rel_path").rlike(excluded) & (F.col("file_size") > 0)
+    )
 
 
 def read_files(

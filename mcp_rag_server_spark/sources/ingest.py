@@ -44,15 +44,19 @@ on a cold build, the store's files: the file count follows the
 corpus's bytes, not the listing's split count.
 
 Each body is decoded by its class's decoder: ``_texts`` reads text
-files and PDFs through separate listings (or path lists), so a tree or
-delta without PDFs starts no Python extractor.
+files and PDFs through separate listings (or path lists), and builds
+the PDF branch only when there is a PDF to read, so a tree or delta
+without PDFs plans no Python extractor.
 
-The refresh costs what the delta costs: one metadata-only listing is
-joined with the store's per-path ``file_size`` and only the delta keys
-(path + deleted flag) come to the driver. An empty delta writes
-nothing. Otherwise only the changed and new files' bodies are read, and
-survivors + new chunks are rewritten into no more parquet files than
-the store they replace.
+The refresh costs what the delta costs: one metadata-only listing and
+the store's ``(rel_path, file_size, id)`` rows are grouped on
+``rel_path`` in one exchange, and only the delta keys (path + deleted
+flag) and one observed scalar, the surviving max id, come to the
+driver. The store is read with its declared schema
+(:data:`STORE_SCHEMA`), so opening it runs no footer job. An empty
+delta writes nothing. Otherwise only the changed and new files' bodies
+are read, and survivors + new chunks are rewritten into no more parquet
+files than the store they replace.
 
 A file counts as changed when its size changes (indexer.ts:453-454), so
 a same-size edit is missed, as the reference documents
@@ -69,7 +73,7 @@ from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from mcp_rag_server_spark.catalog import input_files
@@ -91,6 +95,13 @@ from mcp_rag_server_spark.sources.files import (
 #: per-body hash column of a removed layout). An older store fails the
 #: meta check and is rebuilt cold (persistence.ts:91-100).
 STORE_VERSION = 3
+#: The chunk table's layout at :data:`STORE_VERSION` (module docstring).
+#: The meta check guarantees it, so the store is read with it and no
+#: read infers it from a parquet footer.
+STORE_SCHEMA = (
+    "id bigint, rel_path string, chunk int, text string,"
+    " file_size bigint, line_count int, embedding array<float>"
+)
 META_FILE = "_meta.json"
 #: Parquet codec of every store write: with it the store, vectors
 #: included, is smaller than the snappy store without them.
@@ -239,6 +250,11 @@ def _meta_dict(params: IngestParams) -> dict:
     }
 
 
+def _read_store(spark: SparkSession, data_dir: str) -> DataFrame:
+    """The chunk table at ``data_dir``, read with :data:`STORE_SCHEMA`."""
+    return spark.read.schema(STORE_SCHEMA).parquet(data_dir)
+
+
 def load_store(
     spark: SparkSession, store_path: str, params: IngestParams
 ) -> DataFrame | None:
@@ -260,7 +276,7 @@ def load_store(
         return None
     data_dir = os.path.join(store_path, "chunks")
     recover_dir(data_dir)
-    return spark.read.parquet(data_dir)
+    return _read_store(spark, data_dir)
 
 
 def _texts(
@@ -269,13 +285,13 @@ def _texts(
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
     """Decoded (rel_path, file_size, text) of the files ``read(names)``
-    returns, read once per body class (:func:`split_pdf`). A class with
-    nothing to read runs no task, so a Python extractor runs only when a
-    PDF was listed."""
+    returns, read once per body class (:func:`split_pdf`). The PDF
+    branch, a Python extractor, is built only when a name is a PDF."""
     text_names, pdf_names = split_pdf(names)
-    return decode_utf8(read(text_names)).unionByName(
-        extract_pdf(read(pdf_names), pdf_extractor)
-    )
+    texts = decode_utf8(read(text_names))
+    if not pdf_names:
+        return texts
+    return texts.unionByName(extract_pdf(read(pdf_names), pdf_extractor))
 
 
 def cold_build(
@@ -299,28 +315,43 @@ def _delta_keys(
     old_chunks: DataFrame,
     root: str,
     params: IngestParams,
-) -> list[Row]:
+) -> tuple[list[Row], int]:
     """The refresh's delta (reference ``incrementalUpdate``,
-    indexer.ts:413-511) as driver-side rows (rel_path, deleted): the
-    current listing full-outer-joined with the store's per-path
-    ``file_size``, in one job that reads no file bodies.
+    indexer.ts:413-511) as driver-side rows (rel_path, deleted), and
+    the first id of its new chunks. The current listing's
+    ``(rel_path, size)`` rows and the store's ``(rel_path, size, id)``
+    rows are unioned and grouped on ``rel_path`` in one exchange that
+    reads no file bodies.
 
     J1 (deleted):  old chunk paths absent from the current listing
                    (indexer.ts:431-443).
-    J2 (changed):  new path or size mismatch (indexer.ts:446-462)."""
+    J2 (changed):  new path or size mismatch (indexer.ts:446-462).
+
+    The same job observes the max id of the paths outside the delta,
+    so the new ids continue from max(surviving id)+1 (``getMaxId()+1``,
+    indexer.ts:393-400) without another scan of the store."""
     listing = discover_files(
         spark, root, params.allowed_ext, params.excluded_folders
     )
-    old_by_path = old_chunks.groupBy("rel_path").agg(
-        F.first("file_size").alias("old_key")
-    )
-    return (
+    per_path = (
         listing.select("rel_path", F.col("file_size").alias("new_key"))
-        .join(old_by_path, "rel_path", "full_outer")
-        .filter(~F.col("new_key").eqNullSafe(F.col("old_key")))
+        .unionByName(
+            old_chunks.select("rel_path", F.col("file_size").alias("old_key"), "id"),
+            allowMissingColumns=True,
+        )
+        .groupBy("rel_path")
+        .agg(*(F.max(c).alias(c) for c in ("new_key", "old_key", "id")))
+    )
+    kept = F.col("new_key").eqNullSafe(F.col("old_key"))
+    survived = Observation()
+    delta = (
+        per_path.observe(survived, F.max(F.when(kept, F.col("id"))).alias("max_id"))
+        .filter(~kept)
         .select("rel_path", F.col("new_key").isNull().alias("deleted"))
         .collect()
     )
+    max_id = survived.get["max_id"]
+    return delta, 0 if max_id is None else max_id + 1
 
 
 def _apply_delta(
@@ -328,14 +359,15 @@ def _apply_delta(
     old_chunks: DataFrame,
     root: str,
     delta: list[Row],
+    next_id: int,
     params: IngestParams,
     pdf_extractor: Callable[[pd.Series], pd.Series] | None,
 ) -> DataFrame:
     """Survivors ∪ new chunks: the old chunks of paths outside the
     delta pass through untouched, stored vectors included (at scale a
     MERGE keyed on rel_path), and only the changed/new files' bodies are
-    read, chunked and embedded, with ids from max(surviving id)+1 in
-    (rel_path, chunk) order (getMaxId()+1, indexer.ts:393-400).
+    read, chunked and embedded, with ids from ``next_id`` (observed by
+    :func:`_delta_keys`) in (rel_path, chunk) order.
 
     Accepted cost: a PDF whose extraction fails has no store rows, so
     every refresh sees it as new and re-tries the extraction (the store
@@ -345,8 +377,6 @@ def _apply_delta(
     )
     changed = [r["rel_path"] for r in delta if not r["deleted"]]
     texts = _texts(lambda paths: read_files(spark, root, paths), changed, pdf_extractor)
-    max_id = survivors.agg(F.max("id")).first()[0]
-    next_id = (max_id + 1) if max_id is not None else 0
     new_chunks = _assign_ids(texts, params, start_id=next_id)
     return survivors.select(*new_chunks.columns).unionByName(new_chunks)
 
@@ -369,10 +399,10 @@ def build(
         chunks = cold_build(spark, root, params, pdf_extractor=pdf_extractor)
         save_store(chunks, store_path, params)
     else:
-        delta = _delta_keys(spark, old, root, params)
+        delta, next_id = _delta_keys(spark, old, root, params)
         if not delta:
             return old
-        chunks = _apply_delta(spark, old, root, delta, params, pdf_extractor)
+        chunks = _apply_delta(spark, old, root, delta, next_id, params, pdf_extractor)
         # No more parquet files than the store being replaced: each file
         # carries a fixed footer/schema overhead, so a refresh must not
         # fragment the store.
@@ -382,7 +412,7 @@ def build(
     # The swap replaced files under a path Spark may have listed; drop the
     # stale listing before handing back a reader.
     spark.catalog.refreshByPath(cur_dir)
-    return spark.read.parquet(cur_dir)
+    return _read_store(spark, cur_dir)
 
 
 def compact_store(
@@ -412,7 +442,7 @@ def compact_store(
 
     data_dir = os.path.join(store_path, "chunks")
     recover_dir(data_dir)
-    df = spark.read.parquet(data_dir)
+    df = _read_store(spark, data_dir)
     total_bytes = sum(size for _, size, _ in input_files(data_dir))
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     df = df.repartitionByRange(n_files, F.col(range_col)).sortWithinPartitions(

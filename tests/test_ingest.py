@@ -391,6 +391,31 @@ def test_discovery_is_one_listing(spark, tmp_path):
     assert empty.collect() == []
 
 
+def test_discovery_adversarial_tree(spark, tmp_path):
+    """One listing predicate keeps exactly the expected paths: dot
+    segments at any depth, exact excluded names as whole segments at any
+    depth (a name holding regex metacharacters included), the ``*``,
+    ``**`` and ``?`` folder globs, a zero-byte file, and file names with
+    regex metacharacters."""
+    keep = (
+        "a+b.md", "(x).md", "$.md", "src/[y].md", "src/a.b/c.md",
+        "xnode_modules/i.md", "node_modules_x/i.md", "src/builder/o.md",
+        "gen/a.md", "cache/a.md", "src/snapshot/a.md", "cpp/a.md",
+    )
+    drop = (
+        ".top.md", ".dir/a.md", "src/.a/c.md", "src/x/.hidden.md",
+        "a/b/c/.d/e.md", "node_modules/i.md", "deep/er/node_modules/p/i.md",
+        "build/o.md", "src/build/o.md", "gen-1/a.md", "gen-/a.md",
+        "cache1/a.md", "src/snap/a.md", "a/b/snap/c/d.md", "c++/a.md",
+        "x/c++/a.md", "notes.txt",
+    )
+    _write_tree(tmp_path / "adv", {rel: f"body of {rel}" for rel in keep + drop})
+    (tmp_path / "adv" / "zero.md").write_text("")
+    excluded = ("node_modules", "build", "gen-*", "**/snap/**", "cache?", "c++")
+    files = discover_files(spark, str(tmp_path / "adv"), ("md",), excluded)
+    assert sorted(r["rel_path"] for r in files.collect()) == sorted(keep)
+
+
 def test_pdf_plumbing_with_injected_extractor(spark, tmp_path):
     root = tmp_path / "pdfs"
     root.mkdir()
@@ -607,6 +632,30 @@ def test_store_writes_are_zstd(spark, corpus_dir, tmp_path):
     assert _codecs(store) == {"ZSTD"}
     compact_store(spark, store, target_file_bytes=16 * 1024)
     assert _codecs(store) == {"ZSTD"}
+
+
+def test_store_schema_is_the_written_layout(spark, corpus_dir, tmp_path):
+    """The declared store schema every store read uses equals the schema
+    a reader infers from the files after a cold build, a refresh and a
+    compaction, so a layout change without the declaration fails here."""
+    import shutil
+
+    from mcp_rag_server_spark.sources.ingest import compact_store
+
+    root = str(tmp_path / "root")
+    shutil.copytree(corpus_dir, root)
+    store = str(tmp_path / "store")
+
+    def inferred():
+        return spark.read.parquet(os.path.join(store, "chunks")).schema
+
+    assert build(spark, root, store, PARAMS).schema == inferred()
+    assert load_store(spark, store, PARAMS).schema == inferred()
+    mutate_corpus(root)
+    assert build(spark, root, store, PARAMS).schema == inferred()
+    assert load_store(spark, store, PARAMS).schema == inferred()
+    compact_store(spark, store, target_file_bytes=16 * 1024)
+    assert load_store(spark, store, PARAMS).schema == inferred()
 
 
 def test_read_file_line_ranges(spark, corpus_dir):
@@ -979,3 +1028,67 @@ def test_build_ids_equal_global_row_number(spark, tmp_path, seed):
     new = sorted(k for k in refreshed if k[0] in grown)
     start = max(survivors.values()) + 1
     assert [refreshed[k][0] for k in new] == list(range(start, start + len(new)))
+
+
+def test_refresh_ids_continue_from_surviving_max(spark, tmp_path):
+    """A refresh that grows the last-sorted file, which holds the highest
+    ids, and deletes the one before it numbers its new chunks from
+    max(surviving id)+1, not from the max over every old row
+    (src/indexer.ts:393-400); the survivors keep their ids."""
+    root = tmp_path / "last"
+    _write_tree(root, {f"{name}.md": f"{name} " * 60 for name in ("a", "b", "c", "y", "z")})
+    store = str(tmp_path / "last_store")
+
+    def ids() -> dict:
+        rows = build(spark, str(root), store, PARAMS).collect()
+        return {(r["rel_path"], r["chunk"]): r["id"] for r in rows}
+
+    cold = ids()
+    assert max(cold, key=cold.get)[0] == "z.md"
+
+    with open(root / "z.md", "a", encoding="utf-8") as f:
+        f.write("grown " * 40)
+    os.remove(root / "y.md")
+    refreshed = ids()
+    survivors = {k: v for k, v in cold.items() if k[0] in ("a.md", "b.md", "c.md")}
+    assert {k: refreshed[k] for k in survivors} == survivors
+    new = sorted(k for k in refreshed if k[0] == "z.md")
+    start = max(survivors.values()) + 1
+    assert [refreshed[k] for k in new] == list(range(start, start + len(new)))
+    assert set(refreshed) == set(survivors) | set(new)
+
+
+def test_empty_tree_lifecycle(spark, tmp_path):
+    """A cold build over a tree with no allowed file writes an empty
+    store; a reopen, an add, a delete of every file and another reopen
+    each return the right rows. Every build must finish: no step may
+    wait on an observation of a plan that runs no task."""
+    import threading
+
+    root = tmp_path / "bare"
+    _write_tree(root, {"skip.txt": "not in the allow-list"})
+    store = str(tmp_path / "bare_store")
+    params = IngestParams(chunk_size=120, chunk_overlap=30, allowed_ext=("md",))
+
+    def rows() -> list[tuple]:
+        out: list = []
+        worker = threading.Thread(
+            target=lambda: out.extend(
+                (r["id"], r["rel_path"], r["chunk"])
+                for r in build(spark, str(root), store, params).collect()
+            ),
+            daemon=True,
+        )
+        worker.start()
+        worker.join(300)
+        assert not worker.is_alive(), "build() did not return"
+        return sorted(out)
+
+    assert rows() == []
+    assert rows() == []
+    (root / "a.md").write_text("x" * 200)
+    n = len(ref_split_chunks("x" * 200, 120, 30))
+    assert n > 1 and rows() == [(i, "a.md", i) for i in range(n)]
+    os.remove(root / "a.md")
+    assert rows() == []
+    assert rows() == []
